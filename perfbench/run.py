@@ -82,9 +82,13 @@ def _configure_env(work: str, trace: bool) -> str | None:
     os.environ["SPARK_LOCAL_DIRS"] = tmp
     os.environ["TMPDIR"] = tmp
     heap = os.environ.setdefault("NCS_DRIVER_MEM", "2g")
+    # no hsperfdata files (the JVM writes them to /tmp whatever
+    # java.io.tmpdir says), for the launcher JVM too
+    os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     # a fixed-size heap: G1 resizing otherwise varies peak memory and GC
     # time from run to run
-    confs = [f"spark.driver.extraJavaOptions=-Xms{heap} -Djava.io.tmpdir={tmp}",
+    confs = [f"spark.driver.extraJavaOptions=-Xms{heap} -XX:-UsePerfData "
+             f"-Djava.io.tmpdir={tmp}",
              f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}",
              "spark.ui.showConsoleProgress=false"]
     log_dir = None
@@ -179,11 +183,23 @@ def _median_or(values, default: float) -> float:
     return statistics.median(vals) if vals else default
 
 
-def layer_metrics(res: dict, records, store, cores: int, footprint) -> dict:
+def _op_windows(res: dict, store) -> list[tuple[str, float, float]]:
+    """The workload's operations; crawl rounds are instead delimited by
+    the ends of the timed ``StateStore.commit`` calls (round 0 is
+    ``init``)."""
+    ends = [t1 for _, _, t1 in store.outer(["commit"])]
+    if not ends:
+        return res["ops"]
+    starts = [res["ops"][0][1]] + ends[:-1]
+    return [("init" if r == 0 else f"round{r}", t0, t1)
+            for r, (t0, t1) in enumerate(zip(starts, ends))]
+
+
+def layer_metrics(res: dict, windows, records, store, cores: int, footprint) -> dict:
     """Per-operation Spark counts from the event log, StateStore call
     counts, and the state footprint."""
-    ops = [records.window(t0, t1, cores) for kind, t0, t1 in res["ops"] if kind != "init"]
-    init = [records.window(t0, t1, cores) for kind, t0, t1 in res["ops"] if kind == "init"]
+    ops = [records.window(t0, t1, cores) for kind, t0, t1 in windows if kind != "init"]
+    init = [records.window(t0, t1, cores) for kind, t0, t1 in windows if kind == "init"]
     n_ops = max(len(ops), 1)
     n_commits = len(store.outer(["commit"]))
     counts = res["detail"].get("counts", {})
@@ -264,13 +280,13 @@ def _run(args, cores: int, base: str, work: str) -> int:
     }
     if args.trace:
         records = tracing.SparkRecords(tracing.read_event_log(log_dir, app_id))
-        metrics = layer_metrics(res, records, store, cores, footprint)
+        windows = _op_windows(res, store)
+        metrics = layer_metrics(res, windows, records, store, cores, footprint)
         metrics.update({k: v[0] for k, v in kernels.items()})
         detail["kernel_iqr"] = {k: v[1] for k, v in kernels.items()}
         detail["per_op"] = [dict(op=k, **records.window(t0, t1, cores))
-                            for k, t0, t1 in res["ops"]]
-        detail["exec_s_by_site"] = records.exec_s_by_site(
-            res["ops"][0][1], res["ops"][-1][2], store)
+                            for k, t0, t1 in windows]
+        detail["exec_s_by_site"] = records.exec_s_by_site(windows[0][1], windows[-1][2], store)
         detail["store_calls"] = store.summary()
         detail["layers"] = metrics
         units = LAYER_UNITS
