@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import shlex
 import shutil
 import statistics
@@ -30,9 +31,8 @@ import datagen
 import tracing
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SETUP_REPS = 3
 
-E2E_UNITS = {"total_s": "s", "peak_rss_mb": "MB", "setup_s": "s"}
+E2E_UNITS = {"total_s": "s", "peak_mem_mb": "MB", "setup_s": "s"}
 KERNEL_UNITS = {
     "corpus.fetch_one_us": "us", "corpus.gen_image_us": "us",
     "html.extract_hrefs_us": "us", "urlnorm.resolve_us": "us",
@@ -48,8 +48,10 @@ LAYER_UNITS = {
     "spark.stages_per_op": "count", "spark.tasks_per_op": "count",
     "spark.busy_frac": "ratio", "spark.driver_gap_s": "s",
     "spark.shuffle_mb_per_op": "MB", "spark.task_skew": "ratio",
+    "spark.heavy_stage_frac": "ratio",
     "tableio.writes_per_round": "count", "tableio.state_mb": "MB",
     "tableio.state_files": "count", "pending.rewritten_rows": "count",
+    "mem.python_rss_mb": "MB", "mem.jvm_live_heap_mb": "MB", "mem.jvm_rss_mb": "MB",
     "trace.total_s": "s",
 }
 
@@ -81,14 +83,14 @@ def _configure_env(work: str, trace: bool) -> str | None:
         [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
     os.environ["SPARK_LOCAL_DIRS"] = tmp
     os.environ["TMPDIR"] = tmp
-    heap = os.environ.setdefault("NCS_DRIVER_MEM", "2g")
     # no hsperfdata files (the JVM writes them to /tmp whatever
-    # java.io.tmpdir says), for the launcher JVM too
+    # java.io.tmpdir says), for the launcher JVM too; the heap is the
+    # program's own (spark.driver.memory from session.py)
     os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
-    # a fixed-size heap: G1 resizing otherwise varies peak memory and GC
-    # time from run to run
-    confs = [f"spark.driver.extraJavaOptions=-Xms{heap} -XX:-UsePerfData "
-             f"-Djava.io.tmpdir={tmp}",
+    # the GC log gives the heap occupancy after each collection, which
+    # follows the program's live data where the heap's size follows G1
+    confs = [f"spark.driver.extraJavaOptions=-XX:-UsePerfData -Djava.io.tmpdir={tmp} "
+             f"-Xlog:gc:file={os.path.join(work, 'gc.log')}",
              f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}",
              "spark.ui.showConsoleProgress=false"]
     log_dir = None
@@ -108,6 +110,46 @@ def _vm_hwm_mb(pid: int) -> float:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024.0
     raise RuntimeError(f"no VmHWM for pid {pid}")
+
+
+def _descendant_hwm_mb(root: int) -> float:
+    """Summed VmHWM of every live descendant of ``root``: the JVM's
+    Python daemon and workers."""
+    children = {}
+    for d in os.listdir("/proc"):
+        if d.isdigit():
+            try:
+                with open(f"/proc/{d}/stat") as f:
+                    ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            except (OSError, IndexError, ValueError):
+                continue  # exited while being read
+            children.setdefault(ppid, []).append(int(d))
+    total, todo = 0.0, list(children.get(root, []))
+    while todo:
+        pid = todo.pop()
+        todo += children.get(pid, [])
+        try:
+            total += _vm_hwm_mb(pid)
+        except (OSError, RuntimeError):
+            continue
+    return total
+
+
+_GC_LINE = re.compile(r"^\[([\d.]+)s\].*?\d+[KMG]->(\d+)([KMG])\(\d+[KMG]\)")
+_MB = {"K": 1 / 1024, "M": 1, "G": 1024}
+
+
+def _live_heap_mb(gc_log: str, until_s: float) -> float:
+    """The JVM's largest heap occupancy right after a collection, from
+    its ``-Xlog:gc`` file, over the collections of its first
+    ``until_s`` seconds of uptime."""
+    peak = 0.0
+    with open(gc_log) as f:
+        for line in f:
+            m = _GC_LINE.match(line)
+            if m and float(m.group(1)) <= until_s:
+                peak = max(peak, int(m.group(2)) * _MB[m.group(3)])
+    return peak
 
 
 def _footprint(path: str) -> tuple[float, int]:
@@ -138,19 +180,14 @@ def _warm_up(spark) -> None:
 
 
 def _set_up(cores: int):
-    """SETUP_REPS session starts with warm-up (the first also launches
-    the JVM); each but the last is stopped again."""
+    """The one session start of the run: JVM launch and ``get_spark``,
+    then the warm-up job. Returns the session and its seconds."""
     from nightcrawlercmd_spark.session import get_spark
 
-    times, spark = [], None
-    for _ in range(SETUP_REPS):
-        if spark is not None:
-            spark.stop()
-        t0 = time.time()
-        spark = get_spark(app="perfbench", cpus=cores, shuffle_partitions=max(8, cores))
-        _warm_up(spark)
-        times.append(time.time() - t0)
-    return spark, times
+    t0 = time.time()
+    spark = get_spark(app="perfbench", cpus=cores, shuffle_partitions=max(8, cores))
+    _warm_up(spark)
+    return spark, time.time() - t0
 
 
 def _stop(spark) -> None:
@@ -212,6 +249,7 @@ def layer_metrics(res: dict, windows, records, store, cores: int, footprint) -> 
         "spark.driver_gap_s": _median_or((w["driver_gap_s"] for w in ops), 0.0),
         "spark.shuffle_mb_per_op": sum(w["shuffle_mb"] for w in ops) / n_ops,
         "spark.task_skew": _median_or((w["skew"] for w in ops), 1.0),
+        "spark.heavy_stage_frac": _median_or((w["heavy_stage_frac"] for w in ops), 0.0),
         "tableio.writes_per_round": len(store.outer(tracing.WRITE_METHODS)) / max(n_commits, 1),
         "tableio.state_mb": footprint[0],
         "tableio.state_files": footprint[1],
@@ -250,7 +288,7 @@ def _run(args, cores: int, base: str, work: str) -> int:
         ctx.data_dir = os.path.join(work, "data")
         datagen.write_tables(ctx.data_dir, args.seed, workloads.QUERY_SCALE)
     store = tracing.StoreTrace()
-    spark, setup_times = _set_up(cores)
+    spark, setup_s = _set_up(cores)
     try:
         app_id = spark.sparkContext.applicationId
         jvm_pid = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
@@ -260,21 +298,28 @@ def _run(args, cores: int, base: str, work: str) -> int:
             res = workloads.WORKLOADS[args.workload](spark, ctx)
         finally:
             store.uninstall()
+        mem = {"mem.python_rss_mb": _vm_hwm_mb(os.getpid()) + _descendant_hwm_mb(jvm_pid),
+               "mem.jvm_rss_mb": _vm_hwm_mb(jvm_pid)}
+        jvm_uptime_s = spark.sparkContext._jvm.java.lang.management.ManagementFactory \
+            .getRuntimeMXBean().getUptime() / 1000.0
         kernels = {}
         if args.trace:
             import kernels as kn
 
+            # depends only on the seed's crawl world, so on queries this
+            # repeats the crawl's measurement as a host-speed control
             kernels = kn.kernel_table(spark, workloads.crawl_world(args.seed), args.seed)
-        rss_parts = (_vm_hwm_mb(os.getpid()), _vm_hwm_mb(jvm_pid))
     finally:
         _stop(spark)
     footprint = _footprint(res["state_dir"])
-    e2e = {"total_s": res["total_s"], "peak_rss_mb": sum(rss_parts),
-           "setup_s": statistics.median(setup_times)}
+    mem["mem.jvm_live_heap_mb"] = _live_heap_mb(os.path.join(work, "gc.log"), jvm_uptime_s)
+    e2e = {"total_s": res["total_s"],
+           "peak_mem_mb": mem["mem.python_rss_mb"] + mem["mem.jvm_live_heap_mb"],
+           "setup_s": setup_s}
     detail = {
         "workload": args.workload, "seed": args.seed, "cpus": cores,
-        "hardware_capacity": hw_rate, "setup_times": setup_times, "e2e": e2e,
-        "peak_rss_mb_python_jvm": rss_parts,
+        "hardware_capacity": hw_rate, "setup_s": setup_s, "e2e": e2e,
+        "mem": mem,
         "op_s": res["op_s"], "attempted": res["attempted"], "failed": res["failed"],
         "state_mb": footprint[0], "state_files": footprint[1], **res["detail"],
     }
@@ -282,11 +327,14 @@ def _run(args, cores: int, base: str, work: str) -> int:
         records = tracing.SparkRecords(tracing.read_event_log(log_dir, app_id))
         windows = _op_windows(res, store)
         metrics = layer_metrics(res, windows, records, store, cores, footprint)
+        metrics.update(mem)
         metrics.update({k: v[0] for k, v in kernels.items()})
         detail["kernel_iqr"] = {k: v[1] for k, v in kernels.items()}
         detail["per_op"] = [dict(op=k, **records.window(t0, t1, cores))
                             for k, t0, t1 in windows]
-        detail["exec_s_by_site"] = records.exec_s_by_site(windows[0][1], windows[-1][2], store)
+        by_site = records.exec_s_by_site(windows[0][1], windows[-1][2], store)
+        detail["exec_s_by_site"] = {os.path.relpath(k, ROOT) if k.startswith(ROOT) else k: v
+                                    for k, v in by_site.items()}
         detail["store_calls"] = store.summary()
         detail["layers"] = metrics
         units = LAYER_UNITS

@@ -146,10 +146,12 @@ class SparkRecords:
         wall_ms = max(t1_ms - t0_ms, 1.0)
         heavy = max(stage_ids, key=lambda s: sum(t["ms"] for t in self.tasks.get(s, [])),
                     default=None)
-        skew = None
-        if heavy is not None and len(self.tasks.get(heavy, [])) > 1:
-            durs = [t["ms"] for t in self.tasks[heavy]]
-            skew = max(durs) / max(statistics.median(durs), 1.0)
+        skew, heavy_ms = None, 0.0
+        if heavy is not None:
+            durs = [t["ms"] for t in self.tasks.get(heavy, [])]
+            heavy_ms = sum(durs)
+            if len(durs) > 1:
+                skew = max(durs) / max(statistics.median(durs), 1.0)
         return {
             "wall_s": wall_ms / 1000.0,
             "jobs": len(jobs),
@@ -159,6 +161,8 @@ class SparkRecords:
             "driver_gap_s": (wall_ms - covered) / 1000.0,
             "shuffle_mb": sum(t["shuffle_bytes"] for t in tasks) / 1e6,
             "skew": skew,
+            "exec_s": busy_ms / 1000.0,
+            "heavy_stage_frac": heavy_ms / busy_ms if busy_ms else None,
         }
 
     def exec_s_by_site(self, t0: float, t1: float, store: StoreTrace) -> dict[str, float]:

@@ -19,9 +19,11 @@ from nightcrawlercmd_spark.sources.corpus import WorldConfig
 from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig
 from nightcrawlercmd_spark.streaming.simulator import simulate
 
+from bench import BENCH_QUERIES
+
 # ----------------------------------------------------------------- crawl --
 
-CRAWL_HOSTS = 16
+CRAWL_HOSTS = 48
 STOP_ROUND = 1  # the first invocation ends here, a non-compaction round
 LAST_ROUND = 3  # the resumed invocation runs to here
 COMPACT_EVERY = 3  # so round 3 folds the pending table
@@ -121,15 +123,8 @@ def crawl(spark, ctx) -> dict:
     }
 
 
-# The 18 queries of bench.py's BENCH_QUERIES.
-BENCH_QUERIES = [
-    "report_wordlist", "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-    "ngram_jaccard", "quality_score", "token_count", "ann_cosine_topk",
-    "ann_ivf_topk", "dedup_clusters", "tfidf_top_terms", "embedding_norms",
-    "repetition_filter", "asof_attribution", "pricing_summary",
-    "join_orders_customers", "window_dequeue", "anti_join_resume",
-]
 QUERY_SCALE = 0.01
+MIN_WARM_PASSES = 2  # so the warm time is never a single sample
 
 
 def _normalize(rows, cols):
@@ -177,7 +172,9 @@ def query_mismatches(results: dict, data_dir: str) -> list[str]:
 def queries(spark, ctx) -> dict:
     """A cold pass collects each query's rows (they go to the oracle);
     warm passes write each query to the noop sink, bench.py's form,
-    repeated until ``ctx.seconds`` of warm passes have run."""
+    at least MIN_WARM_PASSES of them and until ``ctx.seconds`` of warm
+    passes have run. The warm pass time is the sum of each query's
+    median over the passes."""
     from nightcrawlercmd_spark.plans.queries import QUERIES
 
     data_dir = ctx.data_dir
@@ -189,7 +186,8 @@ def queries(spark, ctx) -> dict:
         t1 = time.time()
         cold[name] = t1 - t0
         ops.append((f"cold:{name}", t0, t1))
-    while not warm_passes or sum(sum(p.values()) for p in warm_passes) < ctx.seconds:
+    while (len(warm_passes) < MIN_WARM_PASSES
+           or sum(sum(p.values()) for p in warm_passes) < ctx.seconds):
         times = {}
         for name in BENCH_QUERIES:
             t0 = time.time()
@@ -199,10 +197,10 @@ def queries(spark, ctx) -> dict:
             ops.append((f"warm:{name}", t0, t1))
         warm_passes.append(times)
     warm = {n: statistics.median(p[n] for p in warm_passes) for n in BENCH_QUERIES}
-    warm_s = statistics.median(sum(p.values()) for p in warm_passes)
+    warm_s = sum(warm.values())
     bad = query_mismatches(results, data_dir)
     return {
-        "total_s": sum(cold.values()) + warm_s,
+        "total_s": warm_s,
         "op_s": {
             "op.cold_s": sum(cold.values()),
             "op.steady_s": warm_s,
