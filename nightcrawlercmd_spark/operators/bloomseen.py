@@ -10,7 +10,9 @@ false negatives) → those rows skip the shuffle entirely.
 
 Partitioning: filter ``pid = url_hash mod P``; each partition filter is
 built distributed (applyInPandas per pid, optionally sub-split so no
-single task materializes a whole partition's keys) and OR-merged
+single task materializes a whole partition's keys) or, for round-scale
+key sets, on the driver (``build_filter_rows_from_hashes``) — both
+through the one bit-setting function ``_filter_blob`` — and OR-merged
 incrementally per round.
 
 Two probe paths, same bit layout:
@@ -62,6 +64,15 @@ def _positions(url_hash: np.ndarray, k: int, m_bits: int) -> np.ndarray:
                 _mix((u + np.uint64(i) * _GOLD) & _MASK) % np.uint64(m_bits)
             ).astype(np.int64)
     return out
+
+
+def _filter_blob(url_hash: np.ndarray, k: int, m_bits: int) -> bytes:
+    """One partition filter holding ``url_hash`` — THE bit-setting code
+    of every build path (driver-local and distributed)."""
+    arr = np.zeros(m_bits // 8, dtype=np.uint8)
+    pos = _positions(url_hash, k, m_bits)
+    np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+    return arr.tobytes()
 
 
 class BloomConfig:
@@ -139,10 +150,8 @@ def build_filter_delta_df(
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(pdf["pid"].iloc[0])
-        arr = np.zeros(m_bits // 8, dtype=np.uint8)
-        pos = _positions(pdf[hash_col].to_numpy(), k, m_bits)
-        np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-        return pd.DataFrame({"pid": [pid], "filter": [arr.tobytes()]})
+        blob = _filter_blob(pdf[hash_col].to_numpy(), k, m_bits)
+        return pd.DataFrame({"pid": [pid], "filter": [blob]})
 
     keyed = df.select(hash_col).withColumn(
         "pid", F.pmod(F.col(hash_col), F.lit(part)).cast("int")
@@ -173,25 +182,16 @@ def build_filter_deltas(
 def build_filter_rows_from_hashes(
     hashes: np.ndarray, cfg: BloomConfig, m_bits: int
 ) -> list[tuple[int, bytes]]:
-    """Driver-local twin of ``build_filter_deltas`` for ROUND-SCALE
-    deltas in broadcast mode: identical pid assignment (pmod) and bit
-    positions, zero Spark stages. The distributed form shuffles the
-    delta into partitions × subsplits pandas groups and collects the
-    blobs — right for a 10^8-row rebuild, pure fixed cost for a
-    round's delta whose hash column is a few MB; the engine gates on
-    the observed delta row count."""
+    """Driver-local twin of ``build_filter_deltas`` for round-scale key
+    sets in broadcast mode: identical pid assignment (pmod) and bit
+    setting, zero Spark stages, one row per pid. The distributed form
+    shuffles the keys into partitions × subsplits pandas groups and
+    collects the blobs — right for a 10^8-row rebuild, pure fixed cost
+    for a few MB of hashes; the engine gates on the key count."""
     h = np.asarray(hashes, dtype=np.int64)
     p = cfg.partitions
     pid = ((h % p) + p) % p  # pmod semantics on signed hashes
-    pos = _positions(h, cfg.k, m_bits)
-    out = []
-    for pv in np.unique(pid):
-        mask = pid == pv
-        arr = np.zeros(m_bits // 8, dtype=np.uint8)
-        pp = pos[mask]
-        np.bitwise_or.at(arr, pp >> 3, (1 << (pp & 7)).astype(np.uint8))
-        out.append((int(pv), arr.tobytes()))
-    return out
+    return [(int(pv), _filter_blob(h[pid == pv], cfg.k, m_bits)) for pv in np.unique(pid)]
 
 
 def bloom_payload(bloom: PartitionedBloom) -> tuple:

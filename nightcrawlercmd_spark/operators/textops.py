@@ -317,14 +317,13 @@ def minhash_lsh_pairs(
             f"({band_size}) — trailing MinHash values would be computed "
             "and silently unused, delivering less recall than configured"
         )
-    # the band table feeds BOTH sides of the self-join below and Spark
-    # does not reuse the exchange across them (measured: the whole
-    # signature pipeline — corpus scan, shingle explode, 8-hash agg —
-    # executed twice). The signature is n_docs × 9 columns, so persist
-    # it; both sides then re-run only the band explode. The count()
-    # materializes the cache eagerly — otherwise the join's first
-    # action races both sides into the cold cache and computes the
-    # pipeline twice anyway, paying the cache-store cost on top.
+    # the band table feeds BOTH sides of the self-join below. It is not
+    # cached: under AQE the second side reuses the first side's
+    # doc_id shuffle (ReusedExchange in the executed plan), so the
+    # corpus scan, shingle explode and partial n-hash agg run once and
+    # each side re-runs only the final agg and the band explode. A
+    # caller that reuses the shingles across queries passes a
+    # materialized ``shingles_df``.
     sig = minhash_signatures(docs, n_hashes, k, shingles_df=shingles_df)
     n_bands = n_hashes // band_size
     bands = sig.select(

@@ -1282,17 +1282,22 @@ def _emb_head_rows(sf: str, below_id: int) -> dict[int, list[float]]:
     """vec_id → embedding for vec_id < below_id, read driver-side with
     pyarrow from the SAME parquet input (K rows of planner metadata —
     the query vector and the IVF codebook). Replaces two warm-up Spark
-    jobs (a head() and a collect()) per ANN query with a sub-ms footer
-    read; float32 → Python float widening is exact either way, so the
-    literals are bit-identical to the collected form."""
+    jobs (a head() and a collect()) per ANN query. The ``vec_id`` bound
+    is pushed into the read, so row groups whose statistics exclude it
+    are skipped and the driver materializes only the K head rows, not
+    the table; float32 → Python float widening is exact either way, so
+    the literals are bit-identical to the collected form."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(f"{sf}/embeddings.parquet", columns=["vec_id", "embedding"])
-    out: dict[int, list[float]] = {}
-    for vid, emb in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()):
-        if vid < below_id:
-            out[int(vid)] = [float(x) for x in emb]
-    return out
+    t = pq.read_table(
+        f"{sf}/embeddings.parquet",
+        columns=["vec_id", "embedding"],
+        filters=[("vec_id", "<", below_id)],
+    )
+    return {
+        int(vid): [float(x) for x in emb]
+        for vid, emb in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
+    }
 
 
 def _query_vec(spark, sf):

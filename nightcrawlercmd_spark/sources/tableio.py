@@ -14,6 +14,18 @@ parquet (SURVEY.md §7.5):
   resume is exact (reference analog: crawler resume via LoadPages,
   mainCrawler.go:95-98, and the DNS log-file history, mainDNS.go:69-84).
 
+Read schemas: every round of a table shares one schema (the same
+columns in the same order — writers keep it so), so a ``StateStore``
+reads each table with a *known* schema instead of letting
+``spark.read.parquet`` infer it (inference starts a one-task Spark job
+per call to read a footer). The schema of a table is the one its own
+write in this store produced (the written schema made nullable, which is
+exactly what parquet inference returns); a table this store has not
+written — a resumed crawl's earlier rounds — is inferred once, on its
+first read, and reused after that. Flat reads (``read_snapshot``,
+``read_appends``) and bucket-leaf reads (``read_buckets``, which omit
+the bucket partition column) keep separate schemas.
+
 With Iceberg jars present, ``frontier`` becomes one table with
 ``MERGE INTO`` per round and time-travel for resume; this module is the
 only piece that would change.
@@ -26,12 +38,43 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable — the schema
+    parquet inference reports for data written with schema ``t``."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 class StateStore:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(os.path.join(root, "_commits"), exist_ok=True)
+        # (table name, leaf read?) → read schema; see the module docstring
+        self._schemas: dict[tuple[str, bool], StructType] = {}
+
+    # ---- schema-known reads ----------------------------------------------
+
+    def _remember(self, df: DataFrame, name: str, leaf: bool, drop: str | None = None) -> None:
+        fields = [f for f in df.schema.fields if f.name != drop]
+        self._schemas[(name, leaf)] = _nullable(StructType(fields))
+
+    def _read(self, spark: SparkSession, name: str, paths: list[str], leaf: bool) -> DataFrame:
+        schema = self._schemas.get((name, leaf))
+        if schema is None:
+            df = spark.read.parquet(*paths)  # the one inference for this table
+            self._schemas[(name, leaf)] = df.schema
+            return df
+        return spark.read.schema(schema).parquet(*paths)
 
     # ---- commit protocol ----------------------------------------------
 
@@ -65,9 +108,10 @@ class StateStore:
 
     def write_snapshot(self, df: DataFrame, name: str, round_no: int) -> None:
         df.write.mode("overwrite").parquet(self._dir(name, round_no))
+        self._remember(df, name, leaf=False)
 
     def read_snapshot(self, spark: SparkSession, name: str, round_no: int) -> DataFrame:
-        return spark.read.parquet(self._dir(name, round_no))
+        return self._read(spark, name, [self._dir(name, round_no)], leaf=False)
 
     # ---- append tables ---------------------------------------------------
 
@@ -92,7 +136,7 @@ class StateStore:
         ]
         if not dirs:
             return None
-        return spark.read.parquet(*dirs)
+        return self._read(spark, name, dirs, leaf=False)
 
     def exists(self, name: str, round_no: int) -> bool:
         return os.path.isdir(self._dir(name, round_no))
@@ -120,6 +164,7 @@ class StateStore:
             .partitionBy(bucket_col)
             .parquet(d)
         )
+        self._remember(df, name, leaf=True, drop=bucket_col)
         pref = bucket_col + "="
         return sorted(
             int(p[len(pref):]) for p in os.listdir(d) if p.startswith(pref)
@@ -173,6 +218,7 @@ class StateStore:
             .option("path", d)
             .saveAsTable(ident)
         )
+        self._remember(df, name, leaf=True, drop=bucket_col)
         pref = bucket_col + "="
         return sorted(
             int(p[len(pref):]) for p in os.listdir(d) if p.startswith(pref)
@@ -198,11 +244,13 @@ class StateStore:
         ident = self._table_ident(name, round_no)
         if not spark.catalog.tableExists(ident):
             d = self._dir(name, round_no)
-            sample = spark.read.parquet(d)
+            leaves = [
+                os.path.join(d, p) for p in sorted(os.listdir(d))
+                if p.startswith(bucket_col + "=")
+            ]
             data_cols = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}"
-                for f in sample.schema.fields
-                if f.name != bucket_col
+                for f in self._read(spark, name, leaves, leaf=True).schema.fields
             )
             keys = ", ".join(f"`{k}`" for k in key_cols)
             spark.sql(
@@ -231,4 +279,4 @@ class StateStore:
         ]
         if not dirs:
             return None
-        return spark.read.parquet(*dirs)
+        return self._read(spark, name, dirs, leaf=True)

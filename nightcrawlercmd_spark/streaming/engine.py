@@ -65,6 +65,7 @@ from ..sources.tableio import StateStore
 from ..functions.urlnorm import canonicalize
 
 import pandas as pd
+import pyarrow as pa
 
 # Bump whenever round/ordering semantics change: deterministic state
 # dirs (e.g. q_crawl_e2e's) are salted with this so stale state from an
@@ -88,6 +89,10 @@ PENDING_COLS = [
 
 # the seen table shares the pending shape plus the discovery round
 SEEN_COLS = PENDING_COLS + ["first_round"]
+
+# broadcast-mode bloom builds of at most this many keys (≤16 MB of
+# hashes) run on the driver; larger ones run distributed
+_DRIVER_BLOOM_MAX_ROWS = 2_000_000
 
 _PENDING_SCHEMA = [
     ("canon_url", "string"),
@@ -253,6 +258,27 @@ def seed_udf():
         return pd.DataFrame({"canon_url": canon, "priority": prio})
 
     return F.pandas_udf(fn, "canon_url string, priority double")
+
+
+def _local_df(
+    spark: SparkSession, cols: list[tuple[str, str]], rows: list[tuple] | None = None
+) -> DataFrame:
+    """Driver-held rows (``cols`` = [(name, sql type)]) as a local
+    relation. ``createDataFrame`` over an Arrow table stays in the JVM;
+    over a Python list it parallelizes pickled rows, so every consumer
+    (a broadcast build, a union) runs Python worker tasks for a handful
+    of rows."""
+    data = list(zip(*rows)) if rows else [[] for _ in cols]
+    table = pa.table({c: pa.array(list(v)) for (c, _), v in zip(cols, data)})
+    return spark.createDataFrame(table, ", ".join(f"{c} {t}" for c, t in cols))
+
+
+def _watermark_dim(spark: SparkSession, folded: dict[int, int], key: str) -> DataFrame:
+    """(``key``, __folded) rows of a per-bucket fold watermark."""
+    return _local_df(
+        spark, [(key, "int"), ("__folded", "int")],
+        [(int(b), int(v)) for b, v in sorted(folded.items())],
+    )
 
 
 def _with_salt_cols(df: DataFrame, n_salts: int) -> DataFrame:
@@ -581,9 +607,7 @@ class CrawlEngine:
     def _read_pending_manifest(self, manifest: dict[int, int]) -> DataFrame:
         df = self.store.read_buckets(self.spark, "pending_b", manifest)
         if df is None:
-            return self.spark.createDataFrame(
-                [], schema=", ".join(f"{c} {t}" for c, t in _PENDING_SCHEMA)
-            )
+            return _local_df(self.spark, _PENDING_SCHEMA)
         return df.select(*PENDING_COLS)
 
     def _folded_of(self, meta: dict) -> dict[int, int]:
@@ -643,10 +667,7 @@ class CrawlEngine:
             if buckets is not None:
                 add = add.filter(F.col("pbucket").isin(sorted(buckets)))
             if not uniform:
-                wm = self.spark.createDataFrame(
-                    [(int(b), int(v)) for b, v in sorted(folded.items())],
-                    "pbucket int, __folded int",
-                )
+                wm = _watermark_dim(self.spark, folded, "pbucket")
                 add = (
                     add.join(F.broadcast(wm), "pbucket", "left")
                     .filter(F.col("__dr") > F.coalesce(F.col("__folded"), F.lit(-1)))
@@ -661,12 +682,14 @@ class CrawlEngine:
                     F.col("pbucket").isin(sorted(buckets))
                 )
             # (hash, canon) key: a 64-bit collision must not evict a
-            # distinct never-fetched pending row
+            # distinct never-fetched pending row. The join moves its keys
+            # first; the select restores the column order, so a
+            # compaction writes pending_b in its round-0 schema
             df = df.join(
                 rem.select("url_hash", "canon_url"),
                 ["url_hash", "canon_url"],
                 "left_anti",
-            )
+            ).select(*PENDING_COLS)
         return df
 
     def _bucket_stats(self, df: DataFrame) -> tuple[dict[int, float], dict[int, int]]:
@@ -736,10 +759,7 @@ class CrawlEngine:
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-        wm = self.spark.createDataFrame(
-            [(int(b), int(v)) for b, v in sorted(folded.items())],
-            f"{wm_key} int, __folded int",
-        )
+        wm = _watermark_dim(self.spark, folded, wm_key)
         df = bucket_of(df)
         if join_type == "left":
             return df.join(F.broadcast(wm), wm_key, "left").filter(
@@ -834,11 +854,7 @@ class CrawlEngine:
         if add is not None:
             parts.append(add.select(*SEEN_COLS))
         if not parts:
-            return self.spark.createDataFrame(
-                [],
-                schema=", ".join(f"{c} {t}" for c, t in _PENDING_SCHEMA)
-                + ", first_round int",
-            )
+            return _local_df(self.spark, _PENDING_SCHEMA + [("first_round", "int")])
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -872,10 +888,7 @@ class CrawlEngine:
         if bucket_filter is not None:
             add = add.filter(F.col("__sb").isin(sorted(bucket_filter)))
         if not uniform:
-            wm = self.spark.createDataFrame(
-                [(int(b), int(v)) for b, v in sorted(folded.items())],
-                "__sb int, __folded int",
-            )
+            wm = _watermark_dim(self.spark, folded, "__sb")
             add = add.join(F.broadcast(wm), "__sb", "left").filter(
                 F.col("__dr") > F.coalesce(F.col("__folded"), F.lit(-1))
             )
@@ -1233,22 +1246,36 @@ class CrawlEngine:
 
     def _ensure_bloom(self, upto_round: int) -> PartitionedBloom:
         """Rebuild filters from the exact seen table (filters are a
-        cache; the table is the truth — SURVEY.md §7.3.4)."""
+        cache; the table is the truth — SURVEY.md §7.3.4). The seen row
+        count is arithmetic from the commit meta (every seen URL is
+        either fetched or still pending), so a round-scale table builds
+        on the driver with no count job."""
         if self._bloom is not None:
             return self._bloom
-        m_bits = self._m_bits()
-        bloom = PartitionedBloom(self._bloom_cfg(), m_bits)
-        seen = self._read_seen(upto_round)
-        if seen is not None:
-            bloom.add_filter_rows(
-                build_filter_deltas(
-                    seen, self._bloom_cfg(), m_bits,
-                    subsplits=self.cfg.bloom_rebuild_subsplits,
-                )
-            )
-        self._bloom = bloom
+        meta = self.store.meta(upto_round)
+        self._bloom = PartitionedBloom(self._bloom_cfg(), self._m_bits())
+        self._add_to_bloom(
+            self._read_seen(upto_round),
+            meta["fetched_total"] + meta["pending"],
+            subsplits=self.cfg.bloom_rebuild_subsplits,
+        )
+        return self._bloom
+
+    def _add_to_bloom(self, df: DataFrame, n_rows: int, subsplits: int = 1) -> None:
+        """OR the url_hash keys of ``df`` (``n_rows`` rows) into the
+        driver-held filters: up to _DRIVER_BLOOM_MAX_ROWS keys with one
+        column-pruned Arrow collect and a local numpy build — the same
+        bits as the distributed build (pinned by a differential test)
+        without its shuffle and pandas-group job — beyond that with the
+        distributed build, ``subsplits`` groups per pid."""
+        cfg_b, m_bits = self._bloom_cfg(), self._bloom.m_bits
+        if n_rows <= _DRIVER_BLOOM_MAX_ROWS:
+            hashes = df.select("url_hash").toPandas()["url_hash"].to_numpy()
+            rows = build_filter_rows_from_hashes(hashes, cfg_b, m_bits)
+        else:
+            rows = build_filter_deltas(df, cfg_b, m_bits, subsplits=subsplits)
+        self._bloom.add_filter_rows(rows)
         self._bloom_bc_stale = True
-        return bloom
 
     def _bloom_broadcast(self):
         """One live broadcast generation at a time: destroy the previous
@@ -1689,26 +1716,7 @@ class CrawlEngine:
                     r,
                 )
             elif self._bloom is not None and n_new:
-                if n_new <= 2_000_000:
-                    # round-scale delta: one column-pruned Arrow collect
-                    # (≤16 MB of hashes) + a local numpy build — same
-                    # bits, none of the shuffle + pandas-group fixed
-                    # cost the distributed build pays per round
-                    hashes = (
-                        delta.select("url_hash").toPandas()["url_hash"].to_numpy()
-                    )
-                    self._bloom.add_filter_rows(
-                        build_filter_rows_from_hashes(
-                            hashes, self._bloom_cfg(), self._bloom.m_bits
-                        )
-                    )
-                else:
-                    self._bloom.add_filter_rows(
-                        build_filter_deltas(
-                            delta, self._bloom_cfg(), self._bloom.m_bits
-                        )
-                    )
-                self._bloom_bc_stale = True
+                self._add_to_bloom(delta, n_new)
             tick("bloom_delta_build")
         seen_meta = self._maybe_compact_seen(r)  # fold or carry forward
         fbase = self._maybe_compact_filters(r)

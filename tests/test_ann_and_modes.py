@@ -88,3 +88,33 @@ def test_no_new_links_mode_matches_oracle(spark, tmp_path):
     assert got_seen == set(sim.seen)
     # only seeds + redirect targets ever get crawled in this mode
     assert len(got_seen) <= eng.crawl_log().count() + 5
+
+
+def test_emb_head_rows_filtered_read_matches_full_read(tmp_path):
+    """The vec_id bound pushed into the pyarrow read returns exactly the
+    rows of a full read filtered on the driver."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nightcrawlercmd_spark.plans.queries import _emb_head_rows
+
+    rng = np.random.Generator(np.random.Philox(3))
+    ids = rng.permutation(200)  # head rows spread over the row groups
+    emb = rng.standard_normal((200, 8)).astype(np.float32)
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(ids, pa.int64()),
+            "embedding": pa.array(list(emb), pa.list_(pa.float32())),
+        }),
+        tmp_path / "embeddings.parquet",
+        row_group_size=16,
+    )
+    t = pq.read_table(tmp_path / "embeddings.parquet")
+    for below in (0, 1, 8, 200, 1000):
+        want = {
+            int(v): [float(x) for x in e]
+            for v, e in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
+            if v < below
+        }
+        got = _emb_head_rows(str(tmp_path), below)
+        assert got == want and list(got) == list(want), below

@@ -7,6 +7,7 @@ from nightcrawlercmd_spark.operators.bloomseen import (
     PartitionedBloom,
     bloom_partition_df,
     build_filter_deltas,
+    build_filter_rows_from_hashes,
 )
 
 
@@ -58,3 +59,30 @@ def test_probe_udf_matches_driver_probe(spark):
     )
     want = bloom.maybe_contains(pdf["url_hash"].to_numpy())
     assert (pdf["maybe_seen"].to_numpy() == want).all()
+
+
+def _or_merged(rows):
+    """pid → OR of that pid's blobs (a multi-row build's consumer form)."""
+    out = {}
+    for pid, blob in rows:
+        arr = np.frombuffer(blob, dtype=np.uint8)
+        out[pid] = arr if pid not in out else out[pid] | arr
+    return {pid: arr.tobytes() for pid, arr in out.items()}
+
+
+def test_driver_build_matches_distributed_build(spark):
+    """The driver-local build (round deltas, resume rebuilds) and the
+    distributed build set the same bits: per-pid OR-merged blobs are
+    byte-equal, on negative hashes too, whatever the sub-split."""
+    cfg = BloomConfig(partitions=8, bits_per_key=12, k=7)
+    keys = np.concatenate([_keys(6000, 7), -np.abs(_keys(2000, 8)), [0, -1, 1]])
+    assert (keys < 0).sum() > 2000
+    m = PartitionedBloom.size_for(len(keys), cfg)
+    driver = build_filter_rows_from_hashes(keys, cfg, m)
+    assert len(driver) == len({pid for pid, _ in driver}) == cfg.partitions
+    df = spark.createDataFrame([(int(k),) for k in keys], "url_hash bigint")
+    for subsplits in (1, 3):
+        dist = build_filter_deltas(df, cfg, m, subsplits=subsplits)
+        if subsplits > 1:
+            assert len(dist) > cfg.partitions  # several blobs per pid
+        assert _or_merged(dist) == _or_merged(driver), subsplits

@@ -3,6 +3,7 @@ stop after round k, restart, final state identical to uninterrupted run."""
 
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
 from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig
+from nightcrawlercmd_spark.streaming.simulator import simulate
 
 WORLD = WorldConfig(n_hosts=4, base_pages=8, hot_factor=4, tag="t-resume")
 
@@ -100,3 +101,27 @@ def test_resume_ignores_uncommitted_partial_round(spark, tmp_path):
     assert _final_state(second) == _final_state(full)
     junk = second.crawl_log().filter("canon_url LIKE '%junk.test%'").count()
     assert junk == 0
+
+
+def test_resume_rebuilds_identical_bloom(spark, tmp_path):
+    """A restarted engine's driver-built bloom filter equals, byte for
+    byte, the one the stopped engine held (built at its start and
+    extended by each round's delta), and the resumed crawl stays
+    identical to the sequential simulator."""
+    d = str(tmp_path / "s")
+    first = CrawlEngine(spark, _cfg(d, max_rounds=3))
+    first.run()
+    held = first._bloom
+    assert held is not None and held.filters
+    second = CrawlEngine(spark, _cfg(d, max_rounds=8))
+    rebuilt = second._ensure_bloom(first.store.last_round())
+    assert rebuilt.m_bits == held.m_bits
+    assert sorted(rebuilt.filters) == sorted(held.filters)
+    for pid, arr in held.filters.items():
+        assert rebuilt.filters[pid].tobytes() == arr.tobytes(), pid
+    stats = second.run()
+    sim = simulate(WORLD, max_rounds=8, max_pages=60)
+    log, seen = _final_state(second)
+    assert log == [tuple(x) for x in sim.log]
+    assert seen == sorted((u, fr, dp) for u, (fr, dp) in sim.seen.items())
+    assert stats["fetched_total"] == sim.fetched
