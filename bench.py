@@ -214,7 +214,6 @@ def run_crawl(cpus: int, rounds: int, world: WorldConfig | None = None) -> dict:
             # on the low leg would systematically flatter the low leg)
             fetch_tasks=max(8, cpus * 4),
             n_salts=16,
-            use_bloom=True,
             decode_images=True,
             expected_urls=1 << 21,
         )
@@ -311,7 +310,6 @@ def frontier_growth(cpus: int) -> dict:
             # uniformly → the second compaction is cohort-only)
             compact_seen_every=3,
             seen_compact_dirty_frac=0.3,
-            use_bloom=True,
             expected_urls=1 << 17,
         )
         stats = CrawlEngine(spark, cfg).run()

@@ -7,7 +7,7 @@ distributed micro-batches:
     dequeue (window-ranked per-host budget, O69/O74)
       → mapInPandas fetch (O6)
       → link extract + canonicalize + scope/robots filters (O30/O18/O39/O75)
-      → bloom pre-probe + exact anti-join vs seen (O51)
+      → bloom pre-probe + exact probe of the bloom positives vs seen (O51)
       → append pages/seen (crawl_log is a projection of pages), commit marker
 
 Structured Streaming cannot express the feedback edge (the frontier
@@ -25,11 +25,16 @@ per-round pending write is zero rows at any frontier size; a scheduled
 compaction (``pending_compact_every``) rewrites the assembled base to
 bound read amplification, with a bucket→round manifest + compaction
 round in the commit marker. The seen set is append-only
-with partitioned bloom filters as pre-probe so each round's anti-join
-shuffle only carries bloom-positive candidates; beyond broadcast size
-the filters live in a co-partitioned ``seen_filters`` table (no driver
-state). Hot hosts are defused by the salt in the fetch repartition +
-the per-host dequeue budget; AQE handles residual skew. With Iceberg
+with partitioned bloom filters as pre-probe so each round's exact probe
+only carries bloom-positive candidates; beyond broadcast size the
+filters live in a co-partitioned ``seen_filters`` table (no driver
+state). Seen compaction folds deltas into a base clustered by
+(url_hash, canon_url) into ``SEEN_KEY_BUCKETS`` buckets, so the exact
+probe never shuffles the history: small suspect sets run the
+broadcast-inverted join (``seen_anti_join``), large ones a chain of
+storage-partitioned joins (``seen_anti_join_parts``). Hot hosts are
+defused by the salt in the fetch repartition + the per-host dequeue
+budget; AQE handles residual skew. With Iceberg
 jars, pending/seen become MERGE-maintained tables (sources/tableio.py
 is the seam).
 """
@@ -93,6 +98,24 @@ SEEN_COLS = PENDING_COLS + ["first_round"]
 # broadcast-mode bloom builds of at most this many keys (≤16 MB of
 # hashes) run on the driver; larger ones run distributed
 _DRIVER_BLOOM_MAX_ROWS = 2_000_000
+# total filter bytes above which the auto probe mode (cfg.bloom_table_probe
+# None) keeps the filters in the seen_filters table instead of a broadcast
+_BLOOM_BROADCAST_MAX_BYTES = 128 << 20
+# pandas groups per bloom partition in a distributed filter build: bounds
+# the keys one task materializes (full rebuilds, high-discovery rounds)
+_BLOOM_REBUILD_SUBSPLITS = 8
+# the pruned pending read starts from the maxp-ranked bucket prefix
+# holding ≥ this many × capacity candidate rows
+_PENDING_PRUNE_SLACK = 4.0
+# incremental compaction cohorts: a dirty bucket is folded at least once
+# per this many compactions, bounding its watermark lag (pending / seen)
+_PENDING_COMPACT_MAX_LAG = 4
+_SEEN_COMPACT_MAX_LAG = 4
+# key-hash buckets per sbucket dir of a seen_base fold (the Iceberg
+# bucket(N, key) transform analog, tableio.write_keyed_bucketed). Each
+# fold round records its value in commit meta (seen_base_layout) and
+# readers use the recorded one.
+SEEN_KEY_BUCKETS = 32
 
 _PENDING_SCHEMA = [
     ("canon_url", "string"),
@@ -123,7 +146,6 @@ class EngineConfig:
     round_capacity: int | None = None
     n_salts: int = 8
     fetch_tasks: int = 32
-    use_bloom: bool = True
     decode_images: bool = False  # fetch+decode image payloads per page
     no_new_links: bool = False  # O78: enqueue only redirect Locations
     # -load-resources: also enqueue img/script src URLs from 200 pages
@@ -145,8 +167,6 @@ class EngineConfig:
     # filter bytes exceed the broadcast budget (the 10^10-URL path);
     # True/False force table/broadcast mode (tests force both).
     bloom_table_probe: bool | None = None
-    bloom_broadcast_max_bytes: int = 128 << 20
-    bloom_rebuild_subsplits: int = 8  # bounds per-task keys on full rebuilds
     # pending is merge-on-read (Iceberg equality-delete / LSM analog):
     # per round NOTHING extra is written — pending(r) assembles from the
     # last compacted bucket base ∪ the seen deltas since ∖ the fetched
@@ -164,12 +184,11 @@ class EngineConfig:
     # happens once the crawl focuses a subset of hosts — at 10^10
     # pending rows a compaction touches O(dirty buckets), not the
     # table). Low-delta buckets may skip several compactions, so their
-    # watermark lags; `max_lag_compactions` force-folds any dirty
+    # watermark lags; _PENDING_COMPACT_MAX_LAG force-folds any dirty
     # bucket more than that many compaction periods behind, bounding
     # the merge-on-read delta window to
-    # max_lag_compactions × pending_compact_every rounds.
+    # _PENDING_COMPACT_MAX_LAG × pending_compact_every rounds.
     pending_compact_dirty_frac: float = 0.1
-    pending_compact_max_lag: int = 4
     # priority-stat bucket pruning (VERDICT r3 item 2): when a round
     # has a global capacity (round_capacity / max_pages remainder), the
     # dequeue keeps only the top-capacity rows — so rounds need not
@@ -177,16 +196,16 @@ class EngineConfig:
     # meta carries per-bucket upper bounds (max priority / row count:
     # exact at fold time, max/sum-updated with each round's delta,
     # removals ignored — stale-high is still a sound bound). A round
-    # assembles the maxp-ranked bucket prefix holding ≥ slack×capacity
-    # candidate rows, dequeues it, and accepts iff the result is FULL
-    # and its minimum selected priority strictly beats every skipped
-    # bucket's bound — sound because pbucket is a pure function of
-    # host, so per-host budget ranks are bucket-local. Anything else
-    # falls back to the full read (counted in prune_fallback). This
-    # turns the per-round read from O(frontier) to O(contributing
-    # buckets) in the capacity-bound regime.
+    # assembles the maxp-ranked bucket prefix holding
+    # ≥ _PENDING_PRUNE_SLACK×capacity candidate rows, dequeues it, and
+    # accepts iff the result is FULL and its minimum selected priority
+    # strictly beats every skipped bucket's bound — sound because
+    # pbucket is a pure function of host, so per-host budget ranks are
+    # bucket-local. Anything else falls back to the full read (counted
+    # in prune_fallback). This turns the per-round read from
+    # O(frontier) to O(contributing buckets) in the capacity-bound
+    # regime.
     pending_prune: bool = True
-    pending_prune_slack: float = 4.0
     # drift guard (ADVICE r2): n_pending is arithmetic
     # (prev - fetched + new), which silently relies on fetch emitting
     # exactly one row per dequeued row and enqueue deduping within the
@@ -218,22 +237,11 @@ class EngineConfig:
     # O(suspects) bytes ever move. Set-identical to the shuffle form
     # because anti(suspects, seen) ≡ anti(suspects, seen ∩ suspects).
     # 0 disables; the threshold bounds the broadcast build
-    # (~100 B/row → default ≈ 20 MB).
+    # (~100 B/row → default ≈ 20 MB). Larger suspect sets run the
+    # storage-partitioned chain over the key-bucketed seen bases
+    # (SEEN_KEY_BUCKETS, seen_anti_join_parts): the 10^10-row history
+    # side carries zero Exchange in both regimes.
     suspect_broadcast_max: int = 200_000
-    # storage-partitioned exact probe (VERDICT r4 item 1 — the last
-    # shuffle seam): seen_base fold rounds are written as Spark
-    # bucketed tables CLUSTERED BY (url_hash, canon_url) INTO this
-    # many key-hash buckets per sbucket dir (Iceberg bucket-transform
-    # analog, tableio.write_keyed_bucketed). The LARGE-suspect exact
-    # anti-join then chains one LEFT ANTI per fold round, each with
-    # HashPartitioning satisfied from storage — the 10^10-row history
-    # side carries ZERO Exchange in every regime (small suspect sets
-    # were already covered by the broadcast-inverted form; only the
-    # round-scale survivor set reshuffles, once). 0 = legacy plain
-    # layout. Not pinned: each fold round records its own value in
-    # commit meta and readers use the recorded one, so config changes
-    # apply to future folds only.
-    seen_key_buckets: int = 32
     # state-table backend: "parquet" (this sandbox — Iceberg contract
     # emulated on files, tableio.py) or "iceberg" (real catalog,
     # tableio_iceberg.py — bucket(N,key) transform + MERGE INTO;
@@ -242,11 +250,10 @@ class EngineConfig:
     state_catalog: str = "iceberg"
     # incremental seen compaction (seen analog of the pending knobs
     # above): a compaction folds only sbuckets whose unfolded delta
-    # exceeds dirty_frac of their base rows; max_lag bounds how far a
-    # low-delta bucket's watermark may trail. seen_buckets itself is
-    # PINNED in round-0 meta — see _sb_mod.
+    # exceeds dirty_frac of their base rows; _SEEN_COMPACT_MAX_LAG bounds
+    # how far a low-delta bucket's watermark may trail. seen_buckets
+    # itself is PINNED in round-0 meta — see _sb_mod.
     seen_compact_dirty_frac: float = 0.1
-    seen_compact_max_lag: int = 4
 
 
 def seed_udf():
@@ -288,24 +295,22 @@ def _with_salt_cols(df: DataFrame, n_salts: int) -> DataFrame:
 _SEEN_KEY = ["url_hash", "canon_url"]
 
 
-def seen_anti_join(suspects: DataFrame, seen: DataFrame, invert: bool) -> DataFrame:
+def seen_anti_join(suspects: DataFrame, seen: DataFrame) -> DataFrame:
     """Rows of ``suspects`` whose (url_hash, canon_url) is NOT in
     ``seen`` — the exact half of the O51 dedupe (the hash alone has
     expected birthday collisions > 1 at the 10^10-URL design point; a
     hash-only key would drop a distinct URL forever).
 
-    ``invert=False`` is the plain LEFT ANTI: both sides exchange on
-    the key. ``invert=True`` is the broadcast-inverted form for small
-    suspect sets: confirmed = seen LEFT SEMI broadcast(suspect keys),
-    then suspects LEFT ANTI broadcast(confirmed). Set-identical
+    Broadcast-inverted form for small suspect sets: confirmed = seen
+    LEFT SEMI broadcast(suspect keys), then suspects LEFT ANTI
+    broadcast(confirmed). Set-identical to the plain LEFT ANTI
     (anti(S, T) ≡ anti(S, T ∩ S), and LEFT ANTI keeps left
     multiplicity either way) but the executed plan carries NO shuffle
     Exchange — the seen side is a streamed scan probed against a
     ≤ |suspects|-row broadcast, so a 10^10-row history moves zero
     bytes. Engaged by the engine only when the suspect count (known
-    from the bucket-stats job) is under ``suspect_broadcast_max``."""
-    if not invert:
-        return suspects.join(seen.select(*_SEEN_KEY), _SEEN_KEY, "left_anti")
+    from the bucket-stats job) is under ``suspect_broadcast_max``;
+    larger sets run ``seen_anti_join_parts``."""
     confirmed = seen.select(*_SEEN_KEY).join(
         F.broadcast(suspects.select(*_SEEN_KEY)), _SEEN_KEY, "left_semi"
     )
@@ -342,43 +347,14 @@ def robots_df(spark: SparkSession, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def seeds_df(spark: SparkSession, cfg: EngineConfig) -> DataFrame:
-    if cfg.seeds_path:
-        return spark.read.parquet(cfg.seeds_path)
-    from ..sources.corpus import host_seed_urls, hosts
-
-    # distributed seed generation: ship the O(n_hosts) host list and
-    # expand each host's seed URLs on the executors (same per-host unit
-    # the sequential oracle uses → identical multiset). The driver-side
-    # expansion was ~2s serial + a 360k-row Arrow ship per bench leg —
-    # pure Amdahl overhead charged to every parallelism level.
-    world = cfg.world
-    hs = hosts(world)
-    host_pdf = pd.DataFrame({"host": hs, "is_hot": [h == hs[0] for h in hs]})
-    n_hosts = len(hs)
-
-    def expand(batches):
-        for pdf in batches:
-            urls: list[str] = []
-            for hst, hot in zip(pdf["host"], pdf["is_hot"]):
-                urls.extend(host_seed_urls(world, hst, bool(hot), n_hosts))
-            yield pd.DataFrame({"url": urls})
-
-    n_parts = max(1, min(n_hosts, spark.sparkContext.defaultParallelism * 2))
-    return (
-        spark.createDataFrame(host_pdf)
-        .repartition(n_parts)
-        .mapInPandas(expand, schema="url string")
-    )
-
-
 def world_seed_canon_df(spark: SparkSession, cfg: EngineConfig) -> DataFrame:
-    """World seeds already canonicalized: ONE fused Python stage does
-    per-host expansion + canonicalize + depth-0 priority (the exact
-    functions seed_udf applies), instead of a mapInPandas expansion
-    followed by a second Arrow round-trip through seed_udf. Null
-    canon rows (junk seeds) are dropped inside the stage. Used by
-    _init_round0 for the no-seeds-path case; a seeds_path parquet keeps
+    """World seeds already canonicalized, generated on the executors:
+    the driver ships only the O(n_hosts) host list, and ONE fused
+    Python stage does per-host expansion (``host_seed_urls``, the unit
+    the sequential ``seed_rows`` uses → the identical seed multiset) +
+    canonicalize + depth-0 priority (the functions seed_udf applies).
+    Null canon rows (junk seeds) are dropped inside the stage. Used by
+    _init_round0 when no seeds_path is set; a seeds_path parquet runs
     the raw-url + seed_udf pipeline."""
     from ..sources.corpus import host_seed_urls, hosts
 
@@ -450,7 +426,7 @@ class CrawlEngine:
         cfg = self.cfg
         if cfg.seeds_path:
             canon_seeds = (
-                seeds_df(self.spark, cfg)
+                self.spark.read.parquet(cfg.seeds_path)
                 .select(seed_udf()(F.col("url")).alias("s"))
                 .select("s.canon_url", "s.priority")
                 .filter(F.col("canon_url").isNotNull())
@@ -503,7 +479,7 @@ class CrawlEngine:
         n = int(obs0.get.get("rows") or 0)
         tick("write_seen0")
         m_bits = PartitionedBloom.size_for(self.cfg.expected_urls, self.cfg.bloom)
-        if cfg.use_bloom and self._table_probe():
+        if self._table_probe():
             self.store.append(
                 build_filter_delta_df(
                     self.store.read_snapshot(self.spark, "seen", 0),
@@ -512,7 +488,7 @@ class CrawlEngine:
                     # a 10^8-row seed list must not materialize a whole
                     # pid partition's keys in one pandas task — same
                     # bound _ensure_bloom and the catch-up path honor
-                    subsplits=cfg.bloom_rebuild_subsplits,
+                    subsplits=_BLOOM_REBUILD_SUBSPLITS,
                 ),
                 "seen_filters",
                 0,
@@ -525,8 +501,8 @@ class CrawlEngine:
         tick("bloom0")
         # bounds are only consumed by capacitated rounds; an
         # uncapacitated crawl (no round_capacity / max_pages) skips the
-        # init agg too — a later capacitated invocation bootstraps via
-        # _bucket_stats like a legacy store
+        # init agg too — a later capacitated invocation bootstraps them
+        # via _bucket_stats
         if cfg.pending_prune and (
             cfg.round_capacity is not None or cfg.max_pages is not None
         ):
@@ -610,16 +586,11 @@ class CrawlEngine:
             return _local_df(self.spark, _PENDING_SCHEMA)
         return df.select(*PENDING_COLS)
 
-    def _folded_of(self, meta: dict) -> dict[int, int]:
+    @staticmethod
+    def _folded_of(meta: dict) -> dict[int, int]:
         """Per-bucket fold watermark: the round up to which each
-        bucket's deltas are folded into its on-disk base. Pre-
-        incremental stores carry only the uniform pending_compact_round
-        — expand it so both formats resume identically."""
-        f = meta.get("pending_folded")
-        if f is not None:
-            return {int(k): int(v) for k, v in f.items()}
-        c = meta.get("pending_compact_round", 0)
-        return {b: c for b in range(self._pb_mod())}
+        bucket's deltas are folded into its on-disk base."""
+        return {int(k): int(v) for k, v in meta["pending_folded"].items()}
 
     def _assemble_pending(
         self,
@@ -645,34 +616,20 @@ class CrawlEngine:
             manifest = {b: v for b, v in manifest.items() if b in buckets}
             folded = {b: v for b, v in folded.items() if b in buckets}
         df = self._read_pending_manifest(manifest)
-        lo = min(folded.values(), default=upto_round)
-        uniform = len(set(folded.values())) <= 1
-        adds, removals = [], []
-        for j in range(lo + 1, upto_round + 1):
-            if self.store.exists("seen", j):
-                a = self.store.read_snapshot(self.spark, "seen", j).select(*PENDING_COLS)
-                adds.append(a if uniform else a.withColumn("__dr", F.lit(j)))
-            if self.store.exists("pages", j):
-                removals.append(
-                    self.store.read_snapshot(self.spark, "pages", j).select(
-                        "url_hash", "canon_url", "host_hash"
-                    )
-                )
-        if adds:
-            add = adds[0]
-            for p in adds[1:]:
-                add = add.unionByName(p)
-            if buckets is not None or not uniform:
-                add = self._with_pbucket(add)
-            if buckets is not None:
-                add = add.filter(F.col("pbucket").isin(sorted(buckets)))
-            if not uniform:
-                wm = _watermark_dim(self.spark, folded, "pbucket")
-                add = (
-                    add.join(F.broadcast(wm), "pbucket", "left")
-                    .filter(F.col("__dr") > F.coalesce(F.col("__folded"), F.lit(-1)))
-                )
+        add = self._unfolded_deltas(
+            ("seen",), PENDING_COLS, folded, upto_round,
+            self._with_pbucket, "pbucket", buckets,
+        )
+        if add is not None:
             df = df.unionByName(add.select(*PENDING_COLS))
+        lo = min(folded.values(), default=upto_round)
+        removals = [
+            self.store.read_snapshot(self.spark, "pages", j).select(
+                "url_hash", "canon_url", "host_hash"
+            )
+            for j in range(lo + 1, upto_round + 1)
+            if self.store.exists("pages", j)
+        ]
         if removals:
             rem = removals[0]
             for p in removals[1:]:
@@ -694,10 +651,10 @@ class CrawlEngine:
 
     def _bucket_stats(self, df: DataFrame) -> tuple[dict[int, float], dict[int, int]]:
         """(maxp, count) per pbucket — THE definition of the pruning
-        bounds; every producer (round-0 init, legacy bootstrap,
-        fallback refresh, compaction fold) goes through here so the
-        soundness invariant (every bucket with rows has an entry)
-        cannot drift between copies."""
+        bounds; every producer (round-0 init, bootstrap after
+        uncapacitated rounds, fallback refresh, compaction fold) goes
+        through here so the soundness invariant (every bucket with rows
+        has an entry) cannot drift between copies."""
         rows = (
             self._with_pbucket(df)
             .groupBy("pbucket")
@@ -711,8 +668,9 @@ class CrawlEngine:
 
     def _pending_stats_of(self, meta: dict) -> tuple[dict, dict] | None:
         """(maxp, cnt_ub) per-bucket upper bounds from the commit meta,
-        or None on a pre-stats (legacy) store — pruning stays off until
-        the next round bootstraps them."""
+        or None when the commit carries none (an uncapacitated init or
+        round drops them) — the next capacitated round bootstraps
+        them."""
         mp = meta.get("pending_bucket_maxp")
         cu = meta.get("pending_bucket_cnt_ub")
         if mp is None or cu is None:
@@ -730,22 +688,27 @@ class CrawlEngine:
         upto_round: int,
         bucket_of,
         wm_key: str,
-        join_type: str = "left",
+        buckets: set[int] | list[int] | None = None,
     ) -> DataFrame | None:
         """THE single definition of the fold-window scan: union the
-        delta snapshots of ``tables`` over (min folded, upto_round],
-        tag each row with its round (``__dr``), key it with
-        ``bucket_of`` (adds the ``wm_key`` column), and keep only rows
-        past their bucket's fold watermark. ``join_type='left'``
-        treats unknown buckets as never folded (coalesce -1);
-        ``'inner'`` restricts to the buckets present in ``folded``
-        (the fold-assembly read passes only the fold set). Shared by
-        both compaction-decision scans and the fold assembly so the
-        invariant cannot drift between copies (review r4); _read_seen
-        keeps its own optimized form for the uniform-watermark and
-        bucket-pruned fast paths. Returns None when no delta dirs
-        exist in the window."""
+        delta snapshots of ``tables`` over (min folded, upto_round] and
+        keep only rows past their bucket's fold watermark (buckets
+        missing from ``folded`` count as never folded). ``buckets``
+        restricts the scan to a bucket subset (the pruned and fold
+        reads). ``bucket_of`` adds the ``wm_key`` bucket column, which
+        the result carries only when a bucket filter or the watermark
+        join needs it. Uniform watermarks (every round of a crawl
+        without incremental folds) take the fast path: the window start
+        IS every bucket's watermark, so rows are neither round-tagged
+        (``__dr``) nor joined to the watermark dim. Shared by the
+        pending and seen reads, both compaction-decision scans and both
+        fold assemblies so the invariant cannot drift between copies.
+        Returns None when no delta dirs exist in the window."""
+        if buckets is not None:
+            buckets = set(buckets)
+            folded = {b: v for b, v in folded.items() if b in buckets}
         lo = min(folded.values(), default=upto_round)
+        uniform = len(set(folded.values())) <= 1
         parts = []
         for j in range(max(lo + 1, 0), upto_round + 1):
             for tbl in tables:
@@ -753,21 +716,22 @@ class CrawlEngine:
                     d = self.store.read_snapshot(self.spark, tbl, j)
                     if cols is not None:
                         d = d.select(*cols)
-                    parts.append(d.withColumn("__dr", F.lit(j)))
+                    parts.append(d if uniform else d.withColumn("__dr", F.lit(j)))
         if not parts:
             return None
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-        wm = _watermark_dim(self.spark, folded, wm_key)
-        df = bucket_of(df)
-        if join_type == "left":
-            return df.join(F.broadcast(wm), wm_key, "left").filter(
+        if buckets is not None or not uniform:
+            df = bucket_of(df)
+        if buckets is not None:
+            df = df.filter(F.col(wm_key).isin(sorted(buckets)))
+        if not uniform:
+            wm = _watermark_dim(self.spark, folded, wm_key)
+            df = df.join(F.broadcast(wm), wm_key, "left").filter(
                 F.col("__dr") > F.coalesce(F.col("__folded"), F.lit(-1))
             )
-        return df.join(F.broadcast(wm), wm_key, "inner").filter(
-            F.col("__dr") > F.col("__folded")
-        )
+        return df
 
     def _pending_delta_counts(self, folded: dict[int, int], upto_round: int) -> dict[int, int]:
         """Per-bucket count of UNFOLDED delta rows (adds + removals) in
@@ -779,7 +743,7 @@ class CrawlEngine:
         )
         if df is None:
             return {}
-        rows = df.groupBy("pbucket").count().collect()
+        rows = self._with_pbucket(df).groupBy("pbucket").count().collect()
         return {int(x["pbucket"]): int(x["count"]) for x in rows}
 
     def _read_pending(self, round_no: int) -> DataFrame:
@@ -810,21 +774,24 @@ class CrawlEngine:
     def _sbucket(self, col):
         return F.pmod(col, F.lit(self._sb_mod())).cast("int")
 
-    def _seen_state_of(self, meta: dict) -> tuple[dict, dict, dict] | None:
-        """(manifest, folded, bucket_rows) for the incremental seen
-        layout, or None for a pre-incremental store (legacy single-base
-        read path)."""
-        f = meta.get("seen_folded")
-        if f is None:
-            return None
+    def _with_sbucket(self, df: DataFrame) -> DataFrame:
+        return df.withColumn("__sb", self._sbucket(F.col("url_hash")))
+
+    @staticmethod
+    def _seen_state_of(meta: dict) -> tuple[dict, dict, dict]:
+        """(manifest, folded, bucket_rows) of the incremental seen
+        layout recorded in a commit meta."""
         return (
             {int(k): int(v) for k, v in (meta.get("seen_manifest") or {}).items()},
-            {int(k): int(v) for k, v in f.items()},
+            {int(k): int(v) for k, v in meta["seen_folded"].items()},
             {int(k): int(v) for k, v in (meta.get("seen_bucket_rows") or {}).items()},
         )
 
     def _read_seen(
-        self, upto_round: int, bucket_filter: list[int] | None = None
+        self,
+        upto_round: int,
+        bucket_filter: list[int] | None = None,
+        state: tuple[dict, dict] | None = None,
     ) -> DataFrame:
         """seen = per-bucket compacted base ∪ each bucket's deltas after
         its fold watermark. Without compaction the per-round anti-join
@@ -836,21 +803,22 @@ class CrawlEngine:
         delta read by a computed-bucket filter. Seen is append-only, so
         unlike pending there are no removals — the watermark join only
         prevents re-reading deltas already folded into a bucket's
-        base."""
-        state = self._seen_state_of(self.store.meta(upto_round))
-        if state is None:
-            return self._read_seen_legacy(upto_round, bucket_filter)
-        manifest, folded, _ = state
+        base. ``state`` = (manifest, folded) defaults to round
+        ``upto_round``'s commit meta; a seen fold passes its own, since
+        its round (whose delta it folds) is not committed yet."""
+        manifest, folded = state or self._seen_state_of(self.store.meta(upto_round))[:2]
         if bucket_filter is not None:
             manifest = {b: v for b, v in manifest.items() if b in bucket_filter}
-            folded = {b: v for b, v in folded.items() if b in bucket_filter}
         parts = []
         base = self.store.read_buckets(
             self.spark, "seen_base", manifest, bucket_col="sbucket"
         )
         if base is not None:
             parts.append(base.select(*SEEN_COLS))
-        add = self._seen_unfolded_delta(folded, upto_round, bucket_filter)
+        add = self._unfolded_deltas(
+            ("seen",), None, folded, upto_round, self._with_sbucket, "__sb",
+            bucket_filter,
+        )
         if add is not None:
             parts.append(add.select(*SEEN_COLS))
         if not parts:
@@ -860,76 +828,33 @@ class CrawlEngine:
             df = df.unionByName(p)
         return df
 
-    def _seen_unfolded_delta(
-        self,
-        folded: dict[int, int],
-        upto_round: int,
-        bucket_filter: list[int] | None,
-    ) -> DataFrame | None:
-        """Union of the UNFOLDED seen-delta rounds — each bucket's
-        deltas strictly after its fold watermark, bucket-filtered when
-        asked. Shared by the unioned read (_read_seen) and the
-        storage-partitioned parts read (_read_seen_parts) so the two
-        assemble byte-identical delta windows."""
-        lo = min(folded.values(), default=upto_round)
-        uniform = len(set(folded.values())) <= 1
-        adds = []
-        for j in range(max(lo + 1, 0), upto_round + 1):
-            if self.store.exists("seen", j):
-                d = self.store.read_snapshot(self.spark, "seen", j)
-                adds.append(d if uniform else d.withColumn("__dr", F.lit(j)))
-        if not adds:
-            return None
-        add = adds[0]
-        for p in adds[1:]:
-            add = add.unionByName(p)
-        if bucket_filter is not None or not uniform:
-            add = add.withColumn("__sb", self._sbucket(F.col("url_hash")))
-        if bucket_filter is not None:
-            add = add.filter(F.col("__sb").isin(sorted(bucket_filter)))
-        if not uniform:
-            wm = _watermark_dim(self.spark, folded, "__sb")
-            add = add.join(F.broadcast(wm), "__sb", "left").filter(
-                F.col("__dr") > F.coalesce(F.col("__folded"), F.lit(-1))
-            )
-        return add
-
     def _read_seen_parts(
         self, upto_round: int, bucket_filter: list[int] | None = None
-    ) -> list[DataFrame] | None:
+    ) -> list[DataFrame]:
         """Storage-partitioned form of _read_seen for the LARGE-suspect
         exact probe (VERDICT r4 item 1 — the last shuffle seam): one
         DataFrame per fold round whose base dirs are still current,
         each a catalog bucketed-table scan (tableio.read_keyed_bucketed)
         carrying HashPartitioning(url_hash, canon_url) FROM STORAGE,
-        plus one round-scale unfolded-delta part. Fed to
-        seen_anti_join_parts the 10^10-row history side then joins with
-        ZERO Exchange — only the round's suspect set reshuffles, once.
-        Returns None when any referenced base round predates the keyed
-        layout (seen_key_buckets=0 at its fold time, or a pre-keyed
-        store) — callers fall back to the unioned read + plain probe.
+        plus one round-scale unfolded-delta part (the same fold-window
+        scan _read_seen uses). Fed to seen_anti_join_parts the 10^10-row
+        history side then joins with ZERO Exchange — only the round's
+        suspect set reshuffles, once. Each base is read with the key
+        bucket count its fold round recorded (seen_base_layout).
 
         Each round's scan is filtered to the manifest's buckets for
         that round even without a caller filter: an sbucket refolded at
         a later round leaves its stale dir in the earlier round's path,
         and the manifest — not the directory listing — is the truth."""
-        state = self._seen_state_of(self.store.meta(upto_round))
-        if state is None:
-            return None
-        manifest, folded, _ = state
+        manifest, folded, _ = self._seen_state_of(self.store.meta(upto_round))
         if bucket_filter is not None:
-            bf = set(bucket_filter)
-            manifest = {b: v for b, v in manifest.items() if b in bf}
-            folded = {b: v for b, v in folded.items() if b in bf}
+            manifest = {b: v for b, v in manifest.items() if b in bucket_filter}
         by_round: dict[int, list[int]] = {}
         for b, rr in manifest.items():
             by_round.setdefault(int(rr), []).append(int(b))
         parts = []
         for rr in sorted(by_round):
-            layout = self.store.meta(rr).get("seen_base_layout") or {}
-            kb = int(layout.get("key_buckets") or 0)
-            if not kb:
-                return None  # plain/mixed layout → unioned read path
+            kb = int(self.store.meta(rr)["seen_base_layout"]["key_buckets"])
             base = self.store.read_keyed_bucketed(
                 self.spark, "seen_base", rr, list(_SEEN_KEY), kb,
                 bucket_col="sbucket",
@@ -938,51 +863,18 @@ class CrawlEngine:
                 base.filter(F.col("sbucket").isin(sorted(by_round[rr])))
                 .select(*_SEEN_KEY)
             )
-        add = self._seen_unfolded_delta(folded, upto_round, bucket_filter)
+        add = self._unfolded_deltas(
+            ("seen",), None, folded, upto_round, self._with_sbucket, "__sb",
+            bucket_filter,
+        )
         if add is not None:
             parts.append(add.select(*_SEEN_KEY))
         return parts
 
-    def _read_seen_legacy(
-        self, upto_round: int, bucket_filter: list[int] | None = None
-    ) -> DataFrame:
-        """Pre-incremental layout: latest single compacted base + the
-        deltas after it (kept so old state dirs resume byte-identically;
-        their first compaction under the new code folds everything once
-        and switches them to the manifest layout)."""
-        base_round = self._latest_base_round("seen_base_round", upto_round)
-        parts = []
-        if base_round >= 0 and self.store.exists("seen_base", base_round):
-            base = self.store.read_snapshot(self.spark, "seen_base", base_round)
-            # prune ONLY if the base was bucketed with the CURRENT
-            # modulus (recorded in its compaction round's commit meta)
-            base_mod = self.store.meta(base_round).get("seen_buckets")
-            if (
-                bucket_filter is not None
-                and "sbucket" in base.columns
-                and base_mod == self._sb_mod()
-            ):
-                base = base.filter(F.col("sbucket").isin(bucket_filter))
-            parts.append(base.drop("sbucket"))
-        for r in self.store.committed_rounds():
-            if base_round < r <= upto_round and self.store.exists("seen", r):
-                d = self.store.read_snapshot(self.spark, "seen", r)
-                if bucket_filter is not None:
-                    d = d.filter(
-                        self._sbucket(F.col("url_hash")).isin(bucket_filter)
-                    )
-                parts.append(d)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
-
     def _latest_base_round(self, key: str, upto_round: int) -> int:
         """Most recent committed compaction base at or before
-        ``upto_round`` (shared by the seen and filter readers — the two
-        must resolve bases identically or their reads desynchronize:
-        zero-fetch commits carry the key forward as a copied value, and
-        the delta window is strictly (base, upto])."""
+        ``upto_round`` (zero-fetch commits carry the key forward as a
+        copied value, and the delta window is strictly (base, upto])."""
         for r in reversed(self.store.committed_rounds()):
             if r > upto_round:
                 continue
@@ -1010,46 +902,35 @@ class CrawlEngine:
         (min folded, upto_round] — scans only delta tables (seen is
         append-only: no removal side)."""
         df = self._unfolded_deltas(
-            ("seen",), ["url_hash"], folded, upto_round,
-            lambda d: d.withColumn("__sb", self._sbucket(F.col("url_hash"))),
-            "__sb",
+            ("seen",), ["url_hash"], folded, upto_round, self._with_sbucket, "__sb",
         )
         if df is None:
             return {}
-        rows = df.groupBy("__sb").count().collect()
+        rows = self._with_sbucket(df).groupBy("__sb").count().collect()
         return {int(x["__sb"]): int(x["count"]) for x in rows}
 
     def _write_seen_base(self, assembled: DataFrame, r: int) -> list[int]:
-        """Write a fold round's seen base. Keyed layout
-        (cfg.seen_key_buckets > 0, the default): a Spark bucketed table
-        CLUSTERED BY (url_hash, canon_url) — the Iceberg
-        bucket(N, key) transform analog — so the large-suspect exact
-        probe joins it with zero seen-side Exchange
+        """Write a fold round's seen base as a Spark bucketed table
+        CLUSTERED BY (url_hash, canon_url) INTO SEEN_KEY_BUCKETS — the
+        Iceberg bucket(N, key) transform analog — so the large-suspect
+        exact probe joins it with zero seen-side Exchange
         (tableio.write_keyed_bucketed). The pre-write repartition uses
         the SAME (key, N) hash partitioning as the bucket spec, so each
         write task holds exactly one key-bucket: one file per
         (sbucket, key-bucket) pair instead of tasks × buckets."""
-        cfg = self.cfg
-        if cfg.seen_key_buckets:
-            return self.store.write_keyed_bucketed(
-                assembled.repartition(cfg.seen_key_buckets, *_SEEN_KEY),
-                "seen_base",
-                r,
-                list(_SEEN_KEY),
-                cfg.seen_key_buckets,
-                bucket_col="sbucket",
-            )
-        return self.store.write_bucketed(
-            assembled.repartition(cfg.fetch_tasks, "sbucket", "url_hash"),
+        return self.store.write_keyed_bucketed(
+            assembled.repartition(SEEN_KEY_BUCKETS, *_SEEN_KEY),
             "seen_base",
             r,
+            list(_SEEN_KEY),
+            SEEN_KEY_BUCKETS,
             bucket_col="sbucket",
         )
 
     def _maybe_compact_seen(self, r: int) -> dict:
         """Every K rounds, fold ONLY the sbuckets whose unfolded delta
         exceeds ``seen_compact_dirty_frac`` of their base rows (or whose
-        watermark lags > ``seen_compact_max_lag`` compactions) into
+        watermark lags > _SEEN_COMPACT_MAX_LAG compactions) into
         per-bucket base dirs — the seen analog of incremental pending
         compaction (VERDICT r2 watch item: at 10^10 fetched rows a
         full-table base rewrite every K rounds is the worst round's
@@ -1060,7 +941,6 @@ class CrawlEngine:
         round of discoveries from the base."""
         cfg, store = self.cfg, self.store
         prev = store.meta(r - 1)
-        state = self._seen_state_of(prev)
         carry = {
             k: prev.get(k)
             for k in (
@@ -1074,30 +954,7 @@ class CrawlEngine:
         if not cfg.compact_seen_every or r % cfg.compact_seen_every != 0:
             carry["seen_rewritten"] = 0
             return carry
-        if state is None:
-            # pre-incremental store: fold EVERYTHING once (same cost as
-            # the old full rewrite), then incremental from here on
-            full = self._read_seen_legacy(r - 1)
-            if store.exists("seen", r):
-                full = full.unionByName(store.read_snapshot(self.spark, "seen", r))
-            assembled = full.withColumn(
-                "sbucket", self._sbucket(F.col("url_hash"))
-            ).persist()
-            written = self._write_seen_base(assembled, r)
-            counts = {
-                int(x["sbucket"]): int(x["count"])
-                for x in assembled.groupBy("sbucket").count().collect()
-            }
-            assembled.unpersist()
-            return {
-                "seen_manifest": {b: r for b in written},
-                "seen_folded": {b: r for b in range(self._sb_mod())},
-                "seen_bucket_rows": counts,
-                "seen_base_round": r,
-                "seen_base_layout": {"key_buckets": cfg.seen_key_buckets},
-                "seen_rewritten": sum(counts.values()),
-            }
-        manifest, folded, brows = ({**d} for d in state)
+        manifest, folded, brows = ({**d} for d in self._seen_state_of(prev))
         dirty = self._seen_delta_counts(folded, r)
         # sbuckets hash url_hash UNIFORMLY (unlike pending's host-keyed
         # buckets), so every bucket's delta/base ratio crosses the
@@ -1108,7 +965,7 @@ class CrawlEngine:
         # compaction (≈ 1/max_lag of the table + threshold-triggered
         # hot buckets); lag_floor stays as a safety net across cadence
         # changes.
-        lag = max(1, cfg.seen_compact_max_lag)
+        lag = _SEEN_COMPACT_MAX_LAG
         cohort = (r // cfg.compact_seen_every) % lag
         lag_floor = r - lag * cfg.compact_seen_every
         fold_set = {
@@ -1124,7 +981,7 @@ class CrawlEngine:
         base_round = carry.get("seen_base_round")
         if fold_set:
             assembled = (
-                self._read_seen_for_fold(manifest, folded, r, fold_set)
+                self._read_seen(r, sorted(fold_set), state=(manifest, folded))
                 .withColumn("sbucket", self._sbucket(F.col("url_hash")))
                 .persist()
             )
@@ -1148,10 +1005,9 @@ class CrawlEngine:
             "seen_bucket_rows": brows,
             "seen_base_round": base_round,
             # recorded ONLY on rounds that wrote a base: _read_seen_parts
-            # looks the layout up per manifest round, so a config change
-            # applies to future folds without invalidating old bases
+            # looks the layout up per manifest round
             **(
-                {"seen_base_layout": {"key_buckets": cfg.seen_key_buckets}}
+                {"seen_base_layout": {"key_buckets": SEEN_KEY_BUCKETS}}
                 if fold_set
                 else {}
             ),
@@ -1159,42 +1015,11 @@ class CrawlEngine:
             "seen_rewritten": sum(counts.values()) if fold_set else 0,
         }
 
-    def _read_seen_for_fold(
-        self,
-        manifest: dict[int, int],
-        folded: dict[int, int],
-        upto_round: int,
-        buckets: set[int],
-    ) -> DataFrame:
-        """Assemble the full seen content of ``buckets`` up to and
-        including round ``upto_round`` (whose delta is not committed
-        yet): their base dirs ∪ their unfolded deltas."""
-        man = {b: v for b, v in manifest.items() if b in buckets}
-        fol = {b: v for b, v in folded.items() if b in buckets}
-        parts = []
-        base = self.store.read_buckets(
-            self.spark, "seen_base", man, bucket_col="sbucket"
-        )
-        if base is not None:
-            parts.append(base.select(*SEEN_COLS))
-        add = self._unfolded_deltas(
-            ("seen",), None, fol, upto_round,
-            lambda d: d.withColumn("__sb", self._sbucket(F.col("url_hash"))),
-            "__sb",
-            join_type="inner",  # inner: only the fold set's buckets
-        )
-        if add is not None:
-            parts.append(add.select(*SEEN_COLS))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
-
     def _maybe_compact_filters(self, r: int) -> int | None:
         """Filter-table analog of seen compaction: OR-merge all delta
         blobs per pid into one base row (table-probe mode only)."""
         cfg = self.cfg
-        if not cfg.use_bloom or not self._table_probe():
+        if not self._table_probe():
             return None
         if not cfg.compact_seen_every or r % cfg.compact_seen_every != 0:
             return None
@@ -1242,7 +1067,7 @@ class CrawlEngine:
         if self.cfg.bloom_table_probe is not None:
             return self.cfg.bloom_table_probe
         total = self._bloom_cfg().partitions * self._m_bits() // 8
-        return total > self.cfg.bloom_broadcast_max_bytes
+        return total > _BLOOM_BROADCAST_MAX_BYTES
 
     def _ensure_bloom(self, upto_round: int) -> PartitionedBloom:
         """Rebuild filters from the exact seen table (filters are a
@@ -1257,7 +1082,7 @@ class CrawlEngine:
         self._add_to_bloom(
             self._read_seen(upto_round),
             meta["fetched_total"] + meta["pending"],
-            subsplits=self.cfg.bloom_rebuild_subsplits,
+            subsplits=_BLOOM_REBUILD_SUBSPLITS,
         )
         return self._bloom
 
@@ -1294,16 +1119,16 @@ class CrawlEngine:
     def _read_filters(self, upto_round: int) -> DataFrame:
         """seen_filters = latest compacted base + deltas after it, PLUS
         an in-memory catch-up delta for every committed round whose seen
-        delta has no persisted filter delta (rounds run with
-        use_bloom=False or in broadcast mode, or a store that predates
-        table mode). Filters are a cache — the seen table is the truth —
-        and a silent coverage gap would turn into bloom false negatives
-        whose rows bypass the exact anti-join. The catch-up is never
-        written into a committed round's directory (that would violate
-        the write-then-commit invariant: a crash mid-write could leave a
-        committed round unreadable with nothing re-running to heal it);
-        it is recomputed per round until the next filter compaction
-        folds it into the persisted base."""
+        delta has no persisted filter delta (rounds run in broadcast
+        mode before a resume in table mode). Filters are a cache — the
+        seen table is the truth — and a silent coverage gap would turn
+        into bloom false negatives whose rows bypass the exact
+        anti-join. The catch-up is never written into a committed
+        round's directory (that would violate the write-then-commit
+        invariant: a crash mid-write could leave a committed round
+        unreadable with nothing re-running to heal it); it is recomputed
+        per round until the next filter compaction folds it into the
+        persisted base."""
         base_round = self._latest_base_round("filters_base_round", upto_round)
         parts = []
         if base_round >= 0 and self.store.exists("seen_filters_base", base_round):
@@ -1322,7 +1147,7 @@ class CrawlEngine:
             parts.append(
                 build_filter_delta_df(
                     gap, self._bloom_cfg(), self._m_bits(),
-                    subsplits=self.cfg.bloom_rebuild_subsplits,
+                    subsplits=_BLOOM_REBUILD_SUBSPLITS,
                 )
             )
         df = parts[0]
@@ -1371,7 +1196,8 @@ class CrawlEngine:
         deq = None
         deq_cached = None
         if cfg.pending_prune and remaining is not None and prev_stats is None:
-            # legacy-store bootstrap: one full-frontier agg this round;
+            # bootstrap (the store's last commit was uncapacitated, so it
+            # carries no bounds): one full-frontier agg this round;
             # every later round prunes off the maintained bounds
             prev_stats = self._bucket_stats(pending)
             prune_info["refreshed"] = True  # bootstrap IS a refresh
@@ -1387,7 +1213,7 @@ class CrawlEngine:
         ):
             maxp_b, cnt_b = prev_stats
             order_b = sorted(maxp_b, key=lambda b: (-maxp_b[b], b))
-            target = cfg.pending_prune_slack * remaining
+            target = _PENDING_PRUNE_SLACK * remaining
             # initial prefix: maxp-ranked buckets holding ≥ slack×
             # capacity candidate rows. That can undershoot — the top-k
             # rows live in the first j* buckets where j* = count of
@@ -1474,7 +1300,7 @@ class CrawlEngine:
             seen_carry = {
                 k: prev_meta.get(k)
                 for k in ("seen_manifest", "seen_folded", "seen_bucket_rows",
-                          "seen_base_round", "seen_buckets",
+                          "seen_base_round",
                           "pending_bucket_maxp", "pending_bucket_cnt_ub",
                           "pending_stats_refresh_round")
                 if prev_meta.get(k) is not None
@@ -1499,68 +1325,42 @@ class CrawlEngine:
             # only redirect Location targets (mainCrawler.go:164-173)
             link_src = pages.filter(F.col("status_code").between(300, 307))
         cands = enqueue_rows(link_src, self.robots, scope_hosts, r)
-        invert = False  # whether the exact probe ran broadcast-inverted
-        probe_parts = False  # whether it ran storage-partitioned (keyed bases)
-        if cfg.use_bloom:
-            # persist: the bloom split consumes `tagged` twice (fresh +
-            # suspects) — without the cache the extract/dedupe pipeline
-            # runs twice per round
-            if self._table_probe():
-                tagged = bloom_probe_cogroup(
-                    cands, self._read_filters(r - 1), self._bloom_cfg(), self._m_bits()
-                ).persist()
-            else:
-                self._ensure_bloom(r - 1)
-                tagged = bloom_partition_df(cands, bc=self._bloom_broadcast()).persist()
-            fresh = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            raw_suspects = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-            # exact-probe read: once the crawl is large, prune the seen
-            # scan to the partitions holding this round's suspects (the
-            # bucket stats cost one small job against the cached tagged
-            # set; below the threshold the whole table is cheaper).
-            # The same job's counts decide the join strategy: a small
-            # suspect set inverts the anti-join to the broadcast form
-            # (seen_anti_join) so the pruned history is scanned, never
-            # shuffled. Bloom stays hash-keyed (a colliding new URL
-            # just becomes a suspect and resolves in the exact probe).
-            if fetched_total >= cfg.seen_prune_min_total:
-                sb_counts = self._suspect_bucket_counts(raw_suspects)
-                bf = sorted(sb_counts)
-                invert = (
-                    0 < sum(sb_counts.values()) <= cfg.suspect_broadcast_max
-                )
-            else:
-                bf = None
-            if invert:
-                seen = self._read_seen(r - 1, bucket_filter=bf)
-                suspects = seen_anti_join(raw_suspects, seen, True)
-            else:
-                # LARGE-suspect regime: probe each storage-bucketed base
-                # part on its own (seen_anti_join_parts) — the history
-                # side carries zero Exchange; only the suspect set
-                # reshuffles, once. Falls back to the unioned read +
-                # plain anti-join on pre-keyed layouts or when the
-                # keyed layout is disabled (seen_key_buckets=0).
-                parts = (
-                    self._read_seen_parts(r - 1, bucket_filter=bf)
-                    if cfg.seen_key_buckets
-                    else None
-                )
-                if parts is not None:
-                    suspects = seen_anti_join_parts(raw_suspects, parts)
-                    probe_parts = True
-                else:
-                    seen = self._read_seen(r - 1, bucket_filter=bf)
-                    suspects = seen_anti_join(raw_suspects, seen, False)
-            new = fresh.unionByName(suspects)
+        # persist: the bloom split consumes `tagged` twice (fresh +
+        # suspects) — without the cache the extract/dedupe pipeline
+        # runs twice per round
+        if self._table_probe():
+            tagged = bloom_probe_cogroup(
+                cands, self._read_filters(r - 1), self._bloom_cfg(), self._m_bits()
+            ).persist()
         else:
-            tagged = None
-            seen = self._read_seen(r - 1)
-            new = cands.join(
-                seen.select("url_hash", "canon_url"),
-                ["url_hash", "canon_url"],
-                "left_anti",
-            )
+            self._ensure_bloom(r - 1)
+            tagged = bloom_partition_df(cands, bc=self._bloom_broadcast()).persist()
+        fresh = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
+        raw_suspects = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
+        # exact-probe read: once the crawl is large, prune the seen
+        # scan to the partitions holding this round's suspects (the
+        # bucket stats cost one small job against the cached tagged
+        # set; below the threshold the whole table is cheaper).
+        # The same job's counts decide the join strategy: a small
+        # suspect set inverts the anti-join to the broadcast form
+        # (seen_anti_join) so the pruned history is scanned, never
+        # shuffled; otherwise each storage-bucketed base part is
+        # probed on its own (seen_anti_join_parts) — the history side
+        # carries zero Exchange and only the suspect set reshuffles,
+        # once. Bloom stays hash-keyed (a colliding new URL just
+        # becomes a suspect and resolves in the exact probe).
+        small_suspects = False
+        bf = None
+        if fetched_total >= cfg.seen_prune_min_total:
+            sb_counts = self._suspect_bucket_counts(raw_suspects)
+            bf = sorted(sb_counts)
+            small_suspects = 0 < sum(sb_counts.values()) <= cfg.suspect_broadcast_max
+        if small_suspects:
+            suspects = seen_anti_join(raw_suspects, self._read_seen(r - 1, bf))
+        else:
+            parts = self._read_seen_parts(r - 1, bf)
+            suspects = seen_anti_join_parts(raw_suspects, parts)
+        new = fresh.unionByName(suspects)
         new = _with_salt_cols(new, cfg.n_salts).select(*PENDING_COLS)
         # the seen delta carries the full pending shape (lineage incl.) so
         # the next-round pending rows are a column-pruned re-read, not a
@@ -1575,8 +1375,7 @@ class CrawlEngine:
             r,
         )
         n_new = int(sobs.get.get("rows") or 0)
-        if tagged is not None:
-            tagged.unpersist()
+        tagged.unpersist()
         # maintain the per-bucket pruning bounds: one O(delta) agg over
         # the just-written seen delta (the round's pending adds).
         # Removals are ignored — bounds stay upper bounds; fold below
@@ -1590,8 +1389,7 @@ class CrawlEngine:
             # agg is pure overhead — skip it and DROP the stats from
             # this commit (carrying them forward un-maintained would
             # break their upper-bound invariant). A later capacitated
-            # round bootstraps fresh bounds via _bucket_stats, exactly
-            # like a legacy store.
+            # round bootstraps fresh bounds via _bucket_stats.
             prev_stats = None
         if prev_stats is not None:
             # (never created from deltas alone — a delta-only map is
@@ -1642,7 +1440,7 @@ class CrawlEngine:
             # is uniform over host buckets, all cross the threshold
             # together — the round-robin cohort bounds the worst
             # compaction round to ~1/max_lag of the table
-            lag = max(1, cfg.pending_compact_max_lag)
+            lag = _PENDING_COMPACT_MAX_LAG
             cohort = (r // cfg.pending_compact_every) % lag
             lag_floor = r - lag * cfg.pending_compact_every
             fold_set = {
@@ -1702,22 +1500,21 @@ class CrawlEngine:
                 )
         tick("count_pending")
         # extend the filters with this round's discoveries
-        if cfg.use_bloom:
-            delta = store.read_snapshot(spark, "seen", r)
-            if self._table_probe():
-                store.append(
-                    # subsplits: a high-discovery round's delta is
-                    # bounded only by the frontier, not by politeness
-                    build_filter_delta_df(
-                        delta, self._bloom_cfg(), self._m_bits(),
-                        subsplits=cfg.bloom_rebuild_subsplits,
-                    ),
-                    "seen_filters",
-                    r,
-                )
-            elif self._bloom is not None and n_new:
-                self._add_to_bloom(delta, n_new)
-            tick("bloom_delta_build")
+        delta = store.read_snapshot(spark, "seen", r)
+        if self._table_probe():
+            store.append(
+                # subsplits: a high-discovery round's delta is
+                # bounded only by the frontier, not by politeness
+                build_filter_delta_df(
+                    delta, self._bloom_cfg(), self._m_bits(),
+                    subsplits=_BLOOM_REBUILD_SUBSPLITS,
+                ),
+                "seen_filters",
+                r,
+            )
+        elif self._bloom is not None and n_new:
+            self._add_to_bloom(delta, n_new)
+        tick("bloom_delta_build")
         seen_meta = self._maybe_compact_seen(r)  # fold or carry forward
         fbase = self._maybe_compact_filters(r)
         if fbase is None:
@@ -1739,10 +1536,6 @@ class CrawlEngine:
                 "fetched_round": n_fetched,
                 "metrics": metrics,
                 **seen_meta,
-                # modulus in effect (pinned at round 0 — _sb_mod); the
-                # legacy pruned read checks it against the base's
-                # compaction round before trusting on-disk sbucket dirs
-                "seen_buckets": self._sb_mod(),
                 "filters_base_round": fbase,
                 # O(delta) evidence: pending rows rewritten this round
                 # (0 except compaction rounds) — the bench's
@@ -1774,10 +1567,10 @@ class CrawlEngine:
             "prune_fallback": prune_info["prune_fallback"],
             # whether the exact seen probe ran as the shuffle-free
             # broadcast-inverted join this round (small suspect set)
-            "seen_probe_inverted": invert,
+            "seen_probe_inverted": small_suspects,
             # large-suspect regime ran the zero-history-Exchange
             # storage-partitioned chain (VERDICT r4 item 1)
-            "seen_probe_parts": probe_parts,
+            "seen_probe_parts": not small_suspects,
             "stop": n_pending == 0,
         }
 

@@ -35,7 +35,6 @@ def main() -> None:
     ap.add_argument("--n-salts", type=int, default=16)
     ap.add_argument("--default-budget", type=int, default=4)
     ap.add_argument("--expected-urls", type=int, default=1 << 21)
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument("--decode-images", action="store_true")
     ap.add_argument("--world-hosts", type=int, default=20)
     ap.add_argument("--world-pages", type=int, default=40)
@@ -66,7 +65,6 @@ def main() -> None:
         fetch_tasks=args.fetch_tasks,
         n_salts=args.n_salts,
         default_budget=args.default_budget,
-        use_bloom=not args.no_bloom,
         decode_images=args.decode_images,
         expected_urls=args.expected_urls,
     )

@@ -66,7 +66,6 @@ def test_table_probe_crawl_matches_oracle(spark, tmp_path_factory):
         max_rounds=8,
         max_pages=120,
         fetch_tasks=8,
-        use_bloom=True,
         bloom_table_probe=True,  # force the co-partitioned path
         compact_seen_every=3,  # exercise filter compaction mid-crawl
         expected_urls=1 << 13,
@@ -102,7 +101,6 @@ def test_broadcast_mode_single_live_generation(spark, tmp_path_factory):
         max_rounds=8,
         max_pages=120,
         fetch_tasks=8,
-        use_bloom=True,
         bloom_table_probe=False,
         expected_urls=1 << 13,
     )

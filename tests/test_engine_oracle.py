@@ -7,7 +7,11 @@ import pytest
 
 from nightcrawlercmd_spark.functions import codecs_np as C
 from nightcrawlercmd_spark.sources.corpus import WorldConfig, gen_image
-from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig
+from nightcrawlercmd_spark.streaming.engine import (
+    CrawlEngine,
+    EngineConfig,
+    world_seed_canon_df,
+)
 from nightcrawlercmd_spark.streaming.simulator import simulate
 
 WORLD = WorldConfig(n_hosts=6, base_pages=12, hot_factor=5, tag="t-oracle")
@@ -22,7 +26,6 @@ def engine_result(spark, tmp_path_factory):
         max_rounds=10,
         max_pages=150,
         fetch_tasks=8,
-        use_bloom=True,
         expected_urls=1 << 14,
     )
     eng = CrawlEngine(spark, cfg)
@@ -101,14 +104,23 @@ def test_payload_invariants(engine_result, spark, tmp_path_factory):
         assert C.phash64(dec) is not None and row["phash"] == C.phash64(ref_img)
 
 
-def test_bloom_agrees_with_exact_dedupe(spark, tmp_path_factory, oracle_result):
-    """Same crawl with use_bloom=False ⇒ identical seen set."""
-    state = str(tmp_path_factory.mktemp("crawl_state_nobloom"))
-    cfg = EngineConfig(
-        state_dir=state, world=WORLD, max_rounds=10, max_pages=150,
-        fetch_tasks=8, use_bloom=False,
+def test_world_seed_canon_matches_seed_rows(spark):
+    """World seeds are expanded per host on the executors, canonicalized
+    and prioritized in one Python stage; the result must equal, as a
+    multiset, the sequential seed list through canonicalize and the
+    depth-0 priority, with junk (null canon) seeds dropped."""
+    from collections import Counter
+
+    from nightcrawlercmd_spark.functions.urlnorm import canonicalize
+    from nightcrawlercmd_spark.sources.corpus import priority_of, seed_rows
+
+    cfg = EngineConfig(state_dir="unused", world=WORLD)
+    got = Counter(
+        (r["canon_url"], r["priority"])
+        for r in world_seed_canon_df(spark, cfg).collect()
     )
-    eng = CrawlEngine(spark, cfg)
-    eng.run()
-    got = {r["canon_url"]: (r["first_round"], r["depth"]) for r in eng.seen().collect()}
-    assert got == oracle_result.seen
+    canon = [canonicalize(row["url"]) for row in seed_rows(WORLD)]
+    want = Counter((c, priority_of(c, 0)) for c in canon if c is not None)
+    assert got == want
+    # the hot host's duplicated seeds survive as multiplicities
+    assert max(want.values()) > 1

@@ -22,7 +22,6 @@ def test_all_features_crawl_matches_oracle(spark, tmp_path):
         round_capacity=40,
         fetch_tasks=8,
         n_salts=4,
-        use_bloom=True,
         bloom_table_probe=True,      # co-partitioned filter-table probe
         seen_buckets=8,
         seen_prune_min_total=0,      # bucket-pruned exact probe from round 1

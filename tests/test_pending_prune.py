@@ -6,8 +6,7 @@ bound, falling back to the full read otherwise) — so the crawl is
 bit-identical with pruning on or off, matches the sequential oracle,
 and the per-round read is O(contributing buckets)."""
 
-import json
-import os
+import dataclasses
 
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
 from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig
@@ -94,27 +93,18 @@ def test_round_capacity_zero_terminates(spark, tmp_path_factory):
 
 
 def test_legacy_meta_bootstraps_stats_on_resume(spark, tmp_path_factory):
-    """A pre-stats store (commit metas without the bucket bounds) must
-    resume correctly: the first capacity-bound round bootstraps the
-    bounds with one full-frontier agg and later commits carry them."""
-    state = str(tmp_path_factory.mktemp("prune_legacy"))
-    half = EngineConfig(
-        state_dir=state,
-        world=WORLD,
-        max_rounds=2,
-        round_capacity=CAPACITY,
-        fetch_tasks=8,
-        pending_buckets=BUCKETS,
-        expected_urls=1 << 13,
+    """A store whose last commit carries no bucket bounds must resume
+    correctly under a capacity: an uncapacitated init (max_rounds=0,
+    no round_capacity / max_pages) writes no stats, so the first
+    capacity-bound round of the resumed crawl bootstraps the bounds
+    with one full-frontier agg and later commits carry them."""
+    state = str(tmp_path_factory.mktemp("prune_bootstrap"))
+    init = CrawlEngine(
+        spark, dataclasses.replace(_cfg(state), max_rounds=0, round_capacity=None)
     )
-    CrawlEngine(spark, half).run()
-    # forge a legacy store: strip the stats keys from every commit meta
-    for r in os.listdir(os.path.join(state, "_commits")):
-        path = os.path.join(state, "_commits", r)
-        meta = json.load(open(path))
-        meta.pop("pending_bucket_maxp", None)
-        meta.pop("pending_bucket_cnt_ub", None)
-        json.dump(meta, open(path, "w"))
+    init.run()
+    assert init.store.last_round() == 0
+    assert "pending_bucket_maxp" not in init.store.meta(0)
     eng = CrawlEngine(spark, _cfg(state))
     eng.run()
     sim = simulate(WORLD, max_rounds=ROUNDS, round_capacity=CAPACITY)

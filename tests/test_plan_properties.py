@@ -276,12 +276,14 @@ def test_seen_anti_join_invert_is_shuffle_free(spark):
              (9, "http://z.test/", 2), (7, "http://OTHER.test/", 3)],
             "url_hash bigint, canon_url string, first_round int",
         )
-        inv = seen_anti_join(suspects, seen, invert=True)
+        inv = seen_anti_join(suspects, seen)
         p = plan_of(inv, "simple")
         assert "Exchange hashpartitioning" not in p  # seen never shuffles
         assert "BroadcastHashJoin" in p
         assert "LeftSemi" in p and "LeftAnti" in p
-        plain = seen_anti_join(suspects, seen, invert=False)
+        plain = suspects.join(
+            seen.select("url_hash", "canon_url"), ["url_hash", "canon_url"], "left_anti"
+        )
         assert "Exchange hashpartitioning" in plan_of(plain, "simple")
         a = sorted(tuple(r) for r in inv.collect())
         b = sorted(tuple(r) for r in plain.collect())

@@ -15,7 +15,6 @@ def _cfg(state_dir, max_rounds):
         max_rounds=max_rounds,
         max_pages=60,
         fetch_tasks=4,
-        use_bloom=True,
         expected_urls=1 << 12,
     )
 

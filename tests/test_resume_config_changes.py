@@ -3,8 +3,8 @@
 The bloom filters are a *cache* of the seen table; every path that
 consults them must either use the geometry they were built with
 (pinned in round-0 meta) or rebuild from the exact rows. These tests
-stop a crawl mid-way, resume with changed bloom geometry / probe mode /
-use_bloom, and require the exact oracle crawl log and seen set — a
+stop a crawl mid-way, resume with changed bloom geometry / probe mode,
+and require the exact oracle crawl log and seen set — a
 single bloom false negative would surface as a duplicate fetch here."""
 
 from nightcrawlercmd_spark.operators.bloomseen import BloomConfig
@@ -36,7 +36,6 @@ def _cfg(state, **kw):
         max_rounds=ROUNDS,
         max_pages=PAGES,
         fetch_tasks=8,
-        use_bloom=True,
         expected_urls=1 << 13,
     )
     base.update(kw)
@@ -92,8 +91,8 @@ def test_resume_broadcast_then_table_probe(spark, tmp_path_factory):
 
 
 def test_resume_with_bloom_gap_rounds(spark, tmp_path_factory):
-    """Rounds executed with use_bloom=False leave a gap in the filter
-    table; a later table-probe resume must cover those rounds' seen
+    """Rounds executed in broadcast mode between table-probe rounds
+    leave a gap in the filter table; a later table-probe resume must cover those rounds' seen
     rows via the catch-up delta, not treat the stale filters as
     complete."""
     state = str(tmp_path_factory.mktemp("rcfg_gap"))
@@ -101,7 +100,7 @@ def test_resume_with_bloom_gap_rounds(spark, tmp_path_factory):
         spark, _cfg(state, max_rounds=2, bloom_table_probe=True, compact_seen_every=0)
     ).run()
     CrawlEngine(
-        spark, _cfg(state, max_rounds=5, use_bloom=False, compact_seen_every=0)
+        spark, _cfg(state, max_rounds=5, bloom_table_probe=False, compact_seen_every=0)
     ).run()
     eng = CrawlEngine(
         spark, _cfg(state, bloom_table_probe=True, compact_seen_every=0)

@@ -2,7 +2,11 @@
 round and compaction must never lose a URL (dedupe stays exact)."""
 
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
-from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig
+from nightcrawlercmd_spark.streaming.engine import (
+    SEEN_KEY_BUCKETS,
+    CrawlEngine,
+    EngineConfig,
+)
 from nightcrawlercmd_spark.streaming.simulator import simulate
 
 WORLD = WorldConfig(n_hosts=4, base_pages=14, hot_factor=3, budget_lo=2, budget_hi=3, tag="t-compact")
@@ -163,55 +167,6 @@ def test_incremental_seen_compaction_mixed_manifest(spark, tmp_path):
     assert {r["canon_url"] for r in eng.seen().collect()} == set(sim.seen)
 
 
-def test_upgrade_from_pre_incremental_store(spark, tmp_path):
-    """A store whose commit metas predate the incremental seen layout
-    (no seen_folded/seen_manifest keys — simulated by stripping them)
-    must resume via the legacy read path, then the first compaction
-    folds everything once into the per-bucket layout, and the finished
-    crawl still matches an uninterrupted fresh run."""
-    import json
-    import os
-
-    state = str(tmp_path / "up")
-    CrawlEngine(
-        spark,
-        EngineConfig(state_dir=state, world=WORLD, max_rounds=4,
-                     fetch_tasks=4, compact_seen_every=0),
-    ).run()
-    # forge pre-incremental metas: drop the new keys from every commit
-    cdir = os.path.join(state, "_commits")
-    for fn in os.listdir(cdir):
-        p = os.path.join(cdir, fn)
-        with open(p) as f:
-            meta = json.load(f)
-        for k in ("seen_manifest", "seen_folded", "seen_bucket_rows"):
-            meta.pop(k, None)
-        with open(p, "w") as f:
-            json.dump(meta, f)
-
-    second = CrawlEngine(
-        spark,
-        EngineConfig(state_dir=state, world=WORLD, max_rounds=9,
-                     fetch_tasks=4, compact_seen_every=3),
-    )
-    second.run()  # round 6 compaction runs the legacy full-fold branch
-    last = second.store.last_round()
-    assert second.store.meta(last).get("seen_folded") is not None  # upgraded
-
-    full = CrawlEngine(
-        spark,
-        EngineConfig(state_dir=str(tmp_path / "uf"), world=WORLD, max_rounds=9,
-                     fetch_tasks=4, compact_seen_every=3),
-    )
-    full.run()
-    a = [(r["round"], r["seq"], r["canon_url"]) for r in second.crawl_log().collect()]
-    b = [(r["round"], r["seq"], r["canon_url"]) for r in full.crawl_log().collect()]
-    assert a == b
-    got = sorted(r["canon_url"] for r in second.seen().collect())
-    want = sorted(r["canon_url"] for r in full.seen().collect())
-    assert got == want
-
-
 def test_large_suspect_probe_storage_partitioned_exact(spark, tmp_path):
     """Force the LARGE-suspect regime (suspect_broadcast_max=0 disables
     the broadcast-inverted form; seen_prune_min_total=0 forces the
@@ -224,7 +179,7 @@ def test_large_suspect_probe_storage_partitioned_exact(spark, tmp_path):
         EngineConfig(state_dir=str(tmp_path / "lp"), world=WORLD, max_rounds=9,
                      fetch_tasks=4, compact_seen_every=2,
                      seen_buckets=8, seen_prune_min_total=0,
-                     suspect_broadcast_max=0, seen_key_buckets=4),
+                     suspect_broadcast_max=0),
     )
     stats = eng.run()
     sim = simulate(WORLD, max_rounds=9, default_budget=4)
@@ -238,24 +193,5 @@ def test_large_suspect_probe_storage_partitioned_exact(spark, tmp_path):
     assert any(rt.get("seen_probe_parts") for rt in stats["round_times"])
     assert not any(rt.get("seen_probe_inverted") for rt in stats["round_times"])
     base_round = eng.store.meta(eng.store.last_round())["seen_base_round"]
-    assert eng.store.meta(base_round)["seen_base_layout"]["key_buckets"] == 4
-
-
-def test_plain_layout_large_suspect_falls_back_exact(spark, tmp_path):
-    """seen_key_buckets=0 keeps the pre-keyed plain layout: the
-    large-suspect probe must fall back to the unioned read + plain
-    LEFT ANTI (seen_probe_parts never set) and stay exact."""
-    eng = CrawlEngine(
-        spark,
-        EngineConfig(state_dir=str(tmp_path / "pl"), world=WORLD, max_rounds=9,
-                     fetch_tasks=4, compact_seen_every=2,
-                     seen_buckets=8, seen_prune_min_total=0,
-                     suspect_broadcast_max=0, seen_key_buckets=0),
-    )
-    stats = eng.run()
-    sim = simulate(WORLD, max_rounds=9, default_budget=4)
-    got_log = [
-        (r["round"], r["seq"], r["canon_url"]) for r in eng.crawl_log().collect()
-    ]
-    assert got_log == [(r, s, u) for r, s, u, _ in sim.log]
-    assert not any(rt.get("seen_probe_parts") for rt in stats["round_times"])
+    layout = eng.store.meta(base_round)["seen_base_layout"]
+    assert layout["key_buckets"] == SEEN_KEY_BUCKETS

@@ -6,7 +6,12 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from nightcrawlercmd_spark.functions.urlnorm import canonicalize, host_of, resolve
+from nightcrawlercmd_spark.functions.urlnorm import (
+    _canonicalize_full,
+    canonicalize,
+    host_of,
+    resolve,
+)
 
 _hostchars = st.text(alphabet=string.ascii_letters + string.digits + "-.", min_size=1, max_size=20)
 _pathchars = st.text(
@@ -67,3 +72,43 @@ def test_dot_segments_never_escape_root(host, segs):
     if c is not None:
         assert "/../" not in c and not c.endswith("/..")
         assert "/./" not in c
+
+
+_fix_alphabet = string.ascii_lowercase + string.digits + "-"
+
+
+@st.composite
+def _near_fixpoint_urls(draw):
+    """URLs on, or a few edits off, the canonicalize fast path's
+    fixpoint grammar (``_CANON_FIXPOINT_RE``): uppercase hosts, ports,
+    userinfo, a trailing dot, dot segments, ``%`` escapes, ``?``/``#``
+    and trailing whitespace or a newline."""
+    host = draw(st.text(alphabet=_fix_alphabet + ".", min_size=1, max_size=12))
+    if draw(st.booleans()):
+        host = draw(st.sampled_from([
+            host.upper(), host.capitalize(), host + ".", host + ":80",
+            host + ":8080", "user@" + host,
+        ]))
+    segs = draw(st.lists(
+        st.one_of(
+            st.text(alphabet=_fix_alphabet + "_~.", max_size=6),
+            st.sampled_from([
+                ".", "..", "%41", "%7e", "%2F", "a%20b", "A",
+                "x?b=2&a=1", "p#frag", "?", "#",
+            ]),
+        ),
+        max_size=5,
+    ))
+    path = "/" + "/".join(segs) if segs or draw(st.booleans()) else ""
+    scheme = draw(st.sampled_from(["http", "http", "http", "https", "HTTP"]))
+    tail = draw(st.sampled_from(["", "", "", " ", "\n", "\t", "/", "?", "#", "."]))
+    lead = draw(st.sampled_from(["", "", "", " "]))
+    return f"{lead}{scheme}://{host}{path}{tail}"
+
+
+@given(_near_fixpoint_urls())
+@settings(max_examples=500, deadline=None)
+def test_canonicalize_fast_path_matches_full(url):
+    """The fixpoint fast path may only return a URL the full normalizer
+    maps to itself: on every input both give the same answer."""
+    assert canonicalize(url) == _canonicalize_full(url)
