@@ -305,11 +305,11 @@ def frontier_growth(cpus: int) -> dict:
             # miniature in the same "delta ≪ base" regime so the
             # compaction exercises the subset-fold path (threshold +
             # 1/max_lag cohort) the design point would take.
-            pending_compact_dirty_frac=0.3,
+            # (one fraction for pending and seen alike)
+            compact_dirty_frac=0.3,
             # seen analog on the same cadence (url_hash buckets dirty
             # uniformly → the second compaction is cohort-only)
             compact_seen_every=3,
-            seen_compact_dirty_frac=0.3,
             expected_urls=1 << 17,
         )
         stats = CrawlEngine(spark, cfg).run()

@@ -104,10 +104,10 @@ def run_crawl_profile(args) -> None:
     import bench
 
     world = bench.bench_world() if args.world == "bench" else bench.mid_world(6)
-    os.environ.setdefault("NCS_TIMING", "1")
     t0 = time.time()
     res = bench.run_crawl(args.cpus, args.rounds, world=world)
-    res.pop("round_times", None)
+    for rt in res.pop("round_times", []):
+        print(f"round {rt['round']} ({rt['seconds']}s): {json.dumps(rt['phases'])}", flush=True)
     print(json.dumps({"wall": round(time.time() - t0, 2), **res}))
 
 

@@ -15,7 +15,7 @@ key sets, on the driver (``build_filter_rows_from_hashes``) — both
 through the one bit-setting function ``_filter_blob`` — and OR-merged
 incrementally per round.
 
-Two probe paths, same bit layout:
+Two probe paths, same bit layout and one bit test (``_all_bits_set``):
 
 * **broadcast** (``bloom_partition_df``): the P filters ship to
   executors as one broadcast dict — right up to ~1e8 keys. The engine
@@ -75,6 +75,23 @@ def _filter_blob(url_hash: np.ndarray, k: int, m_bits: int) -> bytes:
     return arr.tobytes()
 
 
+def _or_blobs(blobs) -> np.ndarray:
+    """OR-merge of one pid's filter blobs (deltas, subsplit groups) —
+    THE merge of filter compaction and the co-partitioned probe."""
+    acc = None
+    for blob in blobs:
+        arr = np.frombuffer(blob, dtype=np.uint8)
+        acc = arr.copy() if acc is None else (acc | arr)
+    return acc
+
+
+def _all_bits_set(filt: np.ndarray, url_hash: np.ndarray, k: int, m_bits: int) -> np.ndarray:
+    """True where all k bits of a key are set in ``filt`` — THE bit test
+    of both probe paths (broadcast and co-partitioned)."""
+    pos = _positions(url_hash, k, m_bits)
+    return ((filt[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1).all(axis=1)
+
+
 class BloomConfig:
     def __init__(self, partitions: int = 16, bits_per_key: int = 12, k: int = 7):
         self.partitions = partitions
@@ -118,17 +135,12 @@ class PartitionedBloom:
         pid = (url_hash.astype(np.int64) % self.cfg.partitions + self.cfg.partitions) % (
             self.cfg.partitions
         )
-        pos = _positions(url_hash, self.cfg.k, self.m_bits)
-        out = np.ones(len(url_hash), dtype=bool)
+        out = np.zeros(len(url_hash), dtype=bool)
         for p in np.unique(pid):
-            mask = pid == p
             filt = self.filters.get(int(p))
-            if filt is None:
-                out[mask] = False
-                continue
-            pp = pos[mask]
-            bits = (filt[pp >> 3] >> (pp & 7).astype(np.uint8)) & 1
-            out[mask] = bits.all(axis=1).astype(bool)
+            if filt is not None:
+                mask = pid == p
+                out[mask] = _all_bits_set(filt, url_hash[mask], self.cfg.k, self.m_bits)
         return out
 
 
@@ -230,10 +242,7 @@ def or_merge_filters_df(filters: DataFrame) -> DataFrame:
     into one row (the filter-table analog of seen compaction)."""
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for blob in pdf["filter"]:
-            arr = np.frombuffer(blob, dtype=np.uint8)
-            acc = arr.copy() if acc is None else (acc | arr)
+        acc = _or_blobs(pdf["filter"])
         return pd.DataFrame({"pid": [int(pdf["pid"].iloc[0])], "filter": [acc.tobytes()]})
 
     return filters.groupBy("pid").applyInPandas(merge, schema="pid int, filter binary")
@@ -273,13 +282,8 @@ def bloom_probe_cogroup(
         if fdf.empty:
             out["maybe_seen"] = False
             return out
-        filt = None
-        for blob in fdf["filter"]:
-            arr = np.frombuffer(blob, dtype=np.uint8)
-            filt = arr.copy() if filt is None else (filt | arr)
-        pos = _positions(out[hash_col].to_numpy(), k, m_bits)
-        bits = (filt[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-        out["maybe_seen"] = bits.all(axis=1)
+        filt = _or_blobs(fdf["filter"])
+        out["maybe_seen"] = _all_bits_set(filt, out[hash_col].to_numpy(), k, m_bits)
         return out
 
     return (

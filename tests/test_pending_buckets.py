@@ -8,7 +8,12 @@ sequential oracle exactly."""
 import os
 
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
-from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig
+from nightcrawlercmd_spark.streaming.engine import (
+    _COMPACT_MAX_LAG,
+    CrawlEngine,
+    EngineConfig,
+    _fold_selection,
+)
 from nightcrawlercmd_spark.streaming.simulator import simulate
 
 WORLD = WorldConfig(n_hosts=12, base_pages=8, hot_factor=2, tag="t-pb")
@@ -55,8 +60,6 @@ def test_pending_merge_on_read_writes_are_o_delta(spark, tmp_path_factory):
                 manifest = {
                     int(k): int(v) for k, v in meta["pending_manifest"].items()
                 }
-                # uniform watermark = min of the per-bucket ones
-                assert meta["pending_compact_round"] == min(folded.values())
                 # a bucket's base is never newer than its fold watermark
                 assert all(folded[b] >= v for b, v in manifest.items())
                 if meta.get("pending_rewritten", 0) > 0:
@@ -198,3 +201,28 @@ def test_incremental_compaction_touches_only_dirty_buckets(spark, tmp_path_facto
         for r in eng.crawl_log().collect()
     ]
     assert got == sim.log
+
+
+def test_fold_selection_policy():
+    """The one fold policy of pending and seen on hand-built dicts:
+    dirty threshold (strict), round-robin cohort b % lag, lag floor,
+    and the free watermark advance of clean buckets only."""
+    assert _COMPACT_MAX_LAG == 4
+    every, r = 2, 10  # cohort (10 // 2) % 4 == 1, lag floor 10 - 4*2 == 2
+    dirty = {0: 11, 4: 10, 1: 1, 2: 1, 3: 1}
+    base_rows = {0: 100, 4: 100, 1: 100, 2: 100, 3: 100, 5: 100, 6: 7}
+    folded = {0: 8, 4: 8, 1: 8, 2: 2, 3: 1, 5: 8, 6: 8}
+    fold_set, new_folded = _fold_selection(dirty, base_rows, folded, r, every, 0.1)
+    # 0: 11 > 0.1*100; 4: 10 is not > 10; 1: cohort; 2: watermark at the
+    # floor is not behind it; 3: watermark behind the floor
+    assert fold_set == {0, 1, 3}
+    # clean buckets (no unfolded delta) advance to r; dirty ones keep
+    # their watermark until the fold bookkeeping moves them
+    assert new_folded == {0: 8, 4: 8, 1: 8, 2: 2, 3: 1, 5: 10, 6: 10}
+    assert folded[5] == 8  # the input is not mutated
+    # a bucket missing from base_rows has no base: any delta is dirty;
+    # a cohort bucket without delta is clean, not folded
+    fold_set, _ = _fold_selection({7: 1}, {}, {7: 9, 9: 9}, r, every, 10.0)
+    assert fold_set == {7}
+    fold_set, _ = _fold_selection({}, {}, {1: 9, 5: 9}, r, every, 0.1)
+    assert fold_set == set()

@@ -50,8 +50,21 @@ def _log(eng):
 
 
 def test_prune_bites_and_matches_oracle(spark, tmp_path_factory):
-    eng = CrawlEngine(spark, _cfg(str(tmp_path_factory.mktemp("prune_on"))))
-    stats = eng.run()
+    sc = spark.sparkContext
+    sc.setJobDescription("caller's description")
+    try:
+        eng = CrawlEngine(spark, _cfg(str(tmp_path_factory.mktemp("prune_on"))))
+        stats = eng.run()
+        assert sc.getLocalProperty("spark.job.description") == "caller's description"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    # every commit records where its round's time went; run() reports
+    # the same phases, and they cover the round's wall time
+    assert eng.store.meta(0)["phases"]
+    for t in stats["round_times"]:
+        phases = eng.store.meta(t["round"])["phases"]
+        assert phases.keys() == t["phases"].keys() and phases, t
+        assert abs(sum(phases.values()) - t["seconds"]) <= 0.05 * t["seconds"], t
     reads = [t["pending_buckets_read"] for t in stats["round_times"]]
     pruned = [n for n in reads if n is not None]
     assert pruned and all(n < BUCKETS for n in pruned), reads

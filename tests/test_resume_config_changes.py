@@ -62,8 +62,8 @@ def test_resume_with_changed_bloom_geometry(spark, tmp_path_factory):
         compact_seen_every=3,
     )
     eng = CrawlEngine(spark, second)
-    assert eng._bloom_cfg().partitions == 4  # pinned, not the new config
-    assert eng._bloom_cfg().k == 5
+    assert eng._layout().bloom.partitions == 4  # pinned, not the new config
+    assert eng._layout().bloom.k == 5
     eng.run()
     _assert_oracle_parity(eng)
 
@@ -162,7 +162,7 @@ def test_resume_with_changed_pending_buckets(spark, tmp_path_factory):
     eng = CrawlEngine(
         spark, _cfg(state, pending_buckets=16, pending_compact_every=2)
     )
-    assert eng._pb_mod() == 4  # pinned, not the new config
+    assert eng._layout().pending_buckets == 4  # pinned, not the new config
     eng.run()
     _assert_oracle_parity(eng)
 

@@ -114,7 +114,7 @@ def test_resume_with_different_seen_buckets_is_exact(spark, tmp_path):
     first.run()  # compactions at 2 and 4 with modulus 8
     second = CrawlEngine(spark, cfg(9, buckets=4))  # resume, new modulus
     second.run()
-    assert second._sb_mod() == 8  # pinned build-time modulus wins
+    assert second._layout().seen_buckets == 8  # pinned build-time modulus wins
 
     full = CrawlEngine(
         spark,
@@ -152,7 +152,7 @@ def test_incremental_seen_compaction_mixed_manifest(spark, tmp_path):
             # bucket crosses any small dirty threshold together; a high
             # frac isolates the cohort staggering (≈1/max_lag of the
             # table per compaction after the first full fold)
-            seen_compact_dirty_frac=10.0,
+            compact_dirty_frac=10.0,
         ),
     )
     eng.run()
