@@ -3,7 +3,10 @@
 
 Per-query noop-sink isolation (guide §1.4) + formatted-plan capture
 (guide §7.2) for every benched query, plus optional repeat runs so
-before/after deltas are separable from session warmup noise.
+before/after deltas are separable from session warmup noise. Each query
+run is split into plan build (the ``QUERIES[name](...)`` call, on the
+driver) and execute (the noop write), and reports the py4j round trips
+the build made.
 
 Usage:
   python bench_extra.py queries [--reps N] [--plans DIR] [--queries a,b,c]
@@ -68,24 +71,48 @@ def warm(spark):
     )
 
 
+def count_round_trips() -> list[int]:
+    """Count every driver→JVM py4j command from now on; the returned
+    one-element list holds the running count."""
+    from py4j.clientserver import ClientServerConnection
+
+    count = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        count[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    return count
+
+
 def run_queries(args) -> None:
     from nightcrawlercmd_spark.plans.queries import QUERIES
     from nightcrawlercmd_spark.session import get_spark
 
     spark = get_spark(app="ncs-bench-extra", cpus=CPUS, shuffle_partitions=max(8, CPUS))
     warm(spark)
+    round_trips = count_round_trips()
     names = args.queries.split(",") if args.queries else BENCH_QUERIES
     out: dict[str, list[float]] = {}
+    build: dict[str, list[float]] = {}
+    execute: dict[str, list[float]] = {}
+    trips: dict[str, int] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-        times = []
+        out[name], build[name], execute[name] = [], [], []
         for rep in range(args.reps):
-            t0 = time.time()
+            t0, rt0 = time.time(), round_trips[0]
             df = QUERIES[name](spark, SF_DIR)
+            t1, trips[name] = time.time(), round_trips[0] - rt0
             df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
-        out[name] = times
-        print(f"{name}: {times}", flush=True)
+            t2 = time.time()
+            out[name].append(round(t2 - t0, 3))
+            build[name].append(round(t1 - t0, 3))
+            execute[name].append(round(t2 - t1, 3))
+        print(f"{name}: {out[name]} build {build[name]} execute {execute[name]} "
+              f"build_round_trips {trips[name]}", flush=True)
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             df = QUERIES[name](spark, SF_DIR)
@@ -96,6 +123,9 @@ def run_queries(args) -> None:
     spark.sparkContext.setJobDescription(None)
     mins = {k: min(v) for k, v in out.items()}
     print(json.dumps({"queries_min": mins, "total_min": round(sum(mins.values()), 2),
+                      "build_min": {k: min(v) for k, v in build.items()},
+                      "execute_min": {k: min(v) for k, v in execute.items()},
+                      "build_round_trips": trips,
                       "samples": out}))
     spark.stop()
 

@@ -13,10 +13,19 @@ results are bit-identical and oracle-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round6
+
+
+def _vec(v) -> Column:
+    """``array<double>`` literal built in one ``lit`` call: an
+    ``F.array`` of per-element ``F.lit``s costs about four py4j round
+    trips per element on the driver, the numpy form two; the optimized
+    plan holds the same folded array literal either way."""
+    return F.lit(np.asarray(v, dtype=np.float64))
 
 
 def _dot(a, b):
@@ -28,7 +37,7 @@ def _norm(a):
 
 
 def cosine_to_query(emb: DataFrame, query_vec: list[float]) -> DataFrame:
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = _vec(query_vec)
     qn = sum(float(x) ** 2 for x in query_vec) ** 0.5
     e = F.col("embedding").cast("array<double>")
     denom = _norm(e) * F.lit(qn)
@@ -74,7 +83,7 @@ def hyperplane_signature(emb: DataFrame, planes: list[list[float]]) -> DataFrame
         # bigint literals: 1 << 31 already exceeds int32, and the
         # summed signature must stay exact for the bucket equality
         bit = F.when(
-            _dot(e, F.array(*[F.lit(float(x)) for x in p])) >= 0,
+            _dot(e, _vec(p)) >= 0,
             F.lit(1 << i).cast("bigint"),
         ).otherwise(F.lit(0).cast("bigint"))
         sig = bit if sig is None else sig + bit
@@ -194,7 +203,7 @@ def ivf_topk(
                             (vn > 0)
                             & (F.lit(math.sqrt(sum(x * x for x in c))) > 0),
                             round6(
-                                _dot(v, F.array(*[F.lit(x) for x in c]))
+                                _dot(v, _vec(c))
                                 / (vn * F.lit(math.sqrt(sum(x * x for x in c))))
                             ),
                         ),
@@ -206,7 +215,7 @@ def ivf_topk(
             ]
         )
     )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = _vec(query_vec)
     return (
         emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .withColumn("vn", _norm(v))

@@ -224,6 +224,13 @@ def md5i(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
 
 
+def _md5i_sql(x: str) -> str:
+    """``md5i`` as Spark SQL over the SQL expression ``x`` (the same
+    expression tree), for expression lists built as ``F.expr`` strings:
+    one py4j call per output column instead of several per operator."""
+    return f"CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
+
+
 def shingles(words_col: Column, k: int = 3) -> Column:
     """k-word shingle strings from a word array (join on spaces).
     Documents SHORTER than k words contribute their whole text as one
@@ -294,10 +301,8 @@ def minhash_signatures(
         if shingles_df is not None
         else shingle_table(docs, k, distinct=False)
     )
-    aggs = [
-        F.min(md5i(F.concat(F.lit(f"p{p}|"), F.col("shingle")))).alias(f"mh{p}")
-        for p in range(n_hashes)
-    ]
+    hashes = [_md5i_sql(f"concat('p{p}|', shingle)") for p in range(n_hashes)]
+    aggs = [F.expr(f"min({h}) AS mh{p}") for p, h in enumerate(hashes)]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
@@ -326,25 +331,16 @@ def minhash_lsh_pairs(
     # materialized ``shingles_df``.
     sig = minhash_signatures(docs, n_hashes, k, shingles_df=shingles_df)
     n_bands = n_hashes // band_size
+    band_cols = [
+        ", ".join(f"CAST(mh{b * band_size + j} AS STRING)" for j in range(band_size))
+        for b in range(n_bands)
+    ]
+    structs = ", ".join(
+        f"struct({b} AS band_id, concat_ws('_', {cols}) AS band_hash)"
+        for b, cols in enumerate(band_cols)
+    )
     bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            "_",
-                            *[
-                                F.col(f"mh{b * band_size + j}").cast("string")
-                                for j in range(band_size)
-                            ],
-                        ).alias("band_hash"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
+        "doc_id", F.expr(f"explode(array({structs})) AS band")
     ).select("doc_id", "band.band_id", "band.band_hash")
     a = bands.alias("a")
     b = bands.alias("b")
@@ -364,19 +360,14 @@ def simhash16(docs: DataFrame) -> DataFrame:
     """16-bit SimHash per document (bit-majority over word hashes)."""
     w = docs.select(
         "doc_id", F.explode(words(F.lower(F.col("text")))).alias("word")
-    ).withColumn("h", md5i(F.col("word")))
+    ).withColumn("h", F.expr(_md5i_sql("word")))
     bit_sums = [
-        F.sum(
-            F.when(F.expr(f"(h >> {i}) & 1") == 1, F.lit(1)).otherwise(F.lit(-1))
-        ).alias(f"b{i}")
+        F.expr(f"sum(CASE WHEN ((h >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS b{i}")
         for i in range(16)
     ]
     agg = w.groupBy("doc_id").agg(*bit_sums)
-    sim = None
-    for i in range(16):
-        term = F.when(F.col(f"b{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return agg.select("doc_id", sim.cast("bigint").alias("simhash"))
+    sim = " + ".join(f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(16))
+    return agg.select("doc_id", F.expr(f"CAST({sim} AS BIGINT) AS simhash"))
 
 
 def ngram_jaccard_pairs(

@@ -29,12 +29,13 @@ from ..operators import graphs as G
 from ..operators import textops as T
 from ..operators import multimodal as MM
 from ..operators import timeseries as TS
+from ..sources.tableio import read_parquet_file
 
 WORD_RE = T.WORD_RE
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet_file(spark, f"{sf_dir}/{name}.parquet")
 
 
 # =====================================================================

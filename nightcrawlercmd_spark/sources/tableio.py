@@ -24,7 +24,18 @@ exactly what parquet inference returns); a table this store has not
 written — a resumed crawl's earlier rounds — is inferred once, on its
 first read, and reused after that. Flat reads (``read_snapshot``,
 ``read_appends``) and bucket-leaf reads (``read_buckets``, which omit
-the bucket partition column) keep separate schemas.
+the bucket partition column) keep separate schemas. Each table's read
+schema is also saved on its first write in a process, atomically, as
+``<root>/_schemas/<name>-<leaf|flat>.json``; a ``StateStore`` opened on
+an existing root (a resumed crawl) reads that file instead of inferring,
+so only a store written before the files existed pays the one inference
+per table.
+
+The query layer reads its single-file input tables through the same
+rule: ``read_parquet_file`` infers a file's schema once per process and
+reads with ``spark.read.schema(s).parquet(path)`` after that. The cached
+schema is checked against the file's ``(st_mtime_ns, st_size)``, so a
+rewritten file is inferred again.
 
 With Iceberg jars present, ``frontier`` becomes one table with
 ``MERGE INTO`` per round and time-travel for resume; this module is the
@@ -39,6 +50,35 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+
+# absolute path → ((st_mtime_ns, st_size), schema); see read_parquet_file
+_FILE_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
+def read_parquet_file(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for a single parquet file without the
+    per-call schema-inference job: the schema is inferred on the first
+    read of the file in this process and reused while the file's
+    ``(st_mtime_ns, st_size)`` is unchanged (module docstring)."""
+    key = os.path.abspath(path)
+    st = os.stat(key)
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _FILE_SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)  # the one inference for this version of the file
+    _FILE_SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
+def _replace_file(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` atomically: a reader sees the old file
+    or the new one, never a partial write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def _nullable(t: DataType) -> DataType:
@@ -64,17 +104,30 @@ class StateStore:
 
     # ---- schema-known reads ----------------------------------------------
 
+    def _schema_path(self, name: str, leaf: bool) -> str:
+        return os.path.join(self.root, "_schemas", f"{name}-{'leaf' if leaf else 'flat'}.json")
+
     def _remember(self, df: DataFrame, name: str, leaf: bool, drop: str | None = None) -> None:
         fields = [f for f in df.schema.fields if f.name != drop]
-        self._schemas[(name, leaf)] = _nullable(StructType(fields))
+        schema = _nullable(StructType(fields))
+        if self._schemas.get((name, leaf)) == schema:
+            return
+        self._schemas[(name, leaf)] = schema
+        path = self._schema_path(name, leaf)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        _replace_file(path, schema.json())
 
     def _read(self, spark: SparkSession, name: str, paths: list[str], leaf: bool) -> DataFrame:
-        schema = self._schemas.get((name, leaf))
-        if schema is None:
-            df = spark.read.parquet(*paths)  # the one inference for this table
-            self._schemas[(name, leaf)] = df.schema
-            return df
-        return spark.read.schema(schema).parquet(*paths)
+        key = (name, leaf)
+        if key not in self._schemas:
+            try:
+                with open(self._schema_path(name, leaf)) as f:
+                    self._schemas[key] = StructType.fromJson(json.load(f))
+            except FileNotFoundError:
+                df = spark.read.parquet(*paths)  # the one inference for this table
+                self._schemas[key] = df.schema
+                return df
+        return spark.read.schema(self._schemas[key]).parquet(*paths)
 
     # ---- commit protocol ----------------------------------------------
 
@@ -92,10 +145,8 @@ class StateStore:
 
     def commit(self, round_no: int, meta: dict) -> None:
         path = os.path.join(self.root, "_commits", f"round_{round_no}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"round": round_no, **meta}, f)
-        os.replace(tmp, path)  # atomic → marker is all-or-nothing
+        # atomic → marker is all-or-nothing
+        _replace_file(path, json.dumps({"round": round_no, **meta}))
 
     def meta(self, round_no: int) -> dict:
         with open(os.path.join(self.root, "_commits", f"round_{round_no}.json")) as f:

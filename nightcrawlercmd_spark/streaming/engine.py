@@ -495,7 +495,9 @@ class CrawlEngine:
                 cfg.state_dir, spark, backend=cfg.state_backend,
                 catalog=cfg.state_catalog,
             )
-        self.robots = robots_df(spark, cfg).cache()
+        # not cached: a LocalRelation, so every use reads driver memory,
+        # while a cached copy costs a Spark job per engine to build
+        self.robots = robots_df(spark, cfg)
         self._bloom: PartitionedBloom | None = None
         self._bloom_bc = None  # current broadcast generation (broadcast mode)
         self._bloom_bc_stale = True
@@ -558,10 +560,7 @@ class CrawlEngine:
                 # world seeds: canonicalization fused into the distributed
                 # expansion — one Python stage instead of two
                 canon_seeds = world_seed_canon_df(self.spark, cfg)
-            seeds = (
-                canon_seeds.withColumn("host", host_of_col(F.col("canon_url")))
-                .persist()  # one Python pass feeds both derived writes
-            )
+            seeds = canon_seeds.withColumn("host", host_of_col(F.col("canon_url")))
             # scope hosts are NOT collected to the driver: the filter is a
             # semi-join against the seed-host set derived from the round-0
             # seen table at run time (a 10^8-host seed list stays distributed)
@@ -586,7 +585,6 @@ class CrawlEngine:
                 0,
             )
             manifest = {b: 0 for b in written}
-            seeds.unpersist()
         # seen delta shares the pending shape (+first_round) across all
         # rounds; the pending count is observed during this write — no
         # dedicated count job or second manifest scan at init (the same

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.fetch import PAGE_SCHEMA
+from ..sources.tableio import read_parquet_file
 
 MONITOR_OUTPUT_SCHEMA = (
     "host string, pages bigint, errors bigint, ema_resp_ms double, batches int"
@@ -107,7 +108,7 @@ def _events_stream_src(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory → stream the dir with a glob filter. testdata ts is
     TIMESTAMP_NTZ; watermarks need TIMESTAMP (session TZ is pinned to
     UTC so the instants are identical)."""
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = read_parquet_file(spark, f"{sf_dir}/events.parquet").schema
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -226,7 +227,7 @@ def stream_dedup(
 
 def events_windowed_counts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin — the oracle for the streaming job."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
+    ev = read_parquet_file(spark, f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     return (

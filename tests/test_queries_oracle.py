@@ -69,6 +69,23 @@ def test_rows_only_queries_run(spark):
         assert df.count() >= 0, name
 
 
+@pytest.mark.parametrize(
+    "name,flag",
+    [
+        ("multimodal_decode", "decode_ok"),
+        ("multimodal_thumbs", "thumb_ok"),
+        ("video_frames", "frame_ok"),
+    ],
+)
+def test_self_validating_media_queries_pass(spark, name, flag):
+    """The media queries have no DuckDB oracle; each row carries its own
+    check against an independent re-derivation, which must hold on
+    every row."""
+    flags = [r[flag] for r in entrymod.queries()[name](spark, SF).select(flag).collect()]
+    assert flags, name
+    assert all(f is True for f in flags), (name, flags.count(False), len(flags))
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

@@ -1,14 +1,19 @@
-"""Schema-known state reads and local relations: ``StateStore`` reads each
-round table with the schema its own write produced (or one inference per
-table), and must return exactly what ``spark.read.parquet`` returns,
-while a repeated read starts no Spark job."""
+"""Schema-known reads and local relations: ``StateStore`` reads each
+round table with the schema its own write produced and saved (or one
+inference per table for a store without saved schemas), and
+``read_parquet_file`` reads a single parquet file with the schema it
+inferred once; both must return exactly what ``spark.read.parquet``
+returns, while a repeated read starts no Spark job."""
 
 import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
-from nightcrawlercmd_spark.sources.tableio import StateStore
+from nightcrawlercmd_spark.sources.tableio import StateStore, read_parquet_file
 from nightcrawlercmd_spark.streaming.engine import (
     CrawlEngine,
     EngineConfig,
@@ -34,12 +39,23 @@ def _rows(df):
     return sorted(repr(tuple(r)) for r in df.collect())
 
 
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# whether the session's CacheManager was empty before the ``crawled``
+# fixture built its engine and after its run()
+_CACHE_AROUND_RUN: dict[str, bool] = {}
+
+
 @pytest.fixture(scope="module")
 def crawled(spark, tmp_path_factory):
     """A small table-probe crawl whose rounds write every state table:
     pages, seen, pending_b leaves, seen_filters, and seen_base and
     seen_filters_base after the round-2 seen compaction."""
     d = str(tmp_path_factory.mktemp("reads") / "state")
+    spark.catalog.clearCache()  # frames cached by earlier test modules
+    _CACHE_AROUND_RUN["before"] = _cache_empty(spark)
     eng = CrawlEngine(
         spark,
         EngineConfig(
@@ -49,7 +65,17 @@ def crawled(spark, tmp_path_factory):
         ),
     )
     eng.run()
+    _CACHE_AROUND_RUN["after"] = _cache_empty(spark)
     return eng
+
+
+@pytest.fixture(scope="module")
+def unsaved(crawled, tmp_path_factory):
+    """A copy of the crawl's store without its saved schemas: the store
+    a crawl written before they existed leaves, read by inference."""
+    d = str(tmp_path_factory.mktemp("reads-unsaved") / "state")
+    shutil.copytree(crawled.store.root, d, ignore=shutil.ignore_patterns("_schemas"))
+    return d
 
 
 def _table_dirs(root, name):
@@ -59,9 +85,10 @@ def _table_dirs(root, name):
     )
 
 
-def test_known_schema_reads_match_inference(spark, crawled):
+def test_known_schema_reads_match_inference(spark, crawled, unsaved):
     store = crawled.store
-    fresh = StateStore(store.root)  # reads through the one-inference path
+    fresh = StateStore(store.root)  # reads through the saved schemas
+    inferred = StateStore(unsaved)  # reads through the one-inference path
     flat = ["pages", "seen", "seen_filters", "seen_filters_base"]
     leaf = {"pending_b": "pbucket", "seen_base": "sbucket"}
     for name in flat + list(leaf):
@@ -70,7 +97,7 @@ def test_known_schema_reads_match_inference(spark, crawled):
         for d in _table_dirs(store.root, name):
             r = int(d.rsplit("=", 1)[1])
             want = spark.read.parquet(d)
-            for s in (store, fresh):
+            for s in (store, fresh, inferred):
                 got = s.read_snapshot(spark, name, r)
                 assert got.schema == want.schema, (name, r)
                 assert _rows(got) == _rows(want), (name, r)
@@ -81,7 +108,7 @@ def test_known_schema_reads_match_inference(spark, crawled):
                 if not p.startswith(col + "="):
                     continue
                 want = spark.read.parquet(os.path.join(d, p))
-                for s in (store, fresh):
+                for s in (store, fresh, inferred):
                     got = s.read_buckets(spark, name, {int(p.split("=")[1]): r}, col)
                     assert got.schema == want.schema, (name, r, p)
                     assert _rows(got) == _rows(want), (name, r, p)
@@ -91,8 +118,8 @@ def test_known_schema_reads_match_inference(spark, crawled):
     assert _rows(got) == _rows(want)
 
 
-def test_repeated_read_starts_no_job(spark, crawled):
-    fresh = StateStore(crawled.store.root)
+def test_repeated_read_starts_no_job(spark, unsaved, crawled):
+    fresh = StateStore(unsaved)
     _, first = _jobs_of(spark, lambda: fresh.read_snapshot(spark, "seen", 1), "ncs-read-1")
     assert len(first) == 1  # the one schema inference of this store
     for r, g in ((1, "ncs-read-2"), (2, "ncs-read-3")):
@@ -104,6 +131,69 @@ def test_repeated_read_starts_no_job(spark, crawled):
         spark, lambda: crawled.store.read_snapshot(spark, "pages", 1), "ncs-read-4"
     )
     assert ids == []
+
+
+def test_fresh_store_reads_saved_schemas_without_jobs(spark, crawled):
+    """A store opened on a crawled root (a resumed engine) reads every
+    table through the schemas the writes saved: no inference job, and
+    the schema and rows of ``spark.read.parquet``."""
+    root = crawled.store.root
+    assert sorted(os.listdir(os.path.join(root, "_schemas"))) == [
+        "pages-flat.json", "pending_b-leaf.json", "seen-flat.json",
+        "seen_base-leaf.json", "seen_filters-flat.json",
+        "seen_filters_base-flat.json",
+    ]
+    fresh = StateStore(root)
+    reads = [
+        (name, d, lambda n=name, r=int(d.rsplit("=", 1)[1]): fresh.read_snapshot(spark, n, r))
+        for name in ("pages", "seen", "seen_filters", "seen_filters_base")
+        for d in _table_dirs(root, name)
+    ]
+    for name, col in (("pending_b", "pbucket"), ("seen_base", "sbucket")):
+        for d in _table_dirs(root, name):
+            for p in sorted(q for q in os.listdir(d) if q.startswith(col + "=")):
+                manifest = {int(p.split("=")[1]): int(d.rsplit("=", 1)[1])}
+                reads.append((
+                    name, os.path.join(d, p),
+                    lambda n=name, m=manifest, c=col: fresh.read_buckets(spark, n, m, c),
+                ))
+    for i, (name, path, read) in enumerate(reads):
+        got, ids = _jobs_of(spark, read, f"ncs-saved-{i}")
+        assert ids == [], (name, path, ids)
+        want = spark.read.parquet(path)
+        assert got.schema == want.schema, (name, path)
+        assert _rows(got) == _rows(want), (name, path)
+
+
+def test_run_leaves_no_cached_frames(crawled):
+    """run() leaves no frame cached: the session's cache is as empty
+    afterwards as before (the scope hosts, the one frame run() caches,
+    are released)."""
+    assert _CACHE_AROUND_RUN == {"before": True, "after": True}
+
+
+def test_shared_reader_infers_once_per_file_version(spark, tmp_path):
+    """``read_parquet_file``: the first read of a file infers its schema
+    (one job), repeated reads start no job and return the inferred
+    schema and the same rows; a rewritten file (new size) is inferred
+    again."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]}), path)
+    _, ids = _jobs_of(spark, lambda: read_parquet_file(spark, path), "ncs-file-1")
+    assert len(ids) == 1
+    want = spark.read.parquet(path)
+    for g in ("ncs-file-2", "ncs-file-3"):
+        got, ids = _jobs_of(spark, lambda: read_parquet_file(spark, path), g)
+        assert ids == [], ids
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want)
+    size = os.stat(path).st_size
+    pq.write_table(pa.table({"k": [1, 2], "w": [0.5, 1.5], "v": ["a", "b"]}), path)
+    assert os.stat(path).st_size != size
+    got, ids = _jobs_of(spark, lambda: read_parquet_file(spark, path), "ncs-file-4")
+    assert len(ids) == 1  # the rewrite is inferred again
+    assert got.schema.fieldNames() == ["k", "w", "v"]
+    assert _rows(got) == _rows(spark.read.parquet(path))
 
 
 def test_local_frames_are_local_relations(spark):
