@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 def round6(col: Column) -> Column:
     """Engine-stable 6-decimal rounding (see module docstring)."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    return F.floor(col * 1e6 + 0.5) / 1e6
 
 
 def sql_round6(expr: str) -> str:

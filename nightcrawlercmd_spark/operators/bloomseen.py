@@ -40,7 +40,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _GOLD = np.uint64(0x9E3779B97F4A7C15)
@@ -211,21 +211,13 @@ def bloom_payload(bloom: PartitionedBloom) -> tuple:
     return (bloom.cfg.partitions, bloom.cfg.k, bloom.m_bits, bloom.filters)
 
 
-def bloom_partition_df(
-    candidates: DataFrame,
-    bloom: PartitionedBloom | None = None,
-    hash_col: str = "url_hash",
-    bc=None,
-) -> DataFrame:
+def bloom_partition_df(candidates: DataFrame, bc, hash_col: str = "url_hash") -> DataFrame:
     """Tag candidates with ``maybe_seen``; broadcast-probe pandas UDF.
 
-    Pass ``bc`` (a broadcast of ``bloom_payload(...)``) to reuse one
-    broadcast across calls — the caller owns its lifecycle and destroys
-    stale generations (a fresh broadcast per round that is never
-    unpersisted grows driver+executor memory unboundedly; ADVICE r1)."""
-    if bc is None:
-        spark = SparkSession.getActiveSession()
-        bc = spark.sparkContext.broadcast(bloom_payload(bloom))
+    ``bc`` is a broadcast of ``bloom_payload(...)`` that the caller owns:
+    it reuses one across calls and destroys stale generations (a fresh
+    broadcast per round that is never unpersisted grows driver+executor
+    memory unboundedly; ADVICE r1)."""
 
     @F.pandas_udf("boolean")
     def probe(h: pd.Series) -> pd.Series:

@@ -28,8 +28,10 @@ fold watermarks in the commit marker. The seen set is append-only
 with partitioned bloom filters as pre-probe so each round's exact probe
 only carries bloom-positive candidates; beyond broadcast size the
 filters live in a co-partitioned ``seen_filters`` table (no driver
-state). Seen compaction folds deltas into a base clustered by
-(url_hash, canon_url) into ``SEEN_KEY_BUCKETS`` buckets, so the exact
+state); which of the two probes a crawl uses is decided once, at round
+0, from the bloom geometry and pinned with it. Seen compaction folds
+deltas into a base clustered by (url_hash, canon_url) into
+``SEEN_KEY_BUCKETS`` buckets, so the exact
 probe never shuffles the history: small suspect sets run the
 broadcast-inverted join (``seen_anti_join``), large ones a chain of
 storage-partitioned joins (``seen_anti_join_parts``). Hot hosts are
@@ -40,11 +42,12 @@ is the seam).
 
 Pending and seen compactions share one fold policy
 (``_fold_selection``), one fold bookkeeping (``_apply_fold``) and one
-delta counter (``_delta_counts``); the bucket moduli, scope switch and
-bloom geometry are pinned in round-0 meta (``_layout``). Each round
-runs as named phases (``_phase``) that label their Spark jobs
-``round {r}: {name}`` and record wall seconds in the commit meta's
-``phases`` dict, which ``run()`` returns per round too.
+delta counter (``_delta_counts``); the bucket moduli, scope switch,
+bloom geometry and bloom probe mode are pinned in round-0 meta
+(``_layout``). Each round runs as named phases (``_phase``) that label
+their Spark jobs ``round {r}: {name}`` and record wall seconds in the
+commit meta's ``phases`` dict, which ``run()`` and ``round_metrics()``
+return per round too.
 """
 
 from __future__ import annotations
@@ -89,7 +92,9 @@ import pyarrow as pa
 # v3: priority_of tie-spread rescaled to the inter-depth gap (dequeue
 # ordering changed) — resuming v2 state would replay old-order rounds
 # against the new simulator and fail the self-validation column.
-STATE_VERSION = 3
+# v4: round-0 meta pins the bloom probe mode (``bloom_table_probe``);
+# a v3 store has no such key to resume from.
+STATE_VERSION = 4
 
 PENDING_COLS = [
     "canon_url",
@@ -109,9 +114,18 @@ SEEN_COLS = PENDING_COLS + ["first_round"]
 # broadcast-mode bloom builds of at most this many keys (≤16 MB of
 # hashes) run on the driver; larger ones run distributed
 _DRIVER_BLOOM_MAX_ROWS = 2_000_000
-# total filter bytes above which the auto probe mode (cfg.bloom_table_probe
-# None) keeps the filters in the seen_filters table instead of a broadcast
+# total filter bytes above which a crawl keeps its filters in the
+# seen_filters table instead of a broadcast; read once, when round 0
+# pins the probe mode (_layout), so a later change never switches the
+# mode of an existing store
 _BLOOM_BROADCAST_MAX_BYTES = 128 << 20
+# suspect rows up to which the exact seen probe runs the
+# broadcast-inverted join (seen_anti_join: the seen side is a streamed
+# scan, only O(suspects) bytes move); ~100 B/row bounds its broadcast
+# build at ≈ 20 MB. Larger suspect sets run the storage-partitioned
+# chain (seen_anti_join_parts), so the history side carries zero
+# Exchange in both regimes
+_SUSPECT_BROADCAST_MAX = 200_000
 # pandas groups per bloom partition in a distributed filter build: bounds
 # the keys one task materializes (full rebuilds, high-discovery rounds)
 _BLOOM_REBUILD_SUBSPLITS = 8
@@ -181,11 +195,10 @@ class EngineConfig:
     http_endpoint: str | None = None
     compact_seen_every: int = 8  # consolidate seen deltas every K rounds
     expected_urls: int = 1 << 17
+    # bloom geometry; with expected_urls it also fixes the probe mode
+    # at round 0 (_layout: the seen_filters table probe beyond
+    # _BLOOM_BROADCAST_MAX_BYTES of filters, a broadcast below)
     bloom: BloomConfig = field(default_factory=BloomConfig)
-    # None → auto: co-partitioned seen_filters table probe when the total
-    # filter bytes exceed the broadcast budget (the 10^10-URL path);
-    # True/False force table/broadcast mode (tests force both).
-    bloom_table_probe: bool | None = None
     # pending is merge-on-read (Iceberg equality-delete / LSM analog):
     # per round NOTHING extra is written — pending(r) assembles from the
     # last compacted bucket base ∪ the seen deltas since ∖ the fetched
@@ -209,23 +222,6 @@ class EngineConfig:
     # window to _COMPACT_MAX_LAG × the table's cadence
     # (pending_compact_every / compact_seen_every) rounds.
     compact_dirty_frac: float = 0.1
-    # priority-stat bucket pruning (VERDICT r3 item 2): when a round
-    # has a global capacity (round_capacity / max_pages remainder), the
-    # dequeue keeps only the top-capacity rows — so rounds need not
-    # READ pending buckets that cannot reach the cutoff. The commit
-    # meta carries per-bucket upper bounds (max priority / row count:
-    # exact at fold time, max/sum-updated with each round's delta,
-    # removals ignored — stale-high is still a sound bound). A round
-    # assembles the maxp-ranked bucket prefix holding
-    # ≥ _PENDING_PRUNE_SLACK×capacity candidate rows, dequeues it, and
-    # accepts iff the result is FULL and its minimum selected priority
-    # strictly beats every skipped bucket's bound — sound because
-    # pbucket is a pure function of host, so per-host budget ranks are
-    # bucket-local. Anything else falls back to the full read (counted
-    # in prune_fallback). This turns the per-round read from
-    # O(frontier) to O(contributing buckets) in the capacity-bound
-    # regime.
-    pending_prune: bool = True
     # drift guard (ADVICE r2): n_pending is arithmetic
     # (prev - fetched + new), which silently relies on fetch emitting
     # exactly one row per dequeued row and enqueue deduping within the
@@ -246,24 +242,6 @@ class EngineConfig:
     # (_layout): a resume keeps the build-time modulus.
     seen_buckets: int = 64
     seen_prune_min_total: int = 5_000_000
-    # inverted exact probe: the straight `suspects LEFT ANTI seen`
-    # shuffles BOTH sides on (url_hash, canon_url) — at the 10^10-URL
-    # design point the pruned seen read is still the dominant exchange
-    # of the round (PLANS.md "Known scale limits"). When the round's
-    # suspect set is small (mature-crawl regime: bloom FPs + a thin
-    # true-dup band, counted for free by the same job that lists the
-    # suspect buckets), the join inverts: seen LEFT SEMI
-    # broadcast(suspect keys) → confirmed (≤ suspects rows), then
-    # suspects LEFT ANTI broadcast(confirmed). The seen side becomes a
-    # pure streamed scan — zero Exchange, zero sort — and only
-    # O(suspects) bytes ever move. Set-identical to the shuffle form
-    # because anti(suspects, seen) ≡ anti(suspects, seen ∩ suspects).
-    # 0 disables; the threshold bounds the broadcast build
-    # (~100 B/row → default ≈ 20 MB). Larger suspect sets run the
-    # storage-partitioned chain over the key-bucketed seen bases
-    # (SEEN_KEY_BUCKETS, seen_anti_join_parts): the 10^10-row history
-    # side carries zero Exchange in both regimes.
-    suspect_broadcast_max: int = 200_000
     # state-table backend: "parquet" (this sandbox — Iceberg contract
     # emulated on files, tableio.py) or "iceberg" (real catalog,
     # tableio_iceberg.py — bucket(N,key) transform + MERGE INTO;
@@ -318,8 +296,10 @@ class _Layout:
     """Values PINNED in round-0 meta (field name = meta key): a changed
     bucket modulus would hash rows into buckets the manifests and fold
     watermarks never heard of, a changed bloom geometry would probe
-    persisted blobs with the wrong bits (false negatives). Config
-    changes to these take effect only on a fresh store."""
+    persisted blobs with the wrong bits (false negatives), and a
+    switch to the table probe would find no filter deltas for the
+    rounds run in broadcast mode. Config changes to these take effect
+    only on a fresh store."""
 
     pending_buckets: int
     seen_buckets: int
@@ -328,6 +308,9 @@ class _Layout:
     bloom_bits_per_key: int
     bloom_k: int
     bloom_m_bits: int
+    # filters in the co-partitioned seen_filters table (the 10^10-URL
+    # path) instead of a driver-held broadcast
+    bloom_table_probe: bool
 
     @property
     def bloom(self) -> BloomConfig:
@@ -406,7 +389,7 @@ def seen_anti_join(suspects: DataFrame, seen: DataFrame) -> DataFrame:
     Exchange — the seen side is a streamed scan probed against a
     ≤ |suspects|-row broadcast, so a 10^10-row history moves zero
     bytes. Engaged by the engine only when the suspect count (known
-    from the bucket-stats job) is under ``suspect_broadcast_max``;
+    from the bucket-stats job) is at most ``_SUSPECT_BROADCAST_MAX``;
     larger sets run ``seen_anti_join_parts``."""
     confirmed = seen.select(*_SEEN_KEY).join(
         F.broadcast(suspects.select(*_SEEN_KEY)), _SEEN_KEY, "left_semi"
@@ -508,18 +491,22 @@ class CrawlEngine:
 
     def _layout(self) -> _Layout:
         """The values pinned in round-0 meta (see _Layout). Before round
-        0 exists: the config's values, not cached. After: round 0's,
-        read once — they are immutable by construction, and the bucket
-        functions and the bloom probe sit on the per-round hot path."""
+        0 exists: the config's values, not cached, with the table probe
+        chosen when the total filter bytes exceed
+        _BLOOM_BROADCAST_MAX_BYTES. After: round 0's, read once — they
+        are immutable by construction, and the bucket functions and the
+        bloom probe sit on the per-round hot path."""
         if self._pinned is None:
             try:
                 m = self.store.meta(0)
             except FileNotFoundError:
                 cfg = self.cfg
+                m_bits = PartitionedBloom.size_for(cfg.expected_urls, cfg.bloom)
                 return _Layout(
                     cfg.pending_buckets, cfg.seen_buckets, cfg.scope_seed_hosts,
                     cfg.bloom.partitions, cfg.bloom.bits_per_key, cfg.bloom.k,
-                    PartitionedBloom.size_for(cfg.expected_urls, cfg.bloom),
+                    m_bits,
+                    cfg.bloom.partitions * m_bits // 8 > _BLOOM_BROADCAST_MAX_BYTES,
                 )
             self._pinned = _Layout(**{f.name: m[f.name] for f in fields(_Layout)})
         return self._pinned
@@ -603,14 +590,12 @@ class CrawlEngine:
         # per-bucket priority/count bounds for the pruned pending read
         # (one column-pruned agg over the just-written seed buckets).
         # Bounds are only consumed by capacitated rounds; an
-        # uncapacitated crawl (no round_capacity / max_pages) or one with
-        # pruning off skips the init agg — a later capacitated
-        # invocation bootstraps them via _bucket_stats
+        # uncapacitated crawl (no round_capacity / max_pages) skips the
+        # init agg — a later capacitated invocation bootstraps them via
+        # _bucket_stats
         stats = None
         with phase("prune_stats"):
-            if cfg.pending_prune and (
-                cfg.round_capacity is not None or cfg.max_pages is not None
-            ):
+            if cfg.round_capacity is not None or cfg.max_pages is not None:
                 stats = self._bucket_stats(self._read_pending_manifest(manifest))
         self.store.commit(
             0,
@@ -636,8 +621,8 @@ class CrawlEngine:
                 "seen_manifest": {},
                 "seen_folded": {b: -1 for b in range(cfg.seen_buckets)},
                 "seen_bucket_rows": {},
-                # bucket moduli, scope switch and bloom geometry, pinned
-                # for every later round and resume (_layout)
+                # bucket moduli, scope switch, bloom geometry and probe
+                # mode, pinned for every later round and resume (_layout)
                 **asdict(self._layout()),
                 "phases": self._phases,
             },
@@ -920,18 +905,6 @@ class CrawlEngine:
             parts.append(add.select(*_SEEN_KEY))
         return parts
 
-    def _latest_base_round(self, key: str, upto_round: int) -> int:
-        """Most recent committed compaction base at or before
-        ``upto_round`` (zero-fetch commits carry the key forward as a
-        copied value, and the delta window is strictly (base, upto])."""
-        for r in reversed(self.store.committed_rounds()):
-            if r > upto_round:
-                continue
-            v = self.store.meta(r).get(key)
-            if v is not None:
-                return v
-        return -1
-
     def _suspect_bucket_counts(self, suspects: DataFrame) -> dict[int, int]:
         """Per-sbucket row counts of the round's bloom-positive
         suspects — ≤ cfg.seen_buckets result rows by construction. One
@@ -1063,7 +1036,7 @@ class CrawlEngine:
         """Filter-table analog of seen compaction: OR-merge all delta
         blobs per pid into one base row (table-probe mode only)."""
         cfg = self.cfg
-        if not self._table_probe():
+        if not self._layout().bloom_table_probe:
             return None
         if not cfg.compact_seen_every or r % cfg.compact_seen_every != 0:
             return None
@@ -1076,16 +1049,6 @@ class CrawlEngine:
         return r
 
     # ----------------------------------------------------------- bloom ----
-
-    def _table_probe(self) -> bool:
-        """Probe-path choice: forced by config, else by total filter
-        bytes vs the broadcast budget (static per crawl — m_bits is
-        fixed at init from expected_urls)."""
-        if self.cfg.bloom_table_probe is not None:
-            return self.cfg.bloom_table_probe
-        lay = self._layout()
-        total = lay.bloom_partitions * lay.bloom_m_bits // 8
-        return total > _BLOOM_BROADCAST_MAX_BYTES
 
     def _ensure_bloom(self, upto_round: int) -> PartitionedBloom:
         """Rebuild filters from the exact seen table (filters are a
@@ -1136,38 +1099,21 @@ class CrawlEngine:
         return self._bloom_bc
 
     def _read_filters(self, upto_round: int) -> DataFrame:
-        """seen_filters = latest compacted base + deltas after it, PLUS
-        an in-memory catch-up delta for every committed round whose seen
-        delta has no persisted filter delta (rounds run in broadcast
-        mode before a resume in table mode). Filters are a cache — the
-        seen table is the truth — and a silent coverage gap would turn
-        into bloom false negatives whose rows bypass the exact
-        anti-join. The catch-up is never written into a committed
-        round's directory (that would violate the write-then-commit
-        invariant: a crash mid-write could leave a committed round
-        unreadable with nothing re-running to heal it); it is recomputed
-        per round until the next filter compaction folds it into the
-        persisted base."""
-        base_round = self._latest_base_round("filters_base_round", upto_round)
+        """seen_filters = latest compacted base + the deltas after it.
+        Complete by construction: the probe mode is pinned at round 0,
+        so every round that wrote a seen delta also wrote its filter
+        delta (filters are a cache, and a missing delta would turn into
+        bloom false negatives whose rows bypass the exact anti-join)."""
+        base_round = self.store.meta(upto_round).get("filters_base_round")
+        base_round = -1 if base_round is None else base_round
         parts = []
-        if base_round >= 0 and self.store.exists("seen_filters_base", base_round):
+        if base_round >= 0:
             parts.append(self.store.read_snapshot(self.spark, "seen_filters_base", base_round))
-        missing = []
-        for r in self.store.committed_rounds():
-            if base_round < r <= upto_round:
-                if self.store.exists("seen_filters", r):
-                    parts.append(self.store.read_snapshot(self.spark, "seen_filters", r))
-                elif self.store.exists("seen", r):
-                    missing.append(r)
-        if missing:
-            gap = _union([self.store.read_snapshot(self.spark, "seen", r) for r in missing])
-            lay = self._layout()
-            parts.append(
-                build_filter_delta_df(
-                    gap, lay.bloom, lay.bloom_m_bits,
-                    subsplits=_BLOOM_REBUILD_SUBSPLITS,
-                )
-            )
+        parts += [
+            self.store.read_snapshot(self.spark, "seen_filters", r)
+            for r in range(base_round + 1, upto_round + 1)
+            if self.store.exists("seen_filters", r)
+        ]
         return _union(parts)
 
     # ------------------------------------------------------------ round ---
@@ -1176,21 +1122,36 @@ class CrawlEngine:
         self, r: int, prev_meta: dict, pending: DataFrame, remaining: int | None
     ) -> tuple[DataFrame, bool, tuple[dict, dict] | None, dict]:
         """Round r's dequeue, from the pruned pending read when the
-        per-bucket bounds allow it. Returns (dequeued rows, whether they
-        are cached — the caller unpersists after the fetch, the bounds
-        the round started from, prune info)."""
+        per-bucket bounds allow it (priority-stat bucket pruning,
+        VERDICT r3 item 2). With a global capacity (round_capacity /
+        max_pages remainder) the dequeue keeps only the top-capacity
+        rows, so a round need not READ pending buckets that cannot
+        reach the cutoff. The commit meta carries per-bucket upper
+        bounds (max priority / row count: exact at fold time,
+        max/sum-updated with each round's delta, removals ignored —
+        stale-high is still a sound bound). The round assembles the
+        maxp-ranked bucket prefix holding ≥ _PENDING_PRUNE_SLACK ×
+        capacity candidate rows, dequeues it, and accepts iff the
+        result is FULL and its minimum selected priority strictly beats
+        every skipped bucket's bound — sound because pbucket is a pure
+        function of host, so per-host budget ranks are bucket-local.
+        Anything else falls back to the full read (counted in
+        prune_fallback), so the per-round read is O(contributing
+        buckets) in the capacity-bound regime and never wrong outside
+        it. Returns (dequeued rows, whether they are cached — the
+        caller unpersists after the fetch, the bounds the round started
+        from, prune info)."""
         cfg = self.cfg
         stats = self._pending_stats_of(prev_meta)
         info = {"buckets_read": None, "prune_fallback": 0}
-        if cfg.pending_prune and remaining is not None and stats is None:
+        if remaining is not None and stats is None:
             # bootstrap (the store's last commit was uncapacitated, so it
             # carries no bounds): one full-frontier agg this round;
             # every later round prunes off the maintained bounds
             stats = self._bucket_stats(pending)
             info["refreshed"] = True  # bootstrap IS a refresh
         if (
-            cfg.pending_prune
-            and remaining is not None
+            remaining is not None
             and 0 < remaining < prev_meta["pending"]  # full drain needs every bucket
             and stats is not None
             # supply-limited regime (post-budget eligible rows < the
@@ -1266,14 +1227,14 @@ class CrawlEngine:
         # persist: the bloom split consumes `tagged` twice (fresh +
         # suspects) — without the cache the extract/dedupe pipeline
         # runs twice per round
-        if self._table_probe():
-            lay = self._layout()
+        lay = self._layout()
+        if lay.bloom_table_probe:
             tagged = bloom_probe_cogroup(
                 cands, self._read_filters(r - 1), lay.bloom, lay.bloom_m_bits
             ).persist()
         else:
             self._ensure_bloom(r - 1)
-            tagged = bloom_partition_df(cands, bc=self._bloom_broadcast()).persist()
+            tagged = bloom_partition_df(cands, self._bloom_broadcast()).persist()
         fresh = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
         raw_suspects = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
         # exact-probe read: once the crawl is large, prune the seen
@@ -1293,7 +1254,7 @@ class CrawlEngine:
         if fetched_total >= cfg.seen_prune_min_total:
             sb_counts = self._suspect_bucket_counts(raw_suspects)
             bf = sorted(sb_counts)
-            small_suspects = 0 < sum(sb_counts.values()) <= cfg.suspect_broadcast_max
+            small_suspects = 0 < sum(sb_counts.values()) <= _SUSPECT_BROADCAST_MAX
         if small_suspects:
             suspects = seen_anti_join(raw_suspects, self._read_seen(r - 1, bf))
         else:
@@ -1361,8 +1322,8 @@ class CrawlEngine:
         a persisted filter delta in table-probe mode, else an OR into the
         driver-held filters once they exist."""
         delta = self.store.read_snapshot(self.spark, "seen", r)
-        if self._table_probe():
-            lay = self._layout()
+        lay = self._layout()
+        if lay.bloom_table_probe:
             self.store.append(
                 # subsplits: a high-discovery round's delta (or a 10^8-row
                 # seed list) is bounded only by the frontier, not by
@@ -1429,7 +1390,7 @@ class CrawlEngine:
                 k: prev_meta[k]
                 for k in ("pending_manifest", "pending_folded", "pending_bucket_rows",
                           *_SEEN_CARRY, "pending_bucket_maxp", "pending_bucket_cnt_ub",
-                          "pending_stats_refresh_round")
+                          "pending_stats_refresh_round", "filters_base_round")
                 if prev_meta.get(k) is not None
             }
             store.commit(r, {"fetched_total": fetched_total, "pending": prev_pending_n,
@@ -1670,7 +1631,8 @@ class CrawlEngine:
         """Per-round crawl metrics from the commit markers (observed
         during the writes — zero extra jobs at crawl time): fetched,
         ok_200, redirects, errors, images_decoded, sum_resp_ms, plus
-        frontier accounting. The ops-dashboard twin of crawl_monitor."""
+        frontier accounting and the round's ``phases`` wall seconds. The
+        ops-dashboard twin of crawl_monitor."""
         rows = []
         for r in self.store.committed_rounds():
             if r == 0:
@@ -1688,12 +1650,14 @@ class CrawlEngine:
                     "sum_resp_ms": int(met.get("sum_resp_ms", 0)),
                     "pending_after": int(m.get("pending", 0)),
                     "pending_rewritten": int(m.get("pending_rewritten", 0)),
+                    "phases": {k: float(v) for k, v in m.get("phases", {}).items()},
                 }
             )
         schema = (
             "round int, fetched bigint, ok_200 bigint, redirects bigint, "
             "errors bigint, images_decoded bigint, sum_resp_ms bigint, "
-            "pending_after bigint, pending_rewritten bigint"
+            "pending_after bigint, pending_rewritten bigint, "
+            "phases map<string,double>"
         )
         return self.spark.createDataFrame(rows, schema=schema)
 

@@ -6,6 +6,7 @@ from nightcrawlercmd_spark.operators.bloomseen import (
     BloomConfig,
     PartitionedBloom,
     bloom_partition_df,
+    bloom_payload,
     build_filter_deltas,
     build_filter_rows_from_hashes,
 )
@@ -50,13 +51,17 @@ def test_probe_udf_matches_driver_probe(spark):
     df = spark.createDataFrame([(int(k),) for k in keys], "url_hash bigint")
     bloom.add_filter_rows(build_filter_deltas(df, cfg, m))
     probes = np.concatenate([keys[:500], _keys(500, 6)])
-    pdf = (
-        bloom_partition_df(
-            spark.createDataFrame([(int(k),) for k in probes], "url_hash bigint"), bloom
+    bc = spark.sparkContext.broadcast(bloom_payload(bloom))
+    try:
+        pdf = (
+            bloom_partition_df(
+                spark.createDataFrame([(int(k),) for k in probes], "url_hash bigint"), bc
+            )
+            .toPandas()
+            .sort_values("url_hash")
         )
-        .toPandas()
-        .sort_values("url_hash")
-    )
+    finally:
+        bc.destroy()
     want = bloom.maybe_contains(pdf["url_hash"].to_numpy())
     assert (pdf["maybe_seen"].to_numpy() == want).all()
 

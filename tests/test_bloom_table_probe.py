@@ -1,7 +1,8 @@
 """Co-partitioned bloom table probe (the 10^10-URL design-point path):
-forcing `bloom_table_probe=True` must reproduce the exact oracle seen
-set and crawl ordering with NO driver-held filters and NO broadcast,
-and the broadcast path must keep exactly one live generation."""
+a crawl whose round 0 picks the table probe (forced here by a zero
+broadcast budget) must reproduce the exact oracle seen set and crawl
+ordering with NO driver-held filters and NO broadcast, and the
+broadcast path must keep exactly one live generation."""
 
 import numpy as np
 
@@ -14,6 +15,7 @@ from nightcrawlercmd_spark.operators.bloomseen import (
     or_merge_filters_df,
 )
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
+from nightcrawlercmd_spark.streaming import engine
 from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig
 from nightcrawlercmd_spark.streaming.simulator import simulate
 
@@ -58,7 +60,9 @@ def test_cogroup_probe_matches_driver_probe(spark):
     assert (got2["maybe_seen"].to_numpy() == want).all()
 
 
-def test_table_probe_crawl_matches_oracle(spark, tmp_path_factory):
+def test_table_probe_crawl_matches_oracle(spark, tmp_path_factory, monkeypatch):
+    # any filter size exceeds a zero budget: round 0 pins the table probe
+    monkeypatch.setattr(engine, "_BLOOM_BROADCAST_MAX_BYTES", 0)
     state = str(tmp_path_factory.mktemp("crawl_state_tbl"))
     cfg = EngineConfig(
         state_dir=state,
@@ -66,12 +70,12 @@ def test_table_probe_crawl_matches_oracle(spark, tmp_path_factory):
         max_rounds=8,
         max_pages=120,
         fetch_tasks=8,
-        bloom_table_probe=True,  # force the co-partitioned path
         compact_seen_every=3,  # exercise filter compaction mid-crawl
         expected_urls=1 << 13,
     )
     eng = CrawlEngine(spark, cfg)
     eng.run()
+    assert eng.store.meta(0)["bloom_table_probe"] is True
     sim = simulate(WORLD, max_rounds=8, max_pages=120)
     got_log = [
         (r["round"], r["seq"], r["canon_url"], r["status_code"])
@@ -101,11 +105,11 @@ def test_broadcast_mode_single_live_generation(spark, tmp_path_factory):
         max_rounds=8,
         max_pages=120,
         fetch_tasks=8,
-        bloom_table_probe=False,
         expected_urls=1 << 13,
     )
     eng = CrawlEngine(spark, cfg)
     stats = eng.run()
+    assert eng.store.meta(0)["bloom_table_probe"] is False
     assert stats["rounds"] >= 3
     # one generation per round that probed (filters change each round),
     # but only the newest may be live

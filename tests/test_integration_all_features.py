@@ -6,6 +6,7 @@ sequential oracle. Features are individually tested elsewhere; this
 guards their interactions."""
 
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
+from nightcrawlercmd_spark.streaming import engine
 from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig
 from nightcrawlercmd_spark.streaming.simulator import simulate
 
@@ -14,7 +15,10 @@ FOLLOW = None
 DONT = ["admin"]
 
 
-def test_all_features_crawl_matches_oracle(spark, tmp_path):
+def test_all_features_crawl_matches_oracle(spark, tmp_path, monkeypatch):
+    # co-partitioned filter-table probe: round 0 pins it when the
+    # filters exceed the broadcast budget
+    monkeypatch.setattr(engine, "_BLOOM_BROADCAST_MAX_BYTES", 0)
     cfg = EngineConfig(
         state_dir=str(tmp_path / "all"),
         world=WORLD,
@@ -22,7 +26,6 @@ def test_all_features_crawl_matches_oracle(spark, tmp_path):
         round_capacity=40,
         fetch_tasks=8,
         n_salts=4,
-        bloom_table_probe=True,      # co-partitioned filter-table probe
         seen_buckets=8,
         seen_prune_min_total=0,      # bucket-pruned exact probe from round 1
         compact_seen_every=2,        # seen + filter compaction mid-crawl

@@ -122,7 +122,8 @@ def test_lineage_and_round_metrics_accessors(spark, tmp_path_factory):
     """north_rule: "per-partition lineage + metrics" — lineage() maps
     every pending bucket to the round that wrote its on-disk state and
     agrees with the commit manifest; round_metrics() carries the
-    write-time observed counters for every committed round."""
+    write-time observed counters and the phase seconds of every
+    committed round."""
     eng = _engine(spark, tmp_path_factory)
     store = eng.store
     last = store.last_round()
@@ -139,6 +140,7 @@ def test_lineage_and_round_metrics_accessors(spark, tmp_path_factory):
         m = store.meta(r)
         assert met[r]["fetched"] == m.get("fetched_round", 0)
         assert met[r]["pending_after"] == m.get("pending", 0)
+        assert met[r]["phases"] == m["phases"]
         # fetched = ok + redirects + errors partition (synthetic world
         # never 404s: every dequeued URL resolves or errors)
         assert (

@@ -2,9 +2,8 @@
 2): capacity-bound rounds assemble only the maxp-ranked bucket prefix
 that can reach the round's cutoff, verified sound per round (full
 capacity + min selected priority strictly above every skipped bucket's
-bound, falling back to the full read otherwise) — so the crawl is
-bit-identical with pruning on or off, matches the sequential oracle,
-and the per-round read is O(contributing buckets)."""
+bound, falling back to the full read otherwise) — so the crawl matches the
+sequential oracle, and the per-round read is O(contributing buckets)."""
 
 import dataclasses
 
@@ -74,19 +73,6 @@ def test_prune_bites_and_matches_oracle(spark, tmp_path_factory):
         r["canon_url"]: (r["first_round"], r["depth"]) for r in eng.seen().collect()
     }
     assert got_seen == sim.seen
-
-
-def test_prune_off_is_identical(spark, tmp_path_factory):
-    on = CrawlEngine(spark, _cfg(str(tmp_path_factory.mktemp("pr_a"))))
-    on.run()
-    off = CrawlEngine(
-        spark, _cfg(str(tmp_path_factory.mktemp("pr_b")), pending_prune=False)
-    )
-    off_stats = off.run()
-    assert _log(on) == _log(off)
-    assert all(
-        t["pending_buckets_read"] is None for t in off_stats["round_times"]
-    )
 
 
 def test_round_capacity_zero_terminates(spark, tmp_path_factory):

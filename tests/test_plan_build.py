@@ -1,11 +1,16 @@
 """Driver-side plan building: the ANN vector literals and the simhash /
 MinHash expression lists are built in one JVM call each (a numpy
-``lit``, ``F.expr`` strings). Each must give exactly the rows of its
-per-element Column-API form, kept here as the reference, on sf0.001."""
+``lit``, ``F.expr`` strings), and ``round6`` passes its constants as
+Python floats instead of ``F.lit`` columns. Each must give exactly the
+rows of its per-element Column-API form, kept here as the reference,
+on sf0.001."""
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from nightcrawlercmd_spark.functions.numeric import round6
 from nightcrawlercmd_spark.operators import annsearch as ANN
 from nightcrawlercmd_spark.operators import textops as T
 from nightcrawlercmd_spark.plans.queries import QUERIES
@@ -63,6 +68,25 @@ def _ref_bands(sig, n_hashes=8, band_size=2):
     return sig.select("doc_id", F.explode(F.array(*structs)).alias("band")).select(
         "doc_id", "band.band_id", "band.band_hash"
     )
+
+
+def _optimized_plan(df):
+    """The optimized logical plan without expression ids."""
+    return re.sub(r"#\d+", "", df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def test_round6_matches_lit_form(spark):
+    """``round6`` with Python-float constants folds to the same plan and
+    rows as its three-``F.lit`` form."""
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    x = F.col("l_extendedprice") * F.col("l_discount") / F.col("l_quantity")
+    got = li.select(round6(x).alias("r"))
+    want = li.select(
+        (F.floor(x * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("r")
+    )
+    assert _optimized_plan(got) == _optimized_plan(want)
+    assert _rows(got) == _rows(want)
+    assert got.count() > 0
 
 
 def test_simhash_expr_matches_column_form(docs):

@@ -75,11 +75,14 @@ def test_rows_only_queries_run(spark):
         ("multimodal_decode", "decode_ok"),
         ("multimodal_thumbs", "thumb_ok"),
         ("video_frames", "frame_ok"),
+        ("crawl_e2e", "matches_oracle"),
+        ("audio_features", "audio_ok"),
     ],
 )
 def test_self_validating_media_queries_pass(spark, name, flag):
-    """The media queries have no DuckDB oracle; each row carries its own
-    check against an independent re-derivation, which must hold on
+    """The media queries and the crawl query have no DuckDB oracle; each
+    row carries its own check against an independent re-derivation
+    (the crawl's against the sequential simulator), which must hold on
     every row."""
     flags = [r[flag] for r in entrymod.queries()[name](spark, SF).select(flag).collect()]
     assert flags, name

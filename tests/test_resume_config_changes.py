@@ -1,14 +1,17 @@
 """Config changes across resume must not corrupt the seen set.
 
 The bloom filters are a *cache* of the seen table; every path that
-consults them must either use the geometry they were built with
-(pinned in round-0 meta) or rebuild from the exact rows. These tests
-stop a crawl mid-way, resume with changed bloom geometry / probe mode,
-and require the exact oracle crawl log and seen set — a
-single bloom false negative would surface as a duplicate fetch here."""
+consults them must use the geometry and probe mode they were built
+with (both pinned in round-0 meta). These tests stop a crawl mid-way,
+resume with changed bloom geometry / pending buckets, and require the
+exact oracle crawl log and seen set — a single bloom false negative
+would surface as a duplicate fetch here."""
+
+import pytest
 
 from nightcrawlercmd_spark.operators.bloomseen import BloomConfig
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
+from nightcrawlercmd_spark.streaming import engine
 from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig
 from nightcrawlercmd_spark.streaming.simulator import simulate
 
@@ -45,67 +48,31 @@ def _cfg(state, **kw):
 def test_resume_with_changed_bloom_geometry(spark, tmp_path_factory):
     """Table-probe resume with a different partitions/k must keep using
     the pinned build-time geometry — probing old blobs with a new
-    modulus would produce false negatives that bypass the exact probe."""
+    modulus would produce false negatives that bypass the exact probe —
+    and the pinned probe mode: the resume's broadcast budget would pick
+    broadcast mode for a fresh store of this size, but the first run's
+    rounds persisted filter deltas, so it keeps probing the table."""
     state = str(tmp_path_factory.mktemp("rcfg_geom"))
     first = _cfg(
         state,
         max_rounds=3,
-        bloom_table_probe=True,
         bloom=BloomConfig(partitions=4, bits_per_key=12, k=5),
         compact_seen_every=0,
     )
-    CrawlEngine(spark, first).run()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(engine, "_BLOOM_BROADCAST_MAX_BYTES", 0)
+        CrawlEngine(spark, first).run()
     second = _cfg(
         state,
-        bloom_table_probe=True,
         bloom=BloomConfig(partitions=8, bits_per_key=10, k=7),  # changed
         compact_seen_every=3,
     )
     eng = CrawlEngine(spark, second)
     assert eng._layout().bloom.partitions == 4  # pinned, not the new config
     assert eng._layout().bloom.k == 5
+    assert eng._layout().bloom_table_probe is True  # pinned, not re-decided
     eng.run()
-    _assert_oracle_parity(eng)
-
-
-def test_resume_broadcast_then_table_probe(spark, tmp_path_factory):
-    """Broadcast-mode rounds persist no filter deltas; a later
-    table-probe resume must heal the empty filter table from the seen
-    rows (in memory — never writing into committed round dirs)."""
-    state = str(tmp_path_factory.mktemp("rcfg_mode"))
-    CrawlEngine(
-        spark, _cfg(state, max_rounds=3, bloom_table_probe=False, compact_seen_every=0)
-    ).run()
-    store_dirs_before = sorted(
-        d for d in __import__("os").listdir(state) if d.startswith("seen_filters")
-    )
-    assert store_dirs_before == []  # broadcast mode wrote no filter dirs
-    eng = CrawlEngine(
-        spark, _cfg(state, bloom_table_probe=True, compact_seen_every=3)
-    )
-    eng.run()
-    _assert_oracle_parity(eng)
-    # the catch-up was folded into a persisted base by compaction
-    last = eng.store.last_round()
-    assert eng.store.meta(last).get("filters_base_round") is not None
-
-
-def test_resume_with_bloom_gap_rounds(spark, tmp_path_factory):
-    """Rounds executed in broadcast mode between table-probe rounds
-    leave a gap in the filter table; a later table-probe resume must cover those rounds' seen
-    rows via the catch-up delta, not treat the stale filters as
-    complete."""
-    state = str(tmp_path_factory.mktemp("rcfg_gap"))
-    CrawlEngine(
-        spark, _cfg(state, max_rounds=2, bloom_table_probe=True, compact_seen_every=0)
-    ).run()
-    CrawlEngine(
-        spark, _cfg(state, max_rounds=5, bloom_table_probe=False, compact_seen_every=0)
-    ).run()
-    eng = CrawlEngine(
-        spark, _cfg(state, bloom_table_probe=True, compact_seen_every=0)
-    )
-    eng.run()
+    assert eng._bc_generations == 0
     _assert_oracle_parity(eng)
 
 

@@ -2,6 +2,7 @@
 round and compaction must never lose a URL (dedupe stays exact)."""
 
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
+from nightcrawlercmd_spark.streaming import engine
 from nightcrawlercmd_spark.streaming.engine import (
     SEEN_KEY_BUCKETS,
     CrawlEngine,
@@ -167,19 +168,19 @@ def test_incremental_seen_compaction_mixed_manifest(spark, tmp_path):
     assert {r["canon_url"] for r in eng.seen().collect()} == set(sim.seen)
 
 
-def test_large_suspect_probe_storage_partitioned_exact(spark, tmp_path):
-    """Force the LARGE-suspect regime (suspect_broadcast_max=0 disables
+def test_large_suspect_probe_storage_partitioned_exact(spark, tmp_path, monkeypatch):
+    """Force the LARGE-suspect regime (_SUSPECT_BROADCAST_MAX=0 disables
     the broadcast-inverted form; seen_prune_min_total=0 forces the
     pruned probe from round 1): once the first fold writes a keyed base,
     the exact probe must run the storage-partitioned chain
     (seen_probe_parts) — and the crawl log + seen set must still match
     the sequential oracle exactly."""
+    monkeypatch.setattr(engine, "_SUSPECT_BROADCAST_MAX", 0)
     eng = CrawlEngine(
         spark,
         EngineConfig(state_dir=str(tmp_path / "lp"), world=WORLD, max_rounds=9,
                      fetch_tasks=4, compact_seen_every=2,
-                     seen_buckets=8, seen_prune_min_total=0,
-                     suspect_broadcast_max=0),
+                     seen_buckets=8, seen_prune_min_total=0),
     )
     stats = eng.run()
     sim = simulate(WORLD, max_rounds=9, default_budget=4)

@@ -14,6 +14,7 @@ import pytest
 
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
 from nightcrawlercmd_spark.sources.tableio import StateStore, read_parquet_file
+from nightcrawlercmd_spark.streaming import engine
 from nightcrawlercmd_spark.streaming.engine import (
     CrawlEngine,
     EngineConfig,
@@ -60,11 +61,13 @@ def crawled(spark, tmp_path_factory):
         spark,
         EngineConfig(
             state_dir=d, world=WORLD, max_rounds=4, max_pages=60, fetch_tasks=4,
-            expected_urls=1 << 12, bloom_table_probe=True,
-            compact_seen_every=2, pending_compact_every=2,
+            expected_urls=1 << 12, compact_seen_every=2, pending_compact_every=2,
         ),
     )
-    eng.run()
+    with pytest.MonkeyPatch.context() as mp:
+        # a zero broadcast budget makes round 0 pin the table probe
+        mp.setattr(engine, "_BLOOM_BROADCAST_MAX_BYTES", 0)
+        eng.run()
     _CACHE_AROUND_RUN["after"] = _cache_empty(spark)
     return eng
 
