@@ -11,6 +11,7 @@ the build made.
 Usage:
   python bench_extra.py queries [--reps N] [--plans DIR] [--queries a,b,c]
   python bench_extra.py crawl  [--cpus N] [--rounds N] [--world bench|mid]
+  python bench_extra.py pytask
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32).
@@ -141,6 +142,56 @@ def run_crawl_profile(args) -> None:
     print(json.dumps({"wall": round(time.time() - t0, 2), **res}))
 
 
+def run_pytask() -> None:
+    """Fixed cost of a Python task, as the median of 5 in one session:
+    an 8-task identity ``mapInPandas`` at 8 and at 40,000 rows, its
+    JVM-only equivalent, and the seconds one task's worker spends in
+    ``importlib.invalidate_caches()`` (pyspark calls it every task)."""
+    import statistics
+
+    from nightcrawlercmd_spark.session import get_spark
+
+    spark = get_spark(app="ncs-bench-pytask", cpus=CPUS, shuffle_partitions=max(8, CPUS))
+
+    def identity(batches):
+        yield from batches
+
+    def invalidate_s(batches):
+        import importlib
+
+        import pandas as pd
+
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        seconds = time.perf_counter() - t0
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"s": [seconds]})
+
+    def median_s(make_df) -> float:
+        samples = []
+        for _ in range(5):
+            t0 = time.perf_counter()
+            make_df().write.format("noop").mode("overwrite").save()
+            samples.append(time.perf_counter() - t0)
+        return round(statistics.median(samples), 3)
+
+    def rows(n):
+        return spark.range(n, numPartitions=8)
+
+    # the first Python job starts the worker daemon; keep it out of the samples
+    rows(8).mapInPandas(identity, "id long").collect()
+    out = {
+        "identity_8_rows_s": median_s(lambda: rows(8).mapInPandas(identity, "id long")),
+        "identity_40000_rows_s": median_s(lambda: rows(40_000).mapInPandas(identity, "id long")),
+        "jvm_only_40000_rows_s": median_s(lambda: rows(40_000).select("id")),
+    }
+    task_s = [r.s for _ in range(5) for r in rows(8).mapInPandas(invalidate_s, "s double").collect()]
+    out["invalidate_caches_s_per_task"] = round(statistics.median(task_s), 4)
+    print(json.dumps(out))
+    spark.stop()
+
+
 def main() -> None:
     p = argparse.ArgumentParser()
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -153,9 +204,12 @@ def main() -> None:
     c.add_argument("--cpus", type=int, default=CPUS)
     c.add_argument("--rounds", type=int, default=3)
     c.add_argument("--world", choices=["bench", "mid"], default="bench")
+    sub.add_parser("pytask")
     args = p.parse_args()
     if args.cmd == "queries":
         run_queries(args)
+    elif args.cmd == "pytask":
+        run_pytask()
     else:
         run_crawl_profile(args)
 

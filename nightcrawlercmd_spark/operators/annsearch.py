@@ -13,7 +13,8 @@ results are bit-identical and oracle-checkable.
 
 from __future__ import annotations
 
-import numpy as np
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -21,11 +22,16 @@ from ..functions.numeric import round6
 
 
 def _vec(v) -> Column:
-    """``array<double>`` literal built in one ``lit`` call: an
-    ``F.array`` of per-element ``F.lit``s costs about four py4j round
-    trips per element on the driver, the numpy form two; the optimized
-    plan holds the same folded array literal either way."""
-    return F.lit(np.asarray(v, dtype=np.float64))
+    """``array<double>`` literal parsed from one SQL string, so it costs
+    a few py4j round trips in all: an ``F.array`` of per-element
+    ``F.lit``s costs about four per element on the driver, a numpy
+    ``lit`` two. ``repr`` round-trips every finite double exactly, and
+    the optimized plan holds the same folded array literal as either
+    form; SQL has no non-finite double literal, so those are refused."""
+    xs = [float(x) for x in v]
+    if not all(math.isfinite(x) for x in xs):
+        raise ValueError("vector literal holds a non-finite value")
+    return F.expr(f"cast(array({', '.join(f'{x!r}D' for x in xs)}) as array<double>)")
 
 
 def _dot(a, b):

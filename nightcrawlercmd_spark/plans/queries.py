@@ -1443,9 +1443,12 @@ def q_crawl_e2e(spark, sf):
     that invokes the query twice (count pass + hash pass) resumes the
     committed state instead of re-crawling and leaking orphan dirs
     (ADVICE r1). ``_STATE_VERSION`` salts the path so a semantics
-    change can never replay stale state.
+    change can never replay stale state; the stores of other versions
+    are deleted first, so a bump does not leave the old one behind.
     """
+    import glob
     import os
+    import shutil
 
     from ..sources.corpus import WorldConfig
     from ..streaming.engine import CrawlEngine, EngineConfig, STATE_VERSION
@@ -1453,8 +1456,12 @@ def q_crawl_e2e(spark, sf):
 
     world = WorldConfig(n_hosts=4, base_pages=8, hot_factor=3, tag="drv")
     base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    state_dir = os.path.join(base, f"ncs_drv_{world.tag}_v{STATE_VERSION}")
+    for stale in glob.glob(os.path.join(base, f"ncs_drv_{world.tag}_v[0-9]*")):
+        if stale != state_dir:
+            shutil.rmtree(stale, ignore_errors=True)
     cfg = EngineConfig(
-        state_dir=os.path.join(base, f"ncs_drv_{world.tag}_v{STATE_VERSION}"),
+        state_dir=state_dir,
         world=world,
         max_rounds=4,
         max_pages=48,

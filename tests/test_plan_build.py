@@ -1,6 +1,6 @@
 """Driver-side plan building: the ANN vector literals and the simhash /
-MinHash expression lists are built in one JVM call each (a numpy
-``lit``, ``F.expr`` strings), and ``round6`` passes its constants as
+MinHash expression lists are built in one JVM call each (``F.expr``
+strings), and ``round6`` passes its constants as
 Python floats instead of ``F.lit`` columns. Each must give exactly the
 rows of its per-element Column-API form, kept here as the reference,
 on sf0.001."""
@@ -117,6 +117,20 @@ def test_minhash_expr_matches_column_form(docs):
     pairs = T.minhash_lsh_pairs(docs, n_hashes=8, band_size=2)
     assert _rows(pairs) == _rows(ref_pairs)
     assert pairs.count() > 0
+
+
+def test_ann_vector_literal_plan_matches_numpy_literal(spark):
+    """The SQL-string vector folds to the numpy ``lit``'s literal, bit
+    for bit, signed zero and subnormals included."""
+    import numpy as np
+
+    v = [0.1, -0.0, 0.0, 1 / 3, 5e-324, -1e300, 123456789.125, 2.5e-8]
+    got = spark.range(1).select(ANN._vec(v).alias("q"))
+    want = spark.range(1).select(F.lit(np.asarray(v, dtype=np.float64)).alias("q"))
+    assert got.schema == want.schema
+    assert _optimized_plan(got) == _optimized_plan(want)
+    with pytest.raises(ValueError):
+        ANN._vec([1.0, float("nan")])
 
 
 @pytest.mark.parametrize(

@@ -4,6 +4,8 @@ parquet (sf0.001 here for speed; the driver uses sf0.01), compare
 row count, column names, and order-insensitive values."""
 
 import math
+import os
+import tempfile
 
 import duckdb
 import pytest
@@ -83,10 +85,18 @@ def test_self_validating_media_queries_pass(spark, name, flag):
     """The media queries and the crawl query have no DuckDB oracle; each
     row carries its own check against an independent re-derivation
     (the crawl's against the sequential simulator), which must hold on
-    every row."""
+    every row. The crawl query also deletes the store a previous
+    ``STATE_VERSION`` left behind."""
+    stale = None
+    if name == "crawl_e2e":
+        base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+        stale = os.path.join(base, "ncs_drv_drv_v1")
+        os.makedirs(stale, exist_ok=True)
     flags = [r[flag] for r in entrymod.queries()[name](spark, SF).select(flag).collect()]
     assert flags, name
     assert all(f is True for f in flags), (name, flags.count(False), len(flags))
+    if stale is not None:
+        assert not os.path.exists(stale)
 
 
 def test_entry_smoke(spark):
