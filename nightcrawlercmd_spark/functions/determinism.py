@@ -21,12 +21,6 @@ def h64(*parts: object) -> int:
     return int.from_bytes(hashlib.blake2b(s, digest_size=8).digest(), "little")
 
 
-def h64s(*parts: object) -> int:
-    """Signed 64-bit variant (matches Spark BIGINT range)."""
-    v = h64(*parts)
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
 def hchoice(seq, *parts: object):
     """Deterministically pick one element of ``seq`` keyed on parts."""
     return seq[h64(*parts) % len(seq)]

@@ -12,8 +12,6 @@ from __future__ import annotations
 import html as _html
 import re
 
-import pandas as pd
-
 # quote handling backreferences the OPENING quote — ["']...["'] would
 # let a value containing the other quote char terminate early
 # (href="/q?x=o'brien" must not truncate at the apostrophe); the
@@ -120,13 +118,3 @@ def html_to_text(body) -> str:
     """Tag-strip + entity decode + whitespace collapse (O29)."""
     txt = _TAG_RE.sub(" ", _as_text(body))
     return _WS_RE.sub(" ", _html.unescape(txt)).strip()
-
-
-# ---- vectorized forms ------------------------------------------------------
-
-def extract_hrefs_series(bodies: pd.Series) -> pd.Series:
-    return bodies.map(extract_hrefs)
-
-
-def html_to_text_series(bodies: pd.Series) -> pd.Series:
-    return bodies.map(html_to_text)

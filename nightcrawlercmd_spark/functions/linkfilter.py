@@ -1,21 +1,22 @@
 """Follow / don't-follow link filters (SURVEY.md O20/O40).
 
-Reference semantics (/root/reference/mainCrawler.go:175-216):
+Reference semantics (reference mainCrawler.go:175-216):
 
 * ``-follow``  → keep a link only if it contains ALL the given
   substrings (``containsAllText``);
 * ``-dont-follow`` → drop a link if it contains ANY of the given
   substrings (``containsAnyText``);
-* a link survives iff ``matchFollow && !matchDontFollow`` — which in
-  the reference means a *dont-follow-only* configuration drops every
-  link (matchFollow is false when no follow list is set). That reads
-  like a latent bug, so it is reproduced only under ``strict=True``;
-  the default treats an absent follow list as match-all, making
-  dont-follow usable as a plain blacklist.
+* a link survives iff ``matchFollow && !matchDontFollow``.
+
+Two documented deltas from the reference (SURVEY.md O40):
+
+* a *dont-follow-only* configuration acts as a plain blacklist: an
+  absent follow list matches every link. The reference drops every
+  link there (matchFollow is false when no follow list is set), which
+  reads like a latent bug;
 * with NO filters configured the reference hits its nil-slice ``copy``
   quirk (mainCrawler.go:198 copies into a nil slice → enqueues
-  nothing); that is deliberately NOT reproduced — no filters means no
-  filtering (documented delta, SURVEY.md O40).
+  nothing); here no filters means no filtering.
 
 Filters apply to the RAW href text before base-resolution, exactly
 where the reference applies them (page.RespInfo.Hrefs entries).
@@ -34,16 +35,9 @@ def href_passes(
     href: str,
     follow: list[str] | None,
     dont_follow: list[str] | None,
-    strict: bool = False,
 ) -> bool:
-    has_f = bool(follow)
-    has_d = bool(dont_follow)
-    if not has_f and not has_d:
-        return True
-    match_f = has_f and all(s in href for s in follow)
-    if not has_f and not strict:
-        match_f = True
-    match_d = has_d and any(s in href for s in dont_follow)
+    match_f = not follow or all(s in href for s in follow)
+    match_d = bool(dont_follow) and any(s in href for s in dont_follow)
     return match_f and not match_d
 
 
@@ -51,8 +45,7 @@ def filter_hrefs(
     hrefs: list[str],
     follow: list[str] | None,
     dont_follow: list[str] | None,
-    strict: bool = False,
 ) -> list[str]:
     if not follow and not dont_follow:
         return hrefs
-    return [h for h in hrefs if href_passes(h, follow, dont_follow, strict)]
+    return [h for h in hrefs if href_passes(h, follow, dont_follow)]

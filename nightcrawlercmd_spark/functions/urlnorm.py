@@ -31,8 +31,6 @@ import string
 from functools import lru_cache
 from urllib.parse import urlsplit, urlunsplit, urljoin
 
-import pandas as pd
-
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 _UNRESERVED = set(string.ascii_letters + string.digits + "-._~")
 _PCT_RE = re.compile(r"%([0-9A-Fa-f]{2})")
@@ -230,16 +228,3 @@ def host_of(canon_url: str) -> str:
     if authority.startswith("["):  # IPv6 literal: [::1] or [::1]:8080
         return authority[1 : authority.index("]")]
     return authority.rsplit(":", 1)[0] if ":" in authority else authority
-
-
-
-# ---- vectorized (pandas) forms, used inside Spark UDFs --------------------
-
-def canonicalize_series(urls: pd.Series) -> pd.Series:
-    return urls.map(canonicalize)
-
-
-def resolve_series(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [resolve(b, h) for b, h in zip(bases, hrefs)], index=bases.index, dtype=object
-    )

@@ -144,6 +144,22 @@ class PartitionedBloom:
         return out
 
 
+# bits of one partition filter partitions_for stays within (16 MB: the
+# largest blob one table-probe task holds)
+MAX_PARTITION_BITS = 1 << 27
+
+
+def partitions_for(expected_keys: int) -> int:
+    """Bloom partition count for ``expected_keys``: the smallest power
+    of two ≥ the BloomConfig() default (16) whose ``size_for`` filters,
+    at the default bits per key, each hold ≤ MAX_PARTITION_BITS. 16 up
+    to ~1.8e8 keys; 1,024 filters of 16 MB at 10^10."""
+    p = BloomConfig().partitions
+    while PartitionedBloom.size_for(expected_keys, BloomConfig(p)) > MAX_PARTITION_BITS:
+        p *= 2
+    return p
+
+
 def build_filter_delta_df(
     df: DataFrame,
     cfg: BloomConfig,

@@ -159,7 +159,6 @@ def fetch_stage(
     decode_images: bool = False,
     follow: list[str] | None = None,
     dont_follow: list[str] | None = None,
-    strict_filters: bool = False,
     http_endpoint: str | None = None,
     no_new_links: bool = False,
     load_resources: bool = False,
@@ -239,9 +238,7 @@ def fetch_stage(
                     # body, so missing/odd Content-Type still scans;
                     # only load_resources' fetched image payloads skip
                     # the regex pass. simulator.py gates identically
-                    hrefs = filter_hrefs(
-                        extract_hrefs(r["body"]), follow, dont_follow, strict_filters
-                    )
+                    hrefs = filter_hrefs(extract_hrefs(r["body"]), follow, dont_follow)
                     if load_resources:
                         # unfiltered, appended after the href filters
                         # (mainCrawler.go:191-196)

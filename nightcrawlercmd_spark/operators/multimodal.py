@@ -197,49 +197,3 @@ def audio_features(audio: DataFrame, n_tasks: int = 32) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return audio.repartition(n_tasks).mapInPandas(run, schema=AUDIO_SCHEMA)
-
-
-def phash_near_dupes(images: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Near-duplicate images by perceptual-hash Hamming distance with a
-    FULL recall guarantee: the 64 phash bits are cut into
-    ``max_hamming + 1`` disjoint bands and the self-join fires on ANY
-    matching band — by pigeonhole, a pair with ≤ max_hamming differing
-    bits has at least one band with zero diffs, so no qualifying pair
-    can be missed (a single top-16-bit block would drop any pair whose
-    flips touch those bits). Still bucketed, never quadratic: each
-    band join only collides same-band-value rows; the exact bit_count
-    filter re-ranks candidates and distinct() removes multi-band hits."""
-    from pyspark.sql import functions as F
-
-    n_bands = max_hamming + 1
-    width = 64 // n_bands
-    bands = []
-    for i in range(n_bands):
-        lo = i * width
-        w = 64 - lo if i == n_bands - 1 else width  # last band takes the tail
-        mask = (1 << w) - 1
-        bands.append(
-            F.struct(
-                F.lit(i).alias("band_id"),
-                F.expr(f"(phash >> {lo}) & {mask}").alias("band_val"),
-            )
-        )
-    blocked = images.select(
-        "image_id", "phash", F.explode(F.array(*bands)).alias("band")
-    ).select("image_id", "phash", "band.band_id", "band.band_val")
-    a, b = blocked.alias("a"), blocked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.image_id") < F.col("b.image_id")),
-        )
-        .select(
-            F.col("a.image_id").alias("image_a"),
-            F.col("b.image_id").alias("image_b"),
-            F.bit_count(F.expr("a.phash ^ b.phash")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )

@@ -6,6 +6,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding this package, which the Python workers import
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app: str = "nightcrawlercmd-spark",
@@ -18,9 +21,18 @@ def get_spark(
     (``spark.python.daemon.module``), pyspark's daemon with stat-checked
     zip directory caching, so a Python task no longer re-reads
     ``pyspark.zip``, py4j and the spark-core jar. The workers must
-    therefore import this package, as every engine UDF already requires.
+    therefore import this package, as every engine UDF already requires:
+    when the inherited ``PYTHONPATH`` (which the workers get) lacks the
+    package's parent directory, it goes first on theirs, so a driver
+    started from any directory works.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
+    inherited = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    worker_env = (
+        {}
+        if _PACKAGE_PARENT in map(os.path.abspath, inherited)
+        else {"spark.executorEnv.PYTHONPATH": os.pathsep.join([_PACKAGE_PARENT, *inherited])}
+    )
     want = f"local[{cpus}]"
     # getOrCreate() silently reuses ANY live session and ignores the
     # requested master/configs — a bench leg asking for local[2] while
@@ -61,6 +73,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.daemon.module", "nightcrawlercmd_spark.pydaemon")
+        .config(map=worker_env)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("NCS_DRIVER_MEM", "8g"))

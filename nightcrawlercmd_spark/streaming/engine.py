@@ -54,7 +54,7 @@ from __future__ import annotations
 
 import time
 from contextlib import contextmanager
-from dataclasses import asdict, dataclass, field, fields
+from dataclasses import asdict, dataclass, fields
 from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -70,6 +70,7 @@ from ..operators.bloomseen import (
     build_filter_deltas,
     build_filter_rows_from_hashes,
     or_merge_filters_df,
+    partitions_for,
 )
 from ..operators.dequeue import dequeue
 from ..operators.fetch import fetch_stage
@@ -135,6 +136,10 @@ _PENDING_PRUNE_SLACK = 4.0
 # incremental compaction cohorts: a dirty bucket is folded at least once
 # per this many compactions, bounding its watermark lag (pending and seen)
 _COMPACT_MAX_LAG = 4
+# seen_base is written partitioned by sbucket = url_hash mod this;
+# round-0 meta pins it (_layout), so a resume keeps the build-time
+# modulus
+SEEN_BUCKETS = 64
 # key-hash buckets per sbucket dir of a seen_base fold (the Iceberg
 # bucket(N, key) transform analog, tableio.write_keyed_bucketed). Each
 # fold round records its value in commit meta (seen_base_layout) and
@@ -188,17 +193,17 @@ class EngineConfig:
     # -dont-follow, mainCrawler.go:175-216; see functions/linkfilter.py)
     follow: list[str] | None = None
     dont_follow: list[str] | None = None
-    strict_reference_filters: bool = False
     # real-HTTP mode (O13 fixture / deployment seam): "host:port" of a
     # WorldHTTPServer (or any virtual-hosting endpoint); None = the
     # deterministic in-process responder
     http_endpoint: str | None = None
     compact_seen_every: int = 8  # consolidate seen deltas every K rounds
+    # sizes the bloom filters (partition count: bloomseen.partitions_for;
+    # bits per key and k: the BloomConfig() defaults), which round 0
+    # pins with the probe mode they imply (_layout: the seen_filters
+    # table probe beyond _BLOOM_BROADCAST_MAX_BYTES of filters, a
+    # broadcast below)
     expected_urls: int = 1 << 17
-    # bloom geometry; with expected_urls it also fixes the probe mode
-    # at round 0 (_layout: the seen_filters table probe beyond
-    # _BLOOM_BROADCAST_MAX_BYTES of filters, a broadcast below)
-    bloom: BloomConfig = field(default_factory=BloomConfig)
     # pending is merge-on-read (Iceberg equality-delete / LSM analog):
     # per round NOTHING extra is written — pending(r) assembles from the
     # last compacted bucket base ∪ the seen deltas since ∖ the fetched
@@ -222,25 +227,13 @@ class EngineConfig:
     # window to _COMPACT_MAX_LAG × the table's cadence
     # (pending_compact_every / compact_seen_every) rounds.
     compact_dirty_frac: float = 0.1
-    # drift guard (ADVICE r2): n_pending is arithmetic
-    # (prev - fetched + new), which silently relies on fetch emitting
-    # exactly one row per dequeued row and enqueue deduping within the
-    # round. Every K rounds (0 = off) the engine counts the assembled
-    # pending table and raises if it disagrees — any future code drift
-    # corrupting the frontier count that drives stop detection fails
-    # loudly instead of stopping the crawl early/late.
-    pending_reconcile_every: int = 0
-    # seen_base is written partitioned by sbucket = url_hash mod
-    # seen_buckets; once fetched_total exceeds seen_prune_min_total the
-    # per-round exact anti-join reads ONLY the partitions holding the
+    # once fetched_total exceeds this, the per-round exact anti-join
+    # reads ONLY the sbucket partitions (SEEN_BUCKETS) holding the
     # round's bloom-positive suspects (partition-pruned scan) instead
     # of the whole seen table. Below the threshold the extra
     # bucket-list job isn't worth its fixed cost (the table is tiny);
     # at the 10^10 design point the pruned read is the difference
     # between O(suspect buckets) and O(all history) I/O per round.
-    # seen_buckets, like pending_buckets, is PINNED in round-0 meta
-    # (_layout): a resume keeps the build-time modulus.
-    seen_buckets: int = 64
     seen_prune_min_total: int = 5_000_000
     # state-table backend: "parquet" (this sandbox — Iceberg contract
     # emulated on files, tableio.py) or "iceberg" (real catalog,
@@ -501,12 +494,12 @@ class CrawlEngine:
                 m = self.store.meta(0)
             except FileNotFoundError:
                 cfg = self.cfg
-                m_bits = PartitionedBloom.size_for(cfg.expected_urls, cfg.bloom)
+                bloom = BloomConfig(partitions_for(cfg.expected_urls))
+                m_bits = PartitionedBloom.size_for(cfg.expected_urls, bloom)
                 return _Layout(
-                    cfg.pending_buckets, cfg.seen_buckets, cfg.scope_seed_hosts,
-                    cfg.bloom.partitions, cfg.bloom.bits_per_key, cfg.bloom.k,
-                    m_bits,
-                    cfg.bloom.partitions * m_bits // 8 > _BLOOM_BROADCAST_MAX_BYTES,
+                    cfg.pending_buckets, SEEN_BUCKETS, cfg.scope_seed_hosts,
+                    bloom.partitions, bloom.bits_per_key, bloom.k, m_bits,
+                    bloom.partitions * m_bits // 8 > _BLOOM_BROADCAST_MAX_BYTES,
                 )
             self._pinned = _Layout(**{f.name: m[f.name] for f in fields(_Layout)})
         return self._pinned
@@ -619,7 +612,7 @@ class CrawlEngine:
                 # yet, every bucket's watermark at -1 (all deltas,
                 # round 0 included, are unfolded)
                 "seen_manifest": {},
-                "seen_folded": {b: -1 for b in range(cfg.seen_buckets)},
+                "seen_folded": {b: -1 for b in range(SEEN_BUCKETS)},
                 "seen_bucket_rows": {},
                 # bucket moduli, scope switch, bloom geometry and probe
                 # mode, pinned for every later round and resume (_layout)
@@ -907,7 +900,7 @@ class CrawlEngine:
 
     def _suspect_bucket_counts(self, suspects: DataFrame) -> dict[int, int]:
         """Per-sbucket row counts of the round's bloom-positive
-        suspects — ≤ cfg.seen_buckets result rows by construction. One
+        suspects — ≤ the pinned seen modulus result rows. One
         small job against the round-cached `tagged` set; the keys drive
         the partition-pruned seen read and the summed counts decide
         whether the exact probe can invert to the broadcast form."""
@@ -1361,7 +1354,6 @@ class CrawlEngine:
                 decode_images=cfg.decode_images,
                 follow=cfg.follow,
                 dont_follow=cfg.dont_follow,
-                strict_filters=cfg.strict_reference_filters,
                 http_endpoint=cfg.http_endpoint,
                 no_new_links=cfg.no_new_links,
                 load_resources=cfg.load_resources,
@@ -1422,18 +1414,6 @@ class CrawlEngine:
         # dequeued rows == pages (1:1) and the adds are exactly the seen
         # delta, so the count is arithmetic — no frontier scan
         n_pending = prev_pending_n - n_fetched + n_new
-        with phase("reconcile"):
-            if cfg.pending_reconcile_every and r % cfg.pending_reconcile_every == 0:
-                actual = self._assemble_pending(
-                    pending_meta["pending_manifest"], pending_meta["pending_folded"], r
-                ).count()
-                if actual != n_pending:
-                    raise RuntimeError(
-                        f"pending drift at round {r}: arithmetic count "
-                        f"{n_pending} != assembled table {actual} — a fetch/"
-                        "enqueue invariant (1 row per dequeued URL; in-round "
-                        "dedup) has been violated"
-                    )
         with phase("bloom_delta"):
             self._extend_bloom(r, n_new)
         with phase("compact_seen"):

@@ -58,7 +58,6 @@ def simulate(
     round_capacity: int | None = None,
     follow: list[str] | None = None,
     dont_follow: list[str] | None = None,
-    strict_reference_filters: bool = False,
     load_resources: bool = False,
 ) -> SimResult:
     robots = {r["host"]: r["disallow_prefixes"] for r in robots_rows(world)}
@@ -129,12 +128,7 @@ def simulate(
                 # missing/odd Content-Type still scans like goquery
                 and link_scannable(page["content_type"])
             ):
-                hrefs = filter_hrefs(
-                    extract_hrefs(page["body"]),
-                    follow,
-                    dont_follow,
-                    strict_reference_filters,
-                )
+                hrefs = filter_hrefs(extract_hrefs(page["body"]), follow, dont_follow)
                 if load_resources:
                     # -load-resources: unfiltered src URLs appended
                     # after the href filters (mainCrawler.go:191-196);

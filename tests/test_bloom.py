@@ -3,13 +3,17 @@
 import numpy as np
 
 from nightcrawlercmd_spark.operators.bloomseen import (
+    MAX_PARTITION_BITS,
     BloomConfig,
     PartitionedBloom,
     bloom_partition_df,
     bloom_payload,
     build_filter_deltas,
     build_filter_rows_from_hashes,
+    partitions_for,
 )
+from nightcrawlercmd_spark.sources.corpus import WorldConfig
+from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig, _Layout
 
 
 def _keys(n, seed):
@@ -91,3 +95,37 @@ def test_driver_build_matches_distributed_build(spark):
         if subsplits > 1:
             assert len(dist) > cfg.partitions  # several blobs per pid
         assert _or_merged(dist) == _or_merged(driver), subsplits
+
+
+def test_partitions_for_bounds_each_filter():
+    """The partition count follows the key count: the BloomConfig()
+    geometry (16 partitions, the same filter bits) for every
+    expected_urls this repository uses, 1,024 filters of 16 MB at the
+    10^10-URL design point, and never a filter above MAX_PARTITION_BITS."""
+    assert MAX_PARTITION_BITS == 1 << 27
+    for n in (1 << 10, 1 << 17, 1 << 21):
+        assert partitions_for(n) == 16
+    assert partitions_for(10**10) == 1024
+    for e in range(10, 22):  # 2^10 .. 2^21
+        p = partitions_for(1 << e)
+        assert p == 16
+        assert PartitionedBloom.size_for(1 << e, BloomConfig(p)) == PartitionedBloom.size_for(
+            1 << e, BloomConfig()
+        )
+    for n in [1 << e for e in range(10, 42)] + [10**10, 3 * 10**9, 10**12]:
+        p = partitions_for(n)
+        assert p >= 16 and p & (p - 1) == 0
+        assert PartitionedBloom.size_for(n, BloomConfig(p)) <= MAX_PARTITION_BITS
+        # the smallest such count: half of it would overflow a filter
+        assert p == 16 or PartitionedBloom.size_for(n, BloomConfig(p // 2)) > MAX_PARTITION_BITS
+
+
+def test_fresh_store_layout_under_default_config(spark, tmp_path):
+    """A fresh store's round-0 layout under the default config: 16
+    pending and 64 seen buckets, seed-host scope, the BloomConfig()
+    geometry at 2^17 keys and the broadcast probe — the values existing
+    default-config stores hold pinned, so their resumes stay exact."""
+    eng = CrawlEngine(spark, EngineConfig(state_dir=str(tmp_path), world=WorldConfig()))
+    assert eng._layout() == _Layout(
+        16, 64, True, 16, 12, 7, PartitionedBloom.size_for(1 << 17, BloomConfig()), False
+    )

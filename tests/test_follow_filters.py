@@ -20,12 +20,9 @@ def test_href_passes_semantics():
     # no filters → no filtering (reference nil-copy quirk NOT reproduced)
     assert href_passes("anything", None, None)
     assert filter_hrefs(["a", "b"], None, None) == ["a", "b"]
-    # dont-follow-only: sane default = blacklist…
+    # dont-follow-only = blacklist (the reference drops every link)
     assert href_passes("/p/12", None, ["logout"])
     assert not href_passes("/p/12?logout", None, ["logout"])
-    # …strict mode reproduces the reference literally (matchFollow is
-    # false without a follow list → every link dropped)
-    assert not href_passes("/p/12", None, ["logout"], strict=True)
 
 
 def _parity(spark, tmp_path_factory, name, **filters):

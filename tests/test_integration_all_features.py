@@ -19,6 +19,7 @@ def test_all_features_crawl_matches_oracle(spark, tmp_path, monkeypatch):
     # co-partitioned filter-table probe: round 0 pins it when the
     # filters exceed the broadcast budget
     monkeypatch.setattr(engine, "_BLOOM_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(engine, "SEEN_BUCKETS", 8)
     cfg = EngineConfig(
         state_dir=str(tmp_path / "all"),
         world=WORLD,
@@ -26,7 +27,6 @@ def test_all_features_crawl_matches_oracle(spark, tmp_path, monkeypatch):
         round_capacity=40,
         fetch_tasks=8,
         n_salts=4,
-        seen_buckets=8,
         seen_prune_min_total=0,      # bucket-pruned exact probe from round 1
         compact_seen_every=2,        # seen + filter compaction mid-crawl
         pending_buckets=16,

@@ -35,7 +35,6 @@ def _cfg(tmp, **kw):
         fetch_tasks=8,
         pending_buckets=BUCKETS,
         pending_compact_every=2,
-        pending_reconcile_every=2,  # drift guard must stay silent
         expected_urls=1 << 13,
         **kw,
     )
@@ -48,7 +47,7 @@ def _log(eng):
     ]
 
 
-def test_prune_bites_and_matches_oracle(spark, tmp_path_factory):
+def test_prune_bites_and_matches_oracle(spark, tmp_path_factory, assert_pending_counts):
     sc = spark.sparkContext
     sc.setJobDescription("caller's description")
     try:
@@ -73,6 +72,7 @@ def test_prune_bites_and_matches_oracle(spark, tmp_path_factory):
         r["canon_url"]: (r["first_round"], r["depth"]) for r in eng.seen().collect()
     }
     assert got_seen == sim.seen
+    assert_pending_counts(eng)
 
 
 def test_round_capacity_zero_terminates(spark, tmp_path_factory):
@@ -91,7 +91,7 @@ def test_round_capacity_zero_terminates(spark, tmp_path_factory):
     assert sum(t["fetched"] for t in stats["round_times"]) == 0
 
 
-def test_legacy_meta_bootstraps_stats_on_resume(spark, tmp_path_factory):
+def test_legacy_meta_bootstraps_stats_on_resume(spark, tmp_path_factory, assert_pending_counts):
     """A store whose last commit carries no bucket bounds must resume
     correctly under a capacity: an uncapacitated init (max_rounds=0,
     no round_capacity / max_pages) writes no stats, so the first
@@ -110,3 +110,4 @@ def test_legacy_meta_bootstraps_stats_on_resume(spark, tmp_path_factory):
     assert _log(eng) == sim.log
     last_meta = eng.store.meta(eng.store.last_round())
     assert "pending_bucket_maxp" in last_meta  # bounds regrown
+    assert_pending_counts(eng)

@@ -4,12 +4,15 @@ archive changed, and Spark's workers run under it."""
 from __future__ import annotations
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
 
 import pytest
 
+import nightcrawlercmd_spark
 from nightcrawlercmd_spark import pydaemon
 
 
@@ -99,3 +102,26 @@ def test_spark_workers_do_not_reread_archives(spark):
     assert len(rows) == 4
     assert all(r.daemon for r in rows), rows
     assert all(r.reads == 0 for r in rows), rows
+
+
+def test_workers_import_package_from_any_directory(tmp_path):
+    """A driver started outside the repository, with PYTHONPATH unset
+    and the package not installed, still runs Python tasks: get_spark
+    puts the package's parent directory on the workers' PYTHONPATH."""
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(nightcrawlercmd_spark.__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {parent!r})
+from nightcrawlercmd_spark.session import get_spark
+spark = get_spark(cpus=2, shuffle_partitions=2)
+rows = spark.range(8).repartition(2).mapInPandas(lambda it: it, "id long").count()
+print("rows", rows)
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["NCS_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert "rows 8" in out.stdout, out.stderr[-3000:]

@@ -9,7 +9,6 @@ would surface as a duplicate fetch here."""
 
 import pytest
 
-from nightcrawlercmd_spark.operators.bloomseen import BloomConfig
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
 from nightcrawlercmd_spark.streaming import engine
 from nightcrawlercmd_spark.streaming.engine import CrawlEngine, EngineConfig
@@ -46,31 +45,26 @@ def _cfg(state, **kw):
 
 
 def test_resume_with_changed_bloom_geometry(spark, tmp_path_factory):
-    """Table-probe resume with a different partitions/k must keep using
-    the pinned build-time geometry — probing old blobs with a new
-    modulus would produce false negatives that bypass the exact probe —
-    and the pinned probe mode: the resume's broadcast budget would pick
-    broadcast mode for a fresh store of this size, but the first run's
-    rounds persisted filter deltas, so it keeps probing the table."""
+    """Table-probe resume with a different expected_urls must keep using
+    the pinned build-time geometry — probing old blobs with a new filter
+    size or partition count would produce false negatives that bypass
+    the exact probe — and the pinned probe mode: the resume's broadcast
+    budget would pick broadcast mode for a fresh store of this size, but
+    the first run's rounds persisted filter deltas, so it keeps probing
+    the table."""
     state = str(tmp_path_factory.mktemp("rcfg_geom"))
-    first = _cfg(
-        state,
-        max_rounds=3,
-        bloom=BloomConfig(partitions=4, bits_per_key=12, k=5),
-        compact_seen_every=0,
-    )
+    first = _cfg(state, max_rounds=3, compact_seen_every=0)  # 2^13 keys
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(engine, "_BLOOM_BROADCAST_MAX_BYTES", 0)
         CrawlEngine(spark, first).run()
-    second = _cfg(
-        state,
-        bloom=BloomConfig(partitions=8, bits_per_key=10, k=7),  # changed
-        compact_seen_every=3,
-    )
-    eng = CrawlEngine(spark, second)
-    assert eng._layout().bloom.partitions == 4  # pinned, not the new config
-    assert eng._layout().bloom.k == 5
-    assert eng._layout().bloom_table_probe is True  # pinned, not re-decided
+    # a fresh store would take 4,096-bit broadcast filters here
+    eng = CrawlEngine(spark, _cfg(state, expected_urls=1 << 12, compact_seen_every=3))
+    pinned = eng._layout()
+    assert pinned.bloom_m_bits == 8192  # pinned, not the new config
+    assert pinned.bloom_table_probe is True  # pinned, not re-decided
+    # ... and 1,024 partitions of 2^27 bits at 10^10 keys
+    huge = CrawlEngine(spark, _cfg(state, expected_urls=10**10))
+    assert (huge._layout().bloom_partitions, huge._layout().bloom_m_bits) == (16, 8192)
     eng.run()
     assert eng._bc_generations == 0
     _assert_oracle_parity(eng)

@@ -57,7 +57,7 @@ def test_resume_across_compaction_boundary(spark, tmp_path):
     assert a == b
 
 
-def test_bucket_pruned_seen_probe_is_exact(spark, tmp_path):
+def test_bucket_pruned_seen_probe_is_exact(spark, tmp_path, monkeypatch):
     """Force the partition-pruned exact probe on from round 1
     (seen_prune_min_total=0, 8 sbuckets, compaction every 2 rounds):
     the crawl log and seen set must still match the sequential oracle
@@ -66,11 +66,11 @@ def test_bucket_pruned_seen_probe_is_exact(spark, tmp_path):
     laid out as sbucket= partition dirs."""
     import os
 
+    monkeypatch.setattr(engine, "SEEN_BUCKETS", 8)
     eng = CrawlEngine(
         spark,
         EngineConfig(state_dir=str(tmp_path / "p"), world=WORLD, max_rounds=9,
-                     fetch_tasks=4, compact_seen_every=2,
-                     seen_buckets=8, seen_prune_min_total=0),
+                     fetch_tasks=4, compact_seen_every=2, seen_prune_min_total=0),
     )
     eng.run()
     sim = simulate(WORLD, max_rounds=9, default_budget=4)
@@ -96,26 +96,28 @@ def test_bucket_pruned_seen_probe_is_exact(spark, tmp_path):
     ), base_files
 
 
-def test_resume_with_different_seen_buckets_is_exact(spark, tmp_path):
-    """Resuming with a different seen_buckets modulus must NOT trust
+def test_resume_with_different_seen_buckets_is_exact(spark, tmp_path, monkeypatch):
+    """Resuming with a different SEEN_BUCKETS modulus must NOT trust
     the old base's on-disk sbucket partition values (pruning with
     new-modulus bucket ids against old-modulus partitions would
     silently miss seen URLs → re-fetch duplicates). The modulus is
     PINNED in round-0 meta (like the bloom geometry): the resumed
     engine keeps bucketing with the build-time value and the changed
-    config is ignored."""
-    def cfg(rounds, buckets):
+    constant is ignored."""
+    def cfg(rounds):
         return EngineConfig(
             state_dir=str(tmp_path / "m"), world=WORLD, max_rounds=rounds,
-            fetch_tasks=4, compact_seen_every=2,
-            seen_buckets=buckets, seen_prune_min_total=0,
+            fetch_tasks=4, compact_seen_every=2, seen_prune_min_total=0,
         )
 
-    first = CrawlEngine(spark, cfg(4, buckets=8))
+    monkeypatch.setattr(engine, "SEEN_BUCKETS", 8)
+    first = CrawlEngine(spark, cfg(4))
     first.run()  # compactions at 2 and 4 with modulus 8
-    second = CrawlEngine(spark, cfg(9, buckets=4))  # resume, new modulus
+    monkeypatch.setattr(engine, "SEEN_BUCKETS", 4)
+    second = CrawlEngine(spark, cfg(9))  # resume, new modulus
     second.run()
     assert second._layout().seen_buckets == 8  # pinned build-time modulus wins
+    monkeypatch.undo()  # the reference crawl runs with the default modulus
 
     full = CrawlEngine(
         spark,
@@ -131,7 +133,7 @@ def test_resume_with_different_seen_buckets_is_exact(spark, tmp_path):
     assert got == want  # no duplicates, no misses
 
 
-def test_incremental_seen_compaction_mixed_manifest(spark, tmp_path):
+def test_incremental_seen_compaction_mixed_manifest(spark, tmp_path, monkeypatch):
     """Seen analog of incremental pending compaction: with activity
     concentrated in few hosts, later compactions fold only buckets
     with unfolded deltas — the manifest ends up holding base dirs from
@@ -143,12 +145,13 @@ def test_incremental_seen_compaction_mixed_manifest(spark, tmp_path):
         p_same=0.97, p_cross=0.97, p_offsite=0.97,
         seeds_lo=1, seeds_hi=2, budget_lo=6, budget_hi=8, tag="t-seeninc",
     )
+    monkeypatch.setattr(engine, "SEEN_BUCKETS", 32)
     eng = CrawlEngine(
         spark,
         EngineConfig(
             state_dir=str(tmp_path / "si"), world=world, max_rounds=6,
             round_capacity=12, fetch_tasks=8, compact_seen_every=2,
-            seen_buckets=32, seen_prune_min_total=0,
+            seen_prune_min_total=0,
             # sbuckets are url_hash-uniform, so in a young crawl every
             # bucket crosses any small dirty threshold together; a high
             # frac isolates the cohort staggering (≈1/max_lag of the
@@ -176,11 +179,11 @@ def test_large_suspect_probe_storage_partitioned_exact(spark, tmp_path, monkeypa
     (seen_probe_parts) — and the crawl log + seen set must still match
     the sequential oracle exactly."""
     monkeypatch.setattr(engine, "_SUSPECT_BROADCAST_MAX", 0)
+    monkeypatch.setattr(engine, "SEEN_BUCKETS", 8)
     eng = CrawlEngine(
         spark,
         EngineConfig(state_dir=str(tmp_path / "lp"), world=WORLD, max_rounds=9,
-                     fetch_tasks=4, compact_seen_every=2,
-                     seen_buckets=8, seen_prune_min_total=0),
+                     fetch_tasks=4, compact_seen_every=2, seen_prune_min_total=0),
     )
     stats = eng.run()
     sim = simulate(WORLD, max_rounds=9, default_budget=4)
