@@ -382,10 +382,10 @@ def frontier_growth(cpus: int) -> dict:
                 round_capacity=100,
                 fetch_tasks=max(8, cpus * 4),
                 pending_buckets=prune_buckets,
-                # engage the bucket-pruned exact seen probe from round
-                # 1 — with suspect counts this small it runs in the
-                # broadcast-INVERTED form (seen scanned, never
-                # shuffled), recorded per round below
+                # count the suspects from round 1 on, so the exact seen
+                # probe picks its form each round — with suspect counts
+                # this small the broadcast-INVERTED one (seen scanned,
+                # never shuffled), recorded per round below
                 seen_prune_min_total=0,
                 expected_urls=1 << 15,
             )

@@ -21,17 +21,48 @@ from pyspark.sql import functions as F
 from ..functions.numeric import round6
 
 
+def _double_sql(x: float) -> str:
+    """SQL double literal of a finite ``x``: ``repr`` round-trips every
+    finite double exactly; SQL has no non-finite double literal, so
+    those are refused."""
+    if not math.isfinite(x):
+        raise ValueError("vector literal holds a non-finite value")
+    return f"{float(x)!r}D"
+
+
+def _vec_sql(v) -> str:
+    return f"cast(array({', '.join(_double_sql(float(x)) for x in v)}) as array<double>)"
+
+
 def _vec(v) -> Column:
     """``array<double>`` literal parsed from one SQL string, so it costs
     a few py4j round trips in all: an ``F.array`` of per-element
     ``F.lit``s costs about four per element on the driver, a numpy
-    ``lit`` two. ``repr`` round-trips every finite double exactly, and
-    the optimized plan holds the same folded array literal as either
-    form; SQL has no non-finite double literal, so those are refused."""
-    xs = [float(x) for x in v]
-    if not all(math.isfinite(x) for x in xs):
-        raise ValueError("vector literal holds a non-finite value")
-    return F.expr(f"cast(array({', '.join(f'{x!r}D' for x in xs)}) as array<double>)")
+    ``lit`` two. The optimized plan holds the same folded array literal
+    as either form."""
+    return F.expr(_vec_sql(v))
+
+
+def _nearest_cell(cents: list[tuple[int, list[float]]]) -> Column:
+    """``struct(csim, ncid)`` of each row's nearest centroid, from the
+    row's ``v`` (array<double>) and its norm ``vn``: the ``array_max``
+    over one ``struct(cosine, -cid)`` per centroid, so ties break to the
+    lowest cid. Parsed from one SQL string (one py4j round trip instead
+    of dozens per centroid for the Column-API form); the optimized plan
+    is the Column form's (tests/test_plan_build.py)."""
+
+    def cell(cid: int, c: list[float]) -> str:
+        cn = _double_sql(math.sqrt(sum(x * x for x in c)))
+        dot = f"aggregate(zip_with(v, {_vec_sql(c)}, (x, y) -> x * y), 0.0D, (x, y) -> x + y)"
+        # round6's floor(x*1e6 + 0.5)/1e6; a zero-norm row/centroid
+        # gets -2.0, below any cosine
+        csim = (
+            f"coalesce(CASE WHEN (vn > 0) AND ({cn} > 0) THEN "
+            f"floor({dot} / (vn * {cn}) * 1000000.0D + 0.5D) / 1000000.0D END, -2.0D)"
+        )
+        return f"struct({csim} AS csim, {-cid} AS ncid)"
+
+    return F.expr(f"array_max(array({', '.join(cell(cid, c) for cid, c in cents)}))")
 
 
 def _dot(a, b):
@@ -200,27 +231,7 @@ def ivf_topk(
     # when-branch (2 per centroid + 2 in the final sim ≈ 18 redundant
     # folds per row at K=8 if Catalyst doesn't collapse them)
     vn = F.col("vn")
-    best = F.array_max(
-        F.array(
-            *[
-                F.struct(
-                    F.coalesce(
-                        F.when(
-                            (vn > 0)
-                            & (F.lit(math.sqrt(sum(x * x for x in c))) > 0),
-                            round6(
-                                _dot(v, _vec(c))
-                                / (vn * F.lit(math.sqrt(sum(x * x for x in c))))
-                            ),
-                        ),
-                        F.lit(-2.0),  # zero-norm row/centroid: below any cosine
-                    ).alias("csim"),
-                    F.lit(-cid).alias("ncid"),
-                )
-                for cid, c in cents
-            ]
-        )
-    )
+    best = _nearest_cell(cents)
     q = _vec(query_vec)
     return (
         emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))

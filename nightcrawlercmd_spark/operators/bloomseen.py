@@ -8,12 +8,13 @@ filters as a *pre-probe* so the expensive exact anti-join only sees
 candidates the filter cannot rule out. Bloom "no" is definitive (no
 false negatives) → those rows skip the shuffle entirely.
 
-Partitioning: filter ``pid = url_hash mod P``; each partition filter is
-built distributed (applyInPandas per pid, optionally sub-split so no
-single task materializes a whole partition's keys) or, for round-scale
-key sets, on the driver (``build_filter_rows_from_hashes``) — both
-through the one bit-setting function ``_filter_blob`` — and OR-merged
-incrementally per round.
+Partitioning: filter ``pid = url_hash mod P``. One in-place kernel
+(``PartitionedBloom.add_keys``) splits a batch of keys by pid and sets
+their bits; every build runs it: on the driver for round-scale key sets
+(``build_filter_rows_from_hashes``), or distributed
+(``build_filter_delta_df``: keys hash-partitioned by pid, each task
+streaming its Arrow batches through the kernel, one row per pid). The
+filters are OR-merged incrementally per round.
 
 Two probe paths, same bit layout and one bit test (``_all_bits_set``):
 
@@ -66,18 +67,18 @@ def _positions(url_hash: np.ndarray, k: int, m_bits: int) -> np.ndarray:
     return out
 
 
-def _filter_blob(url_hash: np.ndarray, k: int, m_bits: int) -> bytes:
-    """One partition filter holding ``url_hash`` — THE bit-setting code
-    of every build path (driver-local and distributed)."""
-    arr = np.zeros(m_bits // 8, dtype=np.uint8)
-    pos = _positions(url_hash, k, m_bits)
-    np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-    return arr.tobytes()
+def _by_pid(url_hash: np.ndarray, partitions: int) -> list[tuple[int, np.ndarray]]:
+    """(pid, row mask) for each filter partition ``url_hash`` touches:
+    pid = pmod(url_hash, partitions), Spark's split too (numpy's ``%``
+    takes the divisor's sign, so negative hashes land where pmod puts
+    them) — THE split of the build kernel and the broadcast probe."""
+    pid = url_hash.astype(np.int64) % partitions
+    return [(int(p), pid == p) for p in np.unique(pid)]
 
 
 def _or_blobs(blobs) -> np.ndarray:
-    """OR-merge of one pid's filter blobs (deltas, subsplit groups) —
-    THE merge of filter compaction and the co-partitioned probe."""
+    """OR-merge of one pid's filter blobs (the deltas of several rounds)
+    — THE merge of filter compaction and the co-partitioned probe."""
     acc = None
     for blob in blobs:
         arr = np.frombuffer(blob, dtype=np.uint8)
@@ -116,8 +117,21 @@ class PartitionedBloom:
         m = max(1024, expected_keys * cfg.bits_per_key // cfg.partitions)
         return 1 << int(math.ceil(math.log2(m)))  # pow2 → cheap modulo
 
-    def _empty(self) -> np.ndarray:
-        return np.zeros(self.m_bits // 8, dtype=np.uint8)
+    def add_keys(self, url_hash: np.ndarray) -> None:
+        """OR a batch of keys into the held filters in place — THE
+        bit-setting kernel of every build (driver-local, distributed and
+        the round extensions of the driver-held filters)."""
+        h = np.asarray(url_hash, dtype=np.int64)
+        for p, mask in _by_pid(h, self.cfg.partitions):
+            filt = self.filters.get(p)
+            if filt is None:
+                filt = self.filters[p] = np.zeros(self.m_bits // 8, dtype=np.uint8)
+            pos = _positions(h[mask], self.cfg.k, self.m_bits)
+            np.bitwise_or.at(filt, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+    def rows(self) -> list[tuple[int, bytes]]:
+        """The held filters as (pid, filter) rows, by pid."""
+        return [(p, f.tobytes()) for p, f in sorted(self.filters.items())]
 
     def add_filter_rows(self, rows: list[tuple[int, bytes]]) -> None:
         """OR per-partition filter deltas into the held filters."""
@@ -130,16 +144,10 @@ class PartitionedBloom:
 
     def maybe_contains(self, url_hash: np.ndarray) -> np.ndarray:
         """Vectorized probe: True = maybe seen, False = definitely new."""
-        if not self.filters:
-            return np.zeros(len(url_hash), dtype=bool)
-        pid = (url_hash.astype(np.int64) % self.cfg.partitions + self.cfg.partitions) % (
-            self.cfg.partitions
-        )
         out = np.zeros(len(url_hash), dtype=bool)
-        for p in np.unique(pid):
-            filt = self.filters.get(int(p))
+        for p, mask in _by_pid(url_hash, self.cfg.partitions):
+            filt = self.filters.get(p)
             if filt is not None:
-                mask = pid == p
                 out[mask] = _all_bits_set(filt, url_hash[mask], self.cfg.k, self.m_bits)
         return out
 
@@ -161,65 +169,39 @@ def partitions_for(expected_keys: int) -> int:
 
 
 def build_filter_delta_df(
-    df: DataFrame,
-    cfg: BloomConfig,
-    m_bits: int,
-    hash_col: str = "url_hash",
-    subsplits: int = 1,
+    df: DataFrame, cfg: BloomConfig, m_bits: int, hash_col: str = "url_hash"
 ) -> DataFrame:
-    """Distributed filter build as a DataFrame of (pid, filter) rows.
+    """Distributed filter build as a DataFrame of (pid, filter) rows,
+    exactly one per pid present. The keys are hash-partitioned by pid
+    into ``cfg.partitions`` tasks, so each pid's keys meet in one task,
+    which streams its Arrow batches through ``add_keys``: a task holds
+    one batch of keys and its own pids' filters (a few of at most
+    MAX_PARTITION_BITS each), never a pid's whole key set."""
 
-    With ``subsplits > 1`` each pid's keys are built in that many
-    independent groups (multiple rows per pid; consumers OR-merge), so
-    no single task ever materializes a whole partition's key set —
-    the bound that matters when rebuilding from a 10^10-row seen table
-    at resume."""
-    k, part = cfg.k, cfg.partitions
+    def build(batches):
+        bloom = PartitionedBloom(cfg, m_bits)
+        for pdf in batches:
+            bloom.add_keys(pdf[hash_col].to_numpy())
+        if bloom.filters:
+            yield pd.DataFrame(bloom.rows(), columns=["pid", "filter"])
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(pdf["pid"].iloc[0])
-        blob = _filter_blob(pdf[hash_col].to_numpy(), k, m_bits)
-        return pd.DataFrame({"pid": [pid], "filter": [blob]})
-
-    keyed = df.select(hash_col).withColumn(
-        "pid", F.pmod(F.col(hash_col), F.lit(part)).cast("int")
+    part = cfg.partitions
+    return (
+        df.select(hash_col)
+        .repartition(part, F.pmod(F.col(hash_col), F.lit(part)))
+        .mapInPandas(build, schema="pid int, filter binary")
     )
-    if subsplits > 1:
-        keyed = keyed.withColumn(
-            "sub", F.pmod(F.abs(F.hash(F.col(hash_col))), F.lit(subsplits)).cast("int")
-        )
-        grouped = keyed.groupBy("pid", "sub")
-    else:
-        grouped = keyed.groupBy("pid")
-    return grouped.applyInPandas(build, schema="pid int, filter binary")
-
-
-def build_filter_deltas(
-    df: DataFrame,
-    cfg: BloomConfig,
-    m_bits: int,
-    hash_col: str = "url_hash",
-    subsplits: int = 1,
-) -> list[tuple[int, bytes]]:
-    """Collected form of ``build_filter_delta_df`` for the driver-held
-    broadcast path (blobs are small by construction there)."""
-    rows = build_filter_delta_df(df, cfg, m_bits, hash_col, subsplits).collect()
-    return [(r["pid"], r["filter"]) for r in rows]
 
 
 def build_filter_rows_from_hashes(
     hashes: np.ndarray, cfg: BloomConfig, m_bits: int
 ) -> list[tuple[int, bytes]]:
-    """Driver-local twin of ``build_filter_deltas`` for round-scale key
-    sets in broadcast mode: identical pid assignment (pmod) and bit
-    setting, zero Spark stages, one row per pid. The distributed form
-    shuffles the keys into partitions × subsplits pandas groups and
-    collects the blobs — right for a 10^8-row rebuild, pure fixed cost
-    for a few MB of hashes; the engine gates on the key count."""
-    h = np.asarray(hashes, dtype=np.int64)
-    p = cfg.partitions
-    pid = ((h % p) + p) % p  # pmod semantics on signed hashes
-    return [(int(pv), _filter_blob(h[pid == pv], cfg.k, m_bits)) for pv in np.unique(pid)]
+    """Driver-local twin of ``build_filter_delta_df`` for round-scale key
+    sets: the same kernel over one array, zero Spark stages, one row
+    per pid present."""
+    bloom = PartitionedBloom(cfg, m_bits)
+    bloom.add_keys(hashes)
+    return bloom.rows()
 
 
 def bloom_payload(bloom: PartitionedBloom) -> tuple:

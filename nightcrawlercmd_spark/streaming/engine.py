@@ -34,7 +34,13 @@ deltas into a base clustered by (url_hash, canon_url) into
 ``SEEN_KEY_BUCKETS`` buckets, so the exact
 probe never shuffles the history: small suspect sets run the
 broadcast-inverted join (``seen_anti_join``), large ones a chain of
-storage-partitioned joins (``seen_anti_join_parts``). Hot hosts are
+storage-partitioned joins (``seen_anti_join_parts``). Every seen read
+(the exact probe, the seen fold, the bloom rebuild, ``seen()``) is
+``_read_seen_parts``: one key-bucketed scan per fold round plus the
+unfolded deltas, unioned where no join needs the storage
+partitioning. Every filter build runs the one bloom kernel
+(``PartitionedBloom.add_keys``), on the driver or streamed per Arrow
+batch in a distributed build. Hot hosts are
 defused by the salt in the fetch repartition + the per-host dequeue
 budget; AQE handles residual skew. With Iceberg
 jars, pending/seen become MERGE-maintained tables (sources/tableio.py
@@ -67,8 +73,6 @@ from ..operators.bloomseen import (
     bloom_payload,
     bloom_probe_cogroup,
     build_filter_delta_df,
-    build_filter_deltas,
-    build_filter_rows_from_hashes,
     or_merge_filters_df,
     partitions_for,
 )
@@ -127,9 +131,6 @@ _BLOOM_BROADCAST_MAX_BYTES = 128 << 20
 # chain (seen_anti_join_parts), so the history side carries zero
 # Exchange in both regimes
 _SUSPECT_BROADCAST_MAX = 200_000
-# pandas groups per bloom partition in a distributed filter build: bounds
-# the keys one task materializes (full rebuilds, high-discovery rounds)
-_BLOOM_REBUILD_SUBSPLITS = 8
 # the pruned pending read starts from the maxp-ranked bucket prefix
 # holding ≥ this many × capacity candidate rows
 _PENDING_PRUNE_SLACK = 4.0
@@ -166,6 +167,7 @@ _PENDING_SCHEMA = [
     ("discovered_round", "int"),
     ("parent_url_hash", "bigint"),
 ]
+_SEEN_SCHEMA = _PENDING_SCHEMA + [("first_round", "int")]
 
 
 @dataclass
@@ -227,13 +229,12 @@ class EngineConfig:
     # window to _COMPACT_MAX_LAG × the table's cadence
     # (pending_compact_every / compact_seen_every) rounds.
     compact_dirty_frac: float = 0.1
-    # once fetched_total exceeds this, the per-round exact anti-join
-    # reads ONLY the sbucket partitions (SEEN_BUCKETS) holding the
-    # round's bloom-positive suspects (partition-pruned scan) instead
-    # of the whole seen table. Below the threshold the extra
-    # bucket-list job isn't worth its fixed cost (the table is tiny);
-    # at the 10^10 design point the pruned read is the difference
-    # between O(suspect buckets) and O(all history) I/O per round.
+    # from this fetched_total on, each round counts its bloom-positive
+    # suspects (one small job against the round-cached tagged set) and
+    # runs the exact seen probe broadcast-inverted (seen_anti_join)
+    # when they are at most _SUSPECT_BROADCAST_MAX; below it, and for
+    # larger suspect sets, the storage-partitioned chain
+    # (seen_anti_join_parts) runs. Only the probe form depends on it.
     seen_prune_min_total: int = 5_000_000
     # state-table backend: "parquet" (this sandbox — Iceberg contract
     # emulated on files, tableio.py) or "iceberg" (real catalog,
@@ -381,8 +382,8 @@ def seen_anti_join(suspects: DataFrame, seen: DataFrame) -> DataFrame:
     multiplicity either way) but the executed plan carries NO shuffle
     Exchange — the seen side is a streamed scan probed against a
     ≤ |suspects|-row broadcast, so a 10^10-row history moves zero
-    bytes. Engaged by the engine only when the suspect count (known
-    from the bucket-stats job) is at most ``_SUSPECT_BROADCAST_MAX``;
+    bytes. Engaged by the engine only when the suspect count is at
+    most ``_SUSPECT_BROADCAST_MAX``;
     larger sets run ``seen_anti_join_parts``."""
     confirmed = seen.select(*_SEEN_KEY).join(
         F.broadcast(suspects.select(*_SEEN_KEY)), _SEEN_KEY, "left_semi"
@@ -817,68 +818,39 @@ class CrawlEngine:
     def _with_sbucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn("__sb", self._sbucket(F.col("url_hash")))
 
-    def _read_seen(
+    def _read_seen_parts(
         self,
         upto_round: int,
-        bucket_filter: list[int] | None = None,
+        cols: list[str],
+        buckets: list[int] | None = None,
         state: tuple[dict, dict] | None = None,
-    ) -> DataFrame:
-        """seen = per-bucket compacted base ∪ each bucket's deltas after
-        its fold watermark. Without compaction the per-round anti-join
-        would read O(rounds) delta dirs on long crawls (SURVEY.md
-        §7.3.5 growth concern); with the incremental layout the base is
-        a manifest of ``seen_base/round=R/sbucket=B`` leaf dirs, so
-        ``bucket_filter`` prunes the base read to exactly the suspect
-        buckets' directories (never even listed otherwise) and the
-        delta read by a computed-bucket filter. Seen is append-only, so
-        unlike pending there are no removals — the watermark join only
-        prevents re-reading deltas already folded into a bucket's
-        base. ``state`` = (manifest, folded) defaults to round
-        ``upto_round``'s commit meta; a seen fold passes its own, since
-        its round (whose delta it folds) is not committed yet."""
-        manifest, folded = state or self._state_of(self.store.meta(upto_round), "seen")[:2]
-        if bucket_filter is not None:
-            manifest = {b: v for b, v in manifest.items() if b in bucket_filter}
-        parts = []
-        base = self.store.read_buckets(
-            self.spark, "seen_base", manifest, bucket_col="sbucket"
-        )
-        if base is not None:
-            parts.append(base.select(*SEEN_COLS))
-        add = self._unfolded_deltas(
-            ("seen",), None, folded, upto_round, self._with_sbucket, "__sb",
-            bucket_filter,
-        )
-        if add is not None:
-            parts.append(add.select(*SEEN_COLS))
-        if not parts:
-            return _local_df(self.spark, _PENDING_SCHEMA + [("first_round", "int")])
-        return _union(parts)
-
-    def _read_seen_parts(
-        self, upto_round: int, bucket_filter: list[int] | None = None
     ) -> list[DataFrame]:
-        """Storage-partitioned form of _read_seen for the LARGE-suspect
-        exact probe (VERDICT r4 item 1 — the last shuffle seam): one
-        DataFrame per fold round whose base dirs are still current,
-        each a catalog bucketed-table scan (tableio.read_keyed_bucketed)
-        carrying HashPartitioning(url_hash, canon_url) FROM STORAGE,
-        plus one round-scale unfolded-delta part (the same fold-window
-        scan _read_seen uses). Fed to seen_anti_join_parts the 10^10-row
-        history side then joins with ZERO Exchange — only the round's
-        suspect set reshuffles, once. Each base is read with the key
-        bucket count its fold round recorded (seen_base_layout).
+        """THE seen read, as parts whose union is seen = per-bucket
+        compacted base ∪ each bucket's deltas after its fold watermark:
+        one catalog bucketed-table scan per fold round whose base dirs
+        are still current (tableio.read_keyed_bucketed, carrying
+        HashPartitioning(url_hash, canon_url) from storage), plus one
+        round-scale unfolded-delta part (the fold-window scan). Fed to
+        seen_anti_join_parts, the history side joins with zero
+        Exchange; the other readers union the parts (_read_seen).
 
-        Each round's scan is filtered to the manifest's buckets for
-        that round even without a caller filter: an sbucket refolded at
-        a later round leaves its stale dir in the earlier round's path,
-        and the manifest — not the directory listing — is the truth."""
-        manifest, folded, _ = self._state_of(self.store.meta(upto_round), "seen")
-        if bucket_filter is not None:
-            manifest = {b: v for b, v in manifest.items() if b in bucket_filter}
+        Each base scan is filtered to the manifest's buckets for its
+        round: an sbucket refolded at a later round leaves its stale dir
+        in the earlier round's path, and the manifest, not the directory
+        listing, is the truth. Each base is read with the key bucket
+        count its fold round recorded (seen_base_layout). ``buckets``
+        restricts every part to those sbuckets (the seen fold's read).
+        Seen is append-only, so unlike pending there are no removals:
+        the watermark only keeps deltas already folded into a base from
+        being read again. ``state`` = (manifest, folded) defaults to
+        round ``upto_round``'s commit meta; a seen fold passes its own,
+        since its round (whose delta it folds) is not committed yet."""
+        manifest, folded = state or self._state_of(self.store.meta(upto_round), "seen")[:2]
+        if buckets is not None:
+            manifest = {b: v for b, v in manifest.items() if b in buckets}
         by_round: dict[int, list[int]] = {}
         for b, rr in manifest.items():
-            by_round.setdefault(int(rr), []).append(int(b))
+            by_round.setdefault(rr, []).append(b)
         parts = []
         for rr in sorted(by_round):
             kb = int(self.store.meta(rr)["seen_base_layout"]["key_buckets"])
@@ -887,24 +859,29 @@ class CrawlEngine:
                 bucket_col="sbucket",
             )
             parts.append(
-                base.filter(F.col("sbucket").isin(sorted(by_round[rr])))
-                .select(*_SEEN_KEY)
+                base.filter(F.col("sbucket").isin(sorted(by_round[rr]))).select(*cols)
             )
         add = self._unfolded_deltas(
-            ("seen",), None, folded, upto_round, self._with_sbucket, "__sb",
-            bucket_filter,
+            ("seen",), None, folded, upto_round, self._with_sbucket, "__sb", buckets
         )
         if add is not None:
-            parts.append(add.select(*_SEEN_KEY))
+            parts.append(add.select(*cols))
         return parts
 
-    def _suspect_bucket_counts(self, suspects: DataFrame) -> dict[int, int]:
-        """Per-sbucket row counts of the round's bloom-positive
-        suspects — ≤ the pinned seen modulus result rows. One
-        small job against the round-cached `tagged` set; the keys drive
-        the partition-pruned seen read and the summed counts decide
-        whether the exact probe can invert to the broadcast form."""
-        return _count_by(suspects.select(self._sbucket(F.col("url_hash")).alias("sb")), "sb")
+    def _read_seen(
+        self,
+        upto_round: int,
+        cols: list[str] = SEEN_COLS,
+        buckets: list[int] | None = None,
+        state: tuple[dict, dict] | None = None,
+    ) -> DataFrame:
+        """The union of ``_read_seen_parts`` (an empty frame of ``cols``
+        when there is none)."""
+        parts = self._read_seen_parts(upto_round, cols, buckets, state)
+        if not parts:
+            types = dict(_SEEN_SCHEMA)
+            return _local_df(self.spark, [(c, types[c]) for c in cols])
+        return _union(parts)
 
     def _write_seen_base(self, assembled: DataFrame, r: int) -> list[int]:
         """Write a fold round's seen base as a Spark bucketed table
@@ -1000,7 +977,7 @@ class CrawlEngine:
         counts: dict[int, int] = {}
         if fold_set:
             assembled = (
-                self._read_seen(r, sorted(fold_set), state=(manifest, folded))
+                self._read_seen(r, buckets=sorted(fold_set), state=(manifest, folded))
                 .withColumn("sbucket", self._sbucket(F.col("url_hash")))
                 .persist()
             )
@@ -1055,26 +1032,27 @@ class CrawlEngine:
         lay = self._layout()
         self._bloom = PartitionedBloom(lay.bloom, lay.bloom_m_bits)
         self._add_to_bloom(
-            self._read_seen(upto_round),
+            self._read_seen(upto_round, ["url_hash"]),
             meta["fetched_total"] + meta["pending"],
-            subsplits=_BLOOM_REBUILD_SUBSPLITS,
         )
         return self._bloom
 
-    def _add_to_bloom(self, df: DataFrame, n_rows: int, subsplits: int = 1) -> None:
+    def _add_to_bloom(self, df: DataFrame, n_rows: int) -> None:
         """OR the url_hash keys of ``df`` (``n_rows`` rows) into the
         driver-held filters: up to _DRIVER_BLOOM_MAX_ROWS keys with one
-        column-pruned Arrow collect and a local numpy build — the same
-        bits as the distributed build (pinned by a differential test)
-        without its shuffle and pandas-group job — beyond that with the
-        distributed build, ``subsplits`` groups per pid."""
-        cfg_b, m_bits = self._bloom.cfg, self._bloom.m_bits
+        column-pruned Arrow collect and the kernel on the driver — the
+        same bits as the distributed build (pinned by a differential
+        test) without its shuffle and Python stage — beyond that by
+        collecting the distributed build's one row per pid."""
         if n_rows <= _DRIVER_BLOOM_MAX_ROWS:
-            hashes = df.select("url_hash").toPandas()["url_hash"].to_numpy()
-            rows = build_filter_rows_from_hashes(hashes, cfg_b, m_bits)
+            self._bloom.add_keys(df.select("url_hash").toPandas()["url_hash"].to_numpy())
         else:
-            rows = build_filter_deltas(df, cfg_b, m_bits, subsplits=subsplits)
-        self._bloom.add_filter_rows(rows)
+            self._bloom.add_filter_rows(
+                (r["pid"], r["filter"])
+                for r in build_filter_delta_df(
+                    df, self._bloom.cfg, self._bloom.m_bits
+                ).collect()
+            )
         self._bloom_bc_stale = True
 
     def _bloom_broadcast(self):
@@ -1230,28 +1208,23 @@ class CrawlEngine:
             tagged = bloom_partition_df(cands, self._bloom_broadcast()).persist()
         fresh = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
         raw_suspects = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-        # exact-probe read: once the crawl is large, prune the seen
-        # scan to the partitions holding this round's suspects (the
-        # bucket stats cost one small job against the cached tagged
-        # set; below the threshold the whole table is cheaper).
-        # The same job's counts decide the join strategy: a small
-        # suspect set inverts the anti-join to the broadcast form
-        # (seen_anti_join) so the pruned history is scanned, never
-        # shuffled; otherwise each storage-bucketed base part is
-        # probed on its own (seen_anti_join_parts) — the history side
-        # carries zero Exchange and only the suspect set reshuffles,
-        # once. Bloom stays hash-keyed (a colliding new URL just
-        # becomes a suspect and resolves in the exact probe).
-        small_suspects = False
-        bf = None
-        if fetched_total >= cfg.seen_prune_min_total:
-            sb_counts = self._suspect_bucket_counts(raw_suspects)
-            bf = sorted(sb_counts)
-            small_suspects = 0 < sum(sb_counts.values()) <= _SUSPECT_BROADCAST_MAX
+        # exact probe of the suspects: once the crawl is large, one
+        # count job against the cached tagged set picks the join form.
+        # A small suspect set inverts the anti-join to the broadcast
+        # form (seen_anti_join), so the history is scanned, never
+        # shuffled; otherwise each storage-bucketed base part is probed
+        # on its own (seen_anti_join_parts) — the history side carries
+        # zero Exchange and only the suspect set reshuffles, once. Bloom
+        # stays hash-keyed (a colliding new URL just becomes a suspect
+        # and resolves in the exact probe).
+        small_suspects = (
+            fetched_total >= cfg.seen_prune_min_total
+            and 0 < raw_suspects.count() <= _SUSPECT_BROADCAST_MAX
+        )
         if small_suspects:
-            suspects = seen_anti_join(raw_suspects, self._read_seen(r - 1, bf))
+            suspects = seen_anti_join(raw_suspects, self._read_seen(r - 1, _SEEN_KEY))
         else:
-            parts = self._read_seen_parts(r - 1, bf)
+            parts = self._read_seen_parts(r - 1, _SEEN_KEY)
             suspects = seen_anti_join_parts(raw_suspects, parts)
         new = fresh.unionByName(suspects)
         new = _with_salt_cols(new, cfg.n_salts).select(*PENDING_COLS)
@@ -1318,13 +1291,7 @@ class CrawlEngine:
         lay = self._layout()
         if lay.bloom_table_probe:
             self.store.append(
-                # subsplits: a high-discovery round's delta (or a 10^8-row
-                # seed list) is bounded only by the frontier, not by
-                # politeness — no pandas task materializes a whole pid
-                build_filter_delta_df(
-                    delta, lay.bloom, lay.bloom_m_bits,
-                    subsplits=_BLOOM_REBUILD_SUBSPLITS,
-                ),
+                build_filter_delta_df(delta, lay.bloom, lay.bloom_m_bits),
                 "seen_filters",
                 r,
             )

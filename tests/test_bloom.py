@@ -8,7 +8,7 @@ from nightcrawlercmd_spark.operators.bloomseen import (
     PartitionedBloom,
     bloom_partition_df,
     bloom_payload,
-    build_filter_deltas,
+    build_filter_delta_df,
     build_filter_rows_from_hashes,
     partitions_for,
 )
@@ -21,6 +21,11 @@ def _keys(n, seed):
     return rng.integers(-(2**62), 2**62, size=n, dtype=np.int64)
 
 
+def _build(df, cfg, m):
+    """The distributed build's (pid, filter) rows, collected."""
+    return [(r["pid"], r["filter"]) for r in build_filter_delta_df(df, cfg, m).collect()]
+
+
 def test_no_false_negatives_and_low_fpr(spark):
     cfg = BloomConfig(partitions=8, bits_per_key=12, k=7)
     inserted = _keys(20_000, 1)
@@ -28,7 +33,7 @@ def test_no_false_negatives_and_low_fpr(spark):
     m = PartitionedBloom.size_for(len(inserted), cfg)
     bloom = PartitionedBloom(cfg, m)
     df = spark.createDataFrame([(int(k),) for k in inserted], "url_hash bigint")
-    bloom.add_filter_rows(build_filter_deltas(df, cfg, m))
+    bloom.add_filter_rows(_build(df, cfg, m))
     # every inserted key must be 'maybe' (no false negatives)
     assert bloom.maybe_contains(inserted).all()
     # absent keys: false-positive rate well under 1%
@@ -43,7 +48,7 @@ def test_incremental_or_merge(spark):
     bloom = PartitionedBloom(cfg, m)
     for chunk in (a, b):
         df = spark.createDataFrame([(int(k),) for k in chunk], "url_hash bigint")
-        bloom.add_filter_rows(build_filter_deltas(df, cfg, m))
+        bloom.add_filter_rows(_build(df, cfg, m))
     assert bloom.maybe_contains(a).all() and bloom.maybe_contains(b).all()
 
 
@@ -53,7 +58,7 @@ def test_probe_udf_matches_driver_probe(spark):
     m = PartitionedBloom.size_for(len(keys), cfg)
     bloom = PartitionedBloom(cfg, m)
     df = spark.createDataFrame([(int(k),) for k in keys], "url_hash bigint")
-    bloom.add_filter_rows(build_filter_deltas(df, cfg, m))
+    bloom.add_filter_rows(_build(df, cfg, m))
     probes = np.concatenate([keys[:500], _keys(500, 6)])
     bc = spark.sparkContext.broadcast(bloom_payload(bloom))
     try:
@@ -70,31 +75,32 @@ def test_probe_udf_matches_driver_probe(spark):
     assert (pdf["maybe_seen"].to_numpy() == want).all()
 
 
-def _or_merged(rows):
-    """pid → OR of that pid's blobs (a multi-row build's consumer form)."""
-    out = {}
-    for pid, blob in rows:
-        arr = np.frombuffer(blob, dtype=np.uint8)
-        out[pid] = arr if pid not in out else out[pid] | arr
-    return {pid: arr.tobytes() for pid, arr in out.items()}
-
-
 def test_driver_build_matches_distributed_build(spark):
     """The driver-local build (round deltas, resume rebuilds) and the
-    distributed build set the same bits: per-pid OR-merged blobs are
-    byte-equal, on negative hashes too, whatever the sub-split."""
+    distributed build set the same bits: one row per pid each, with
+    byte-equal blobs, on negative hashes too. The input has more Spark
+    partitions than pids and small Arrow batches, so every pid's keys
+    come from several input tasks and each build task streams several
+    batches through the kernel."""
     cfg = BloomConfig(partitions=8, bits_per_key=12, k=7)
     keys = np.concatenate([_keys(6000, 7), -np.abs(_keys(2000, 8)), [0, -1, 1]])
     assert (keys < 0).sum() > 2000
     m = PartitionedBloom.size_for(len(keys), cfg)
     driver = build_filter_rows_from_hashes(keys, cfg, m)
     assert len(driver) == len({pid for pid, _ in driver}) == cfg.partitions
-    df = spark.createDataFrame([(int(k),) for k in keys], "url_hash bigint")
-    for subsplits in (1, 3):
-        dist = build_filter_deltas(df, cfg, m, subsplits=subsplits)
-        if subsplits > 1:
-            assert len(dist) > cfg.partitions  # several blobs per pid
-        assert _or_merged(dist) == _or_merged(driver), subsplits
+    df = spark.createDataFrame([(int(k),) for k in keys], "url_hash bigint").repartition(
+        3 * cfg.partitions
+    )
+    assert df.rdd.getNumPartitions() > cfg.partitions
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "128")  # ~1,000 keys per pid: 8+ batches a task
+    try:
+        dist = _build(df, cfg, m)
+    finally:
+        spark.conf.set(conf, old)
+    assert len(dist) == len({pid for pid, _ in dist}) == cfg.partitions
+    assert dict(dist) == dict(driver)
 
 
 def test_partitions_for_bounds_each_filter():

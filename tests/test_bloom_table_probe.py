@@ -11,7 +11,6 @@ from nightcrawlercmd_spark.operators.bloomseen import (
     PartitionedBloom,
     bloom_probe_cogroup,
     build_filter_delta_df,
-    build_filter_deltas,
     or_merge_filters_df,
 )
 from nightcrawlercmd_spark.sources.corpus import WorldConfig
@@ -37,8 +36,9 @@ def test_cogroup_probe_matches_driver_probe(spark):
     deltas = []
     for chunk in (a, b):
         df = spark.createDataFrame([(int(x),) for x in chunk], "url_hash bigint")
-        bloom.add_filter_rows(build_filter_deltas(df, cfg, m))
-        deltas.append(build_filter_delta_df(df, cfg, m, subsplits=3))
+        delta = build_filter_delta_df(df, cfg, m)
+        bloom.add_filter_rows((r["pid"], r["filter"]) for r in delta.collect())
+        deltas.append(delta)
     filters = deltas[0].unionByName(deltas[1])
     probes = np.concatenate([a[:500], _keys(500, 13)])
     cand = spark.createDataFrame([(int(x),) for x in probes], "url_hash bigint")

@@ -1,12 +1,14 @@
-"""Driver-side plan building: the ANN vector literals and the simhash /
-MinHash expression lists are built in one JVM call each (``F.expr``
-strings), and ``round6`` passes its constants as
+"""Driver-side plan building: the ANN vector literals, the IVF
+nearest-centroid expression and the simhash / MinHash expression lists
+are built in one JVM call each (``F.expr`` strings), and ``round6``
+passes its constants as
 Python floats instead of ``F.lit`` columns. Each must give exactly the
 rows of its per-element Column-API form, kept here as the reference,
 on sf0.001."""
 
 import re
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,9 +72,38 @@ def _ref_bands(sig, n_hashes=8, band_size=2):
     )
 
 
+def _ref_nearest_cell(cents):
+    import math
+
+    v, vn = F.col("v"), F.col("vn")
+    return F.array_max(
+        F.array(
+            *[
+                F.struct(
+                    F.coalesce(
+                        F.when(
+                            (vn > 0)
+                            & (F.lit(math.sqrt(sum(x * x for x in c))) > 0),
+                            round6(
+                                ANN._dot(v, F.lit(np.asarray(c, dtype=np.float64)))
+                                / (vn * F.lit(math.sqrt(sum(x * x for x in c))))
+                            ),
+                        ),
+                        F.lit(-2.0),
+                    ).alias("csim"),
+                    F.lit(-cid).alias("ncid"),
+                )
+                for cid, c in cents
+            ]
+        )
+    )
+
+
 def _optimized_plan(df):
-    """The optimized logical plan without expression ids."""
-    return re.sub(r"#\d+", "", df._jdf.queryExecution().optimizedPlan().toString())
+    """The optimized logical plan without expression ids, and with the
+    Column API's lambda variable numbering (``x_12``) dropped."""
+    plan = re.sub(r"#\d+", "", df._jdf.queryExecution().optimizedPlan().toString())
+    return re.sub(r"(lambda [a-z]+)_\d+", r"\1", plan)
 
 
 def test_round6_matches_lit_form(spark):
@@ -131,6 +162,24 @@ def test_ann_vector_literal_plan_matches_numpy_literal(spark):
     assert _optimized_plan(got) == _optimized_plan(want)
     with pytest.raises(ValueError):
         ANN._vec([1.0, float("nan")])
+
+
+def test_ivf_nearest_cell_plan_matches_column_form(spark):
+    """The IVF cell assignment parsed from one SQL string folds to the
+    optimized plan and rows of its per-centroid Column-API form, a
+    zero-norm centroid included."""
+    from nightcrawlercmd_spark.plans.queries import _emb_head_rows
+
+    cents = sorted(_emb_head_rows(SF, 8).items())
+    cents.append((8, [0.0] * len(cents[0][1])))
+    rows = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    ).withColumn("vn", ANN._norm(F.col("v")))
+    got = rows.select("vec_id", ANN._nearest_cell(cents).alias("best"))
+    want = rows.select("vec_id", _ref_nearest_cell(cents).alias("best"))
+    assert got.schema == want.schema
+    assert _optimized_plan(got) == _optimized_plan(want)
+    assert _rows(got) == _rows(want)
 
 
 @pytest.mark.parametrize(

@@ -57,13 +57,13 @@ def test_resume_across_compaction_boundary(spark, tmp_path):
     assert a == b
 
 
-def test_bucket_pruned_seen_probe_is_exact(spark, tmp_path, monkeypatch):
-    """Force the partition-pruned exact probe on from round 1
-    (seen_prune_min_total=0, 8 sbuckets, compaction every 2 rounds):
-    the crawl log and seen set must still match the sequential oracle
-    exactly — pruning may only skip partitions that cannot contain a
-    suspect, never change the answer — and the compacted base must be
-    laid out as sbucket= partition dirs."""
+def test_inverted_seen_probe_crawl_is_exact(spark, tmp_path, monkeypatch):
+    """Count the suspects from round 1 on (seen_prune_min_total=0, 8
+    sbuckets, compaction every 2 rounds), so the exact probe runs
+    broadcast-inverted against the folded bases and deltas: the crawl
+    log and seen set must still match the sequential oracle exactly,
+    and the compacted base must be laid out as sbucket= partition
+    dirs."""
     import os
 
     monkeypatch.setattr(engine, "SEEN_BUCKETS", 8)
@@ -72,7 +72,8 @@ def test_bucket_pruned_seen_probe_is_exact(spark, tmp_path, monkeypatch):
         EngineConfig(state_dir=str(tmp_path / "p"), world=WORLD, max_rounds=9,
                      fetch_tasks=4, compact_seen_every=2, seen_prune_min_total=0),
     )
-    eng.run()
+    stats = eng.run()
+    assert all(rt["seen_probe_inverted"] for rt in stats["round_times"])
     sim = simulate(WORLD, max_rounds=9, default_budget=4)
     got_log = [
         (r["round"], r["seq"], r["canon_url"]) for r in eng.crawl_log().collect()
@@ -83,14 +84,15 @@ def test_bucket_pruned_seen_probe_is_exact(spark, tmp_path, monkeypatch):
     base_dir = os.path.join(eng.store.root, "seen_base", f"round={base_round}")
     parts = [p for p in os.listdir(base_dir) if p.startswith("sbucket=")]
     assert parts, "compacted seen base must be sbucket-partitioned"
-    # and the pruning reaches the SCAN: with the incremental manifest
-    # layout the bucket filter is PATH-level — only the filtered
-    # buckets' sbucket= leaf dirs are ever handed to the reader (other
-    # dirs aren't even listed, stronger than a PartitionFilter) — so
-    # every base file backing the plan lives under sbucket=1 or =3
-    pruned = eng._read_seen(eng.store.last_round(), bucket_filter=[1, 3])
-    base_files = [f for f in pruned.inputFiles() if "/seen_base/" in f]
-    assert base_files, "pruned read must still scan base dirs"
+    # the seen fold's bucket-restricted read reaches the SCAN: every
+    # base file backing its parts lives under sbucket=1 or =3
+    restricted = eng._read_seen_parts(
+        eng.store.last_round(), engine.SEEN_COLS, buckets=[1, 3]
+    )
+    base_files = [
+        f for part in restricted for f in part.inputFiles() if "/seen_base/" in f
+    ]
+    assert base_files, "restricted read must still scan base dirs"
     assert all(
         "/sbucket=1/" in f or "/sbucket=3/" in f for f in base_files
     ), base_files
