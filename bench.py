@@ -382,11 +382,6 @@ def frontier_growth(cpus: int) -> dict:
                 round_capacity=100,
                 fetch_tasks=max(8, cpus * 4),
                 pending_buckets=prune_buckets,
-                # count the suspects from round 1 on, so the exact seen
-                # probe picks its form each round — with suspect counts
-                # this small the broadcast-INVERTED one (seen scanned,
-                # never shuffled), recorded per round below
-                seen_prune_min_total=0,
                 expected_urls=1 << 15,
             )
             fstats = CrawlEngine(spark, fcfg).run()
@@ -396,7 +391,6 @@ def frontier_growth(cpus: int) -> dict:
                     "frontier_before": rt.get("pending_before"),
                     "pending_buckets_read": rt.get("pending_buckets_read"),
                     "prune_fallback": rt.get("prune_fallback"),
-                    "seen_probe_inverted": rt.get("seen_probe_inverted"),
                     "seconds": rt["seconds"],
                 }
                 for rt in fstats["round_times"]

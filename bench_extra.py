@@ -6,7 +6,7 @@ Per-query noop-sink isolation (guide §1.4) + formatted-plan capture
 before/after deltas are separable from session warmup noise. Each query
 run is split into plan build (the ``QUERIES[name](...)`` call, on the
 driver) and execute (the noop write), and reports the py4j round trips
-the build made.
+the build made, with py4j's object-release commands counted apart.
 
 Usage:
   python bench_extra.py queries [--reps N] [--plans DIR] [--queries a,b,c]
@@ -20,6 +20,7 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import sys
@@ -72,16 +73,21 @@ def warm(spark):
     )
 
 
-def count_round_trips() -> list[int]:
-    """Count every driver→JVM py4j command from now on; the returned
-    one-element list holds the running count."""
+def count_round_trips() -> dict[str, int]:
+    """Count every driver→JVM py4j command from now on. py4j's
+    object-release (memory-delete) commands go to ``releases``: its
+    finalizer thread sends one whenever Python drops a Java object, so
+    how many land inside a timed window follows the garbage collector.
+    Every other command goes to ``calls``."""
     from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 
-    count = [0]
+    release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    count = {"calls": 0, "releases": 0}
     send = ClientServerConnection.send_command
 
     def counted(self, command):
-        count[0] += 1
+        count["releases" if command.startswith(release) else "calls"] += 1
         return send(self, command)
 
     ClientServerConnection.send_command = counted
@@ -100,20 +106,28 @@ def run_queries(args) -> None:
     build: dict[str, list[float]] = {}
     execute: dict[str, list[float]] = {}
     trips: dict[str, int] = {}
+    releases: dict[str, int] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
         out[name], build[name], execute[name] = [], [], []
         for rep in range(args.reps):
-            t0, rt0 = time.time(), round_trips[0]
+            # drop the earlier reps' garbage before the build, so its
+            # Java objects are not released inside the timed window
+            gc.collect()
+            rt0 = dict(round_trips)
+            t0 = time.time()
             df = QUERIES[name](spark, SF_DIR)
-            t1, trips[name] = time.time(), round_trips[0] - rt0
+            t1 = time.time()
+            trips[name] = round_trips["calls"] - rt0["calls"]
+            releases[name] = round_trips["releases"] - rt0["releases"]
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
             out[name].append(round(t2 - t0, 3))
             build[name].append(round(t1 - t0, 3))
             execute[name].append(round(t2 - t1, 3))
         print(f"{name}: {out[name]} build {build[name]} execute {execute[name]} "
-              f"build_round_trips {trips[name]}", flush=True)
+              f"build_round_trips {trips[name]} build_releases {releases[name]}",
+              flush=True)
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             df = QUERIES[name](spark, SF_DIR)
@@ -127,6 +141,7 @@ def run_queries(args) -> None:
                       "build_min": {k: min(v) for k, v in build.items()},
                       "execute_min": {k: min(v) for k, v in execute.items()},
                       "build_round_trips": trips,
+                      "build_releases": releases,
                       "samples": out}))
     spark.stop()
 

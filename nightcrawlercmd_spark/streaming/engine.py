@@ -21,10 +21,13 @@ Scale design (10^10 frontier): pending is merge-on-read (Iceberg
 equality-delete / LSM analog) — pending(r) assembles from the last
 compacted ``pbucket = host_hash mod B`` base ∪ the seen deltas since ∖
 the fetched log since, all tables the rounds already write, so the
-per-round pending write is zero rows at any frontier size; a scheduled
-compaction (``pending_compact_every``) rewrites the assembled base to
-bound read amplification, with a bucket→round manifest + per-bucket
-fold watermarks in the commit marker. The seen set is append-only
+per-round pending write is zero rows at any frontier size. Round 0
+writes the seed frontier once, as seen delta 0, and starts pending with
+no base and every fold watermark at -1, as it starts seen. The
+``pending_b`` bases are a cache of seen ∖ pages that only a scheduled
+compaction (``pending_compact_every``) writes, to bound read
+amplification, with a bucket→round manifest + per-bucket fold
+watermarks in the commit marker. The seen set is append-only
 with partitioned bloom filters as pre-probe so each round's exact probe
 only carries bloom-positive candidates; beyond broadcast size the
 filters live in a co-partitioned ``seen_filters`` table (no driver
@@ -131,6 +134,13 @@ _BLOOM_BROADCAST_MAX_BYTES = 128 << 20
 # chain (seen_anti_join_parts), so the history side carries zero
 # Exchange in both regimes
 _SUSPECT_BROADCAST_MAX = 200_000
+# from this fetched_total on, each round counts its bloom-positive
+# suspects (one small job against the round-cached tagged set) and
+# runs the exact seen probe broadcast-inverted (seen_anti_join) when
+# they are at most _SUSPECT_BROADCAST_MAX; below it, and for larger
+# suspect sets, the storage-partitioned chain (seen_anti_join_parts)
+# runs. Only the probe form depends on it
+_SUSPECT_COUNT_MIN_FETCHED = 5_000_000
 # the pruned pending read starts from the maxp-ranked bucket prefix
 # holding ≥ this many × capacity candidate rows
 _PENDING_PRUNE_SLACK = 4.0
@@ -153,7 +163,6 @@ _SEEN_CARRY = ("seen_manifest", "seen_folded", "seen_bucket_rows", "seen_base_ro
 _ROUND_TIME_KEYS = (
     "fetched", "pending_before", "pending_rewritten", "seen_rewritten",
     "pending_buckets_read", "prune_fallback", "seen_probe_inverted",
-    "seen_probe_parts",
 )
 
 _PENDING_SCHEMA = [
@@ -229,13 +238,6 @@ class EngineConfig:
     # window to _COMPACT_MAX_LAG × the table's cadence
     # (pending_compact_every / compact_seen_every) rounds.
     compact_dirty_frac: float = 0.1
-    # from this fetched_total on, each round counts its bloom-positive
-    # suspects (one small job against the round-cached tagged set) and
-    # runs the exact seen probe broadcast-inverted (seen_anti_join)
-    # when they are at most _SUSPECT_BROADCAST_MAX; below it, and for
-    # larger suspect sets, the storage-partitioned chain
-    # (seen_anti_join_parts) runs. Only the probe form depends on it.
-    seen_prune_min_total: int = 5_000_000
     # state-table backend: "parquet" (this sandbox — Iceberg contract
     # emulated on files, tableio.py) or "iceberg" (real catalog,
     # tableio_iceberg.py — bucket(N,key) transform + MERGE INTO;
@@ -559,45 +561,35 @@ class CrawlEngine:
                 .withColumn("parent_url_hash", F.lit(None).cast("bigint"))
             )
             pend = _with_salt_cols(pend, cfg.n_salts).select(*PENDING_COLS)
-        with phase("write_pending"):
-            written = self.store.write_bucketed(
-                self._with_pbucket(pend).repartition(cfg.fetch_tasks, "pbucket", "salt"),
-                "pending_b",
-                0,
-            )
-            manifest = {b: 0 for b in written}
-        # seen delta shares the pending shape (+first_round) across all
-        # rounds; the pending count is observed during this write — no
-        # dedicated count job or second manifest scan at init (the same
-        # zero-extra-jobs pattern _run_round uses)
+        # the seed frontier is written once, as seen delta 0: pending(0)
+        # is that delta (no compacted base yet, every watermark at -1)
         with phase("write_seen"):
-            obs0 = Observation("seen0")
-            seen0 = self._read_pending_manifest(manifest).withColumn(
-                "first_round", F.lit(0)
-            )
-            self.store.append(
-                seen0.observe(obs0, F.count(F.lit(1)).alias("rows")), "seen", 0
-            )
-            n = int(obs0.get.get("rows") or 0)
+            n = self._append_seen(pend, 0)
         with phase("bloom_delta"):
             self._extend_bloom(0, n)
         # per-bucket priority/count bounds for the pruned pending read
-        # (one column-pruned agg over the just-written seed buckets).
-        # Bounds are only consumed by capacitated rounds; an
-        # uncapacitated crawl (no round_capacity / max_pages) skips the
-        # init agg — a later capacitated invocation bootstraps them via
-        # _bucket_stats
+        # (one column-pruned agg over seen delta 0, as the per-round
+        # upkeep aggregates each later delta). Bounds are only consumed
+        # by capacitated rounds; an uncapacitated crawl (no
+        # round_capacity / max_pages) skips the init agg — a later
+        # capacitated invocation bootstraps them via _bucket_stats
         stats = None
         with phase("prune_stats"):
             if cfg.round_capacity is not None or cfg.max_pages is not None:
-                stats = self._bucket_stats(self._read_pending_manifest(manifest))
+                stats = self._bucket_stats(self.store.read_snapshot(self.spark, "seen", 0))
         self.store.commit(
             0,
             {
                 "fetched_total": 0,
                 "pending": n,
-                "pending_manifest": manifest,
-                "pending_folded": {b: 0 for b in range(cfg.pending_buckets)},
+                # pending and seen both start with no base dirs and
+                # every bucket's watermark at -1 (all deltas, round 0
+                # included, are unfolded); base sizes start unknown ({}
+                # → every dirty bucket folds at the first compaction,
+                # which populates them)
+                "pending_manifest": {},
+                "pending_folded": {b: -1 for b in range(cfg.pending_buckets)},
+                "pending_bucket_rows": {},
                 **(
                     {
                         "pending_bucket_maxp": stats[0],
@@ -606,12 +598,6 @@ class CrawlEngine:
                     if stats is not None
                     else {}
                 ),
-                # base sizes start unknown ({} → every dirty bucket
-                # folds at the first compaction, which populates them)
-                "pending_bucket_rows": {},
-                # incremental seen layout from round 0: no base dirs
-                # yet, every bucket's watermark at -1 (all deltas,
-                # round 0 included, are unfolded)
                 "seen_manifest": {},
                 "seen_folded": {b: -1 for b in range(SEEN_BUCKETS)},
                 "seen_bucket_rows": {},
@@ -629,12 +615,6 @@ class CrawlEngine:
             "pbucket",
             F.pmod(F.col("host_hash"), F.lit(self._layout().pending_buckets)).cast("int"),
         )
-
-    def _read_pending_manifest(self, manifest: dict[int, int]) -> DataFrame:
-        df = self.store.read_buckets(self.spark, "pending_b", manifest)
-        if df is None:
-            return _local_df(self.spark, _PENDING_SCHEMA)
-        return df.select(*PENDING_COLS)
 
     @staticmethod
     def _state_of(meta: dict, table: str) -> tuple[dict, dict, dict]:
@@ -658,7 +638,11 @@ class CrawlEngine:
         bucket's seen deltas in (folded[b], upto_round] ∖ fetched log.
         Uses only tables the rounds already wrote — zero extra write
         per round (Iceberg equality-delete analog; VERDICT r1 item 3).
-        With incremental compaction the watermark is per-bucket: adds
+        Until a bucket's first compaction it has no base and watermark
+        -1, so its pending is its seen deltas from round 0 (the seeds)
+        on ∖ its fetched pages; ``manifest={}`` with every watermark at
+        -1 derives pending from scratch, which the compacted bases
+        only cache. The watermark is per-bucket: adds
         are filtered by a broadcast (pbucket, folded) dimension so a
         delta already folded into one bucket's base is never re-added,
         while a lagging bucket still sees its older deltas. Removals
@@ -670,13 +654,15 @@ class CrawlEngine:
         if buckets is not None:
             manifest = {b: v for b, v in manifest.items() if b in buckets}
             folded = {b: v for b, v in folded.items() if b in buckets}
-        df = self._read_pending_manifest(manifest)
+        base = self.store.read_buckets(self.spark, "pending_b", manifest)
         add = self._unfolded_deltas(
             ("seen",), PENDING_COLS, folded, upto_round,
             self._with_pbucket, "pbucket", buckets,
         )
-        if add is not None:
-            df = df.unionByName(add.select(*PENDING_COLS))
+        parts = [p.select(*PENDING_COLS) for p in (base, add) if p is not None]
+        if not parts:
+            return _local_df(self.spark, _PENDING_SCHEMA)
+        df = _union(parts)
         lo = min(folded.values(), default=upto_round)
         removals = [
             self.store.read_snapshot(self.spark, "pages", j).select(
@@ -693,8 +679,8 @@ class CrawlEngine:
                 )
             # (hash, canon) key: a 64-bit collision must not evict a
             # distinct never-fetched pending row. The join moves its keys
-            # first; the select restores the column order, so a
-            # compaction writes pending_b in its round-0 schema
+            # first; the select restores the column order, so every
+            # compaction writes pending_b in one schema
             df = df.join(
                 rem.select("url_hash", "canon_url"),
                 ["url_hash", "canon_url"],
@@ -1172,7 +1158,6 @@ class CrawlEngine:
                     and float(a["mp"]) > thresh
                 ):
                     info["buckets_read"] = len(prefix)
-                    info["prune_attempts"] = attempts
                     return cand, True, stats, info
                 cand.unpersist()
                 m = min(len(order_b), max(m * 4, 1))
@@ -1188,7 +1173,7 @@ class CrawlEngine:
         pre-probe + exact probe of the bloom positives) and append them
         as the seen delta — which doubles as the round's pending adds.
         Returns (new rows, whether the exact probe ran inverted)."""
-        cfg, store = self.cfg, self.store
+        cfg = self.cfg
         link_src = pages
         if cfg.no_new_links:
             # reference no-new-links mode: page hrefs are NOT enqueued,
@@ -1218,7 +1203,7 @@ class CrawlEngine:
         # stays hash-keyed (a colliding new URL just becomes a suspect
         # and resolves in the exact probe).
         small_suspects = (
-            fetched_total >= cfg.seen_prune_min_total
+            fetched_total >= _SUSPECT_COUNT_MIN_FETCHED
             and 0 < raw_suspects.count() <= _SUSPECT_BROADCAST_MAX
         )
         if small_suspects:
@@ -1226,22 +1211,26 @@ class CrawlEngine:
         else:
             parts = self._read_seen_parts(r - 1, _SEEN_KEY)
             suspects = seen_anti_join_parts(raw_suspects, parts)
-        new = fresh.unionByName(suspects)
-        new = _with_salt_cols(new, cfg.n_salts).select(*PENDING_COLS)
-        # the seen delta carries the full pending shape (lineage incl.) so
-        # the next-round pending rows are a column-pruned re-read, not a
-        # recompute; first_round == discovered_round here. The delta size
-        # is observed during the write — no extra count job per round.
-        sobs = Observation(f"seen_{r}")
-        store.append(
-            new.withColumn("first_round", F.lit(r)).observe(
-                sobs, F.count(F.lit(1)).alias("rows")
+        new = _with_salt_cols(fresh.unionByName(suspects), cfg.n_salts)
+        n_new = self._append_seen(new.select(*PENDING_COLS), r)
+        tagged.unpersist()
+        return n_new, small_suspects
+
+    def _append_seen(self, df: DataFrame, r: int) -> int:
+        """Append the pending-shaped ``df`` as round r's seen delta
+        (``first_round`` = r) and return its row count, observed during
+        the write — no extra count job. The delta carries the full
+        pending shape (lineage incl.), so pending's adds are a
+        column-pruned re-read of it, not a recompute."""
+        obs = Observation(f"seen_{r}")
+        self.store.append(
+            df.withColumn("first_round", F.lit(r)).observe(
+                obs, F.count(F.lit(1)).alias("rows")
             ),
             "seen",
             r,
         )
-        tagged.unpersist()
-        return int(sobs.get.get("rows") or 0), small_suspects
+        return int(obs.get.get("rows") or 0)
 
     def _prune_stats_upkeep(
         self,
@@ -1424,11 +1413,10 @@ class CrawlEngine:
             "pending_buckets_read": prune_info["buckets_read"],
             "prune_fallback": prune_info["prune_fallback"],
             # whether the exact seen probe ran as the shuffle-free
-            # broadcast-inverted join this round (small suspect set)
+            # broadcast-inverted join this round (small suspect set;
+            # otherwise the zero-history-Exchange storage-partitioned
+            # chain ran)
             "seen_probe_inverted": small_suspects,
-            # large-suspect regime ran the zero-history-Exchange
-            # storage-partitioned chain (VERDICT r4 item 1)
-            "seen_probe_parts": not small_suspects,
             "stop": n_pending == 0,
         }
 
@@ -1560,10 +1548,12 @@ class CrawlEngine:
         return self._read_seen(self.store.last_round() or 0)
 
     def lineage(self) -> DataFrame:
-        """Per-partition lineage (north_rule): for every pending bucket,
-        the round whose write produced its current on-disk state — the
+        """Per-partition lineage (north_rule): for every pending bucket
+        with a compacted base, the round whose compaction wrote it — the
         bucket-level provenance the merge-on-read reader resolves
-        against. Rows: (pbucket, written_round, as_of_round)."""
+        against. A bucket has a row only once a compaction has written
+        its base; before that its pending is read from the seen deltas
+        alone. Rows: (pbucket, written_round, as_of_round)."""
         last = self.store.last_round() or 0
         meta = self.store.meta(last)
         manifest = self._state_of(meta, "pending")[0]

@@ -1,5 +1,5 @@
 """Kitchen-sink integration: every engine feature enabled at once —
-co-partitioned bloom TABLE probe, bucket-PRUNED exact seen probe
+co-partitioned bloom TABLE probe, broadcast-inverted exact seen probe
 (forced on), seen+filter+pending compaction mid-crawl, follow /
 dont-follow filters, round capacity — still bit-exact against the
 sequential oracle. Features are individually tested elsewhere; this
@@ -19,6 +19,8 @@ def test_all_features_crawl_matches_oracle(spark, tmp_path, monkeypatch):
     # co-partitioned filter-table probe: round 0 pins it when the
     # filters exceed the broadcast budget
     monkeypatch.setattr(engine, "_BLOOM_BROADCAST_MAX_BYTES", 0)
+    # count the suspects from round 1 on (inverted exact probe)
+    monkeypatch.setattr(engine, "_SUSPECT_COUNT_MIN_FETCHED", 0)
     monkeypatch.setattr(engine, "SEEN_BUCKETS", 8)
     cfg = EngineConfig(
         state_dir=str(tmp_path / "all"),
@@ -27,7 +29,6 @@ def test_all_features_crawl_matches_oracle(spark, tmp_path, monkeypatch):
         round_capacity=40,
         fetch_tasks=8,
         n_salts=4,
-        seen_prune_min_total=0,      # bucket-pruned exact probe from round 1
         compact_seen_every=2,        # seen + filter compaction mid-crawl
         pending_buckets=16,
         pending_compact_every=3,     # pending compaction on a different cadence

@@ -46,6 +46,13 @@ def test_pending_merge_on_read_writes_are_o_delta(
     store = eng.store
     rounds = store.committed_rounds()
     assert len(rounds) >= 4
+    # round 0 writes the seeds once, as seen delta 0: no pending base,
+    # every pending watermark at -1 (only compactions write pending_b)
+    assert not os.path.isdir(os.path.join(store.root, "pending_b", "round=0"))
+    meta0 = store.meta(0)
+    assert meta0["pending_manifest"] == {}
+    assert set(meta0["pending_folded"].values()) == {-1}
+    assert len(meta0["pending_folded"]) == 32
 
     saw_zero_write = saw_compaction = False
     for r in rounds:

@@ -58,7 +58,7 @@ def test_resume_across_compaction_boundary(spark, tmp_path):
 
 
 def test_inverted_seen_probe_crawl_is_exact(spark, tmp_path, monkeypatch):
-    """Count the suspects from round 1 on (seen_prune_min_total=0, 8
+    """Count the suspects from round 1 on (_SUSPECT_COUNT_MIN_FETCHED=0, 8
     sbuckets, compaction every 2 rounds), so the exact probe runs
     broadcast-inverted against the folded bases and deltas: the crawl
     log and seen set must still match the sequential oracle exactly,
@@ -66,11 +66,12 @@ def test_inverted_seen_probe_crawl_is_exact(spark, tmp_path, monkeypatch):
     dirs."""
     import os
 
+    monkeypatch.setattr(engine, "_SUSPECT_COUNT_MIN_FETCHED", 0)
     monkeypatch.setattr(engine, "SEEN_BUCKETS", 8)
     eng = CrawlEngine(
         spark,
         EngineConfig(state_dir=str(tmp_path / "p"), world=WORLD, max_rounds=9,
-                     fetch_tasks=4, compact_seen_every=2, seen_prune_min_total=0),
+                     fetch_tasks=4, compact_seen_every=2),
     )
     stats = eng.run()
     assert all(rt["seen_probe_inverted"] for rt in stats["round_times"])
@@ -109,9 +110,10 @@ def test_resume_with_different_seen_buckets_is_exact(spark, tmp_path, monkeypatc
     def cfg(rounds):
         return EngineConfig(
             state_dir=str(tmp_path / "m"), world=WORLD, max_rounds=rounds,
-            fetch_tasks=4, compact_seen_every=2, seen_prune_min_total=0,
+            fetch_tasks=4, compact_seen_every=2,
         )
 
+    monkeypatch.setattr(engine, "_SUSPECT_COUNT_MIN_FETCHED", 0)
     monkeypatch.setattr(engine, "SEEN_BUCKETS", 8)
     first = CrawlEngine(spark, cfg(4))
     first.run()  # compactions at 2 and 4 with modulus 8
@@ -147,13 +149,13 @@ def test_incremental_seen_compaction_mixed_manifest(spark, tmp_path, monkeypatch
         p_same=0.97, p_cross=0.97, p_offsite=0.97,
         seeds_lo=1, seeds_hi=2, budget_lo=6, budget_hi=8, tag="t-seeninc",
     )
+    monkeypatch.setattr(engine, "_SUSPECT_COUNT_MIN_FETCHED", 0)
     monkeypatch.setattr(engine, "SEEN_BUCKETS", 32)
     eng = CrawlEngine(
         spark,
         EngineConfig(
             state_dir=str(tmp_path / "si"), world=world, max_rounds=6,
             round_capacity=12, fetch_tasks=8, compact_seen_every=2,
-            seen_prune_min_total=0,
             # sbuckets are url_hash-uniform, so in a young crawl every
             # bucket crosses any small dirty threshold together; a high
             # frac isolates the cohort staggering (≈1/max_lag of the
@@ -175,17 +177,18 @@ def test_incremental_seen_compaction_mixed_manifest(spark, tmp_path, monkeypatch
 
 def test_large_suspect_probe_storage_partitioned_exact(spark, tmp_path, monkeypatch):
     """Force the LARGE-suspect regime (_SUSPECT_BROADCAST_MAX=0 disables
-    the broadcast-inverted form; seen_prune_min_total=0 forces the
-    pruned probe from round 1): once the first fold writes a keyed base,
-    the exact probe must run the storage-partitioned chain
-    (seen_probe_parts) — and the crawl log + seen set must still match
+    the broadcast-inverted form; _SUSPECT_COUNT_MIN_FETCHED=0 counts the
+    suspects from round 1): once the first fold writes a keyed base,
+    the exact probe must run the storage-partitioned chain (every round
+    not seen_probe_inverted) — and the crawl log + seen set must still match
     the sequential oracle exactly."""
     monkeypatch.setattr(engine, "_SUSPECT_BROADCAST_MAX", 0)
+    monkeypatch.setattr(engine, "_SUSPECT_COUNT_MIN_FETCHED", 0)
     monkeypatch.setattr(engine, "SEEN_BUCKETS", 8)
     eng = CrawlEngine(
         spark,
         EngineConfig(state_dir=str(tmp_path / "lp"), world=WORLD, max_rounds=9,
-                     fetch_tasks=4, compact_seen_every=2, seen_prune_min_total=0),
+                     fetch_tasks=4, compact_seen_every=2),
     )
     stats = eng.run()
     sim = simulate(WORLD, max_rounds=9, default_budget=4)
@@ -196,8 +199,8 @@ def test_large_suspect_probe_storage_partitioned_exact(spark, tmp_path, monkeypa
     assert {r["canon_url"] for r in eng.seen().collect()} == set(sim.seen)
     # the chain actually ran after the first fold, and the fold round
     # recorded its layout so resume re-registers the same bucket spec
-    assert any(rt.get("seen_probe_parts") for rt in stats["round_times"])
-    assert not any(rt.get("seen_probe_inverted") for rt in stats["round_times"])
+    assert stats["round_times"]
+    assert not any(rt["seen_probe_inverted"] for rt in stats["round_times"])
     base_round = eng.store.meta(eng.store.last_round())["seen_base_round"]
     layout = eng.store.meta(base_round)["seen_base_layout"]
     assert layout["key_buckets"] == SEEN_KEY_BUCKETS
